@@ -136,6 +136,14 @@ class CompiledTableSpec:
         value, msg)`` — matching the reference's error-object contract
         (internal/SchemaUtil.scala:28-39).
 
+        Schema: the key columns (cast to string unless ``cast_keys`` is
+        False; either way they keep their own nullability), then the eight :data:`VIOLATION_SCHEMA` fields, all
+        nullable strings. The report fields are nullable even where the
+        check always fills them: ``explode_outer`` below makes the
+        exploded struct nullable. A writer of persisted reports sees the
+        same schema whether or not the spec compiled any checks
+        (``tests/test_plan_quality.py`` pins it).
+
         ``cast_keys=False`` keeps key columns' native types (needed when a
         key is an event-time column whose watermark metadata must survive
         for a downstream streaming aggregation)."""

@@ -27,8 +27,10 @@ constructs ($ref, pathological multipleOf) raise
 
 from __future__ import annotations
 
+import operator
 import re
 from decimal import Decimal
+from functools import cached_property
 from typing import Any
 
 from pyspark.sql import Column
@@ -67,37 +69,137 @@ def _vtype(v: Column) -> Column:
     return F.schema_of_variant(v)
 
 
-def _is_string(v: Column) -> Column:
-    return _vtype(v) == "STRING"
+class _Node:
+    """The shared sub-expressions of one schema node over the variant
+    ``v``, each built on first use and then reused.
 
+    Every ``F.*`` call or Column operator costs about ten py4j round trips
+    on the driver (PySpark's call-site origin tracking looks up the active
+    session and sets and clears the origin on each), so a node that
+    rebuilt its type tests, stored scale and ``try_variant_get`` views for
+    every keyword, bound and enum literal spent most of the compile there.
+    A reused Column puts the identical expression at every use site, so
+    the optimized plan is the same as rebuilding it each time.
 
-def _is_bool(v: Column) -> Column:
-    return _vtype(v) == "BOOLEAN"
+    ``b`` is the node's bound slot struct (see :func:`variant_valid`);
+    without one (literal recursion in ``_json_eq_deep``, array elements in
+    ``_canon_elem``) the type string is read from ``v`` directly."""
 
+    def __init__(self, v: Column, b: Column | None = None):
+        self.v = v
+        self.b = b
+        self._memo: dict = {}
 
-def _is_numberv(v: Column) -> Column:
-    t = _vtype(v)
-    return t.isin("BIGINT", "DOUBLE", "FLOAT") | t.startswith("DECIMAL")
+    def _once(self, key: Any, build) -> Any:
+        if key not in self._memo:
+            self._memo[key] = build()
+        return self._memo[key]
 
+    def slot(self, name: str) -> Column:
+        """A bound slot (``t``, ``n``, ``nd``, ``s``, ``a``, ``k``, ``m``)."""
+        return self._once(("slot", name), lambda: self.b[name])
 
-def _is_array(v: Column) -> Column:
-    return _vtype(v).startswith("ARRAY")
+    def get(self, dtype: str) -> Column:
+        """``try_variant_get(v, '$', dtype)``."""
+        return self._once(("get", dtype),
+                          lambda: F.try_variant_get(self.v, "$", dtype))
 
+    def child(self, key: str) -> Column:
+        """The value of property ``key`` (SQL NULL when absent)."""
+        return self._once(("child", key), lambda: _get(self.v, key))
 
-def _is_object(v: Column) -> Column:
-    return _vtype(v).startswith("OBJECT") | _vtype(v).startswith("STRUCT")
+    def t_is(self, name: str) -> Column:
+        return self._once(("t==", name), lambda: self.t == name)
 
+    def t_starts(self, prefix: str) -> Column:
+        return self._once(("t^", prefix), lambda: self.t.startswith(prefix))
 
-def _num(v: Column) -> Column:
-    return F.try_variant_get(v, "$", _DEC)
+    @cached_property
+    def true(self) -> Column:
+        return F.lit(True)
 
+    @cached_property
+    def false(self) -> Column:
+        return F.lit(False)
 
-def _str(v: Column) -> Column:
-    return F.try_variant_get(v, "$", "string")
+    @cached_property
+    def t(self) -> Column:
+        return self.slot("t") if self.b is not None else _vtype(self.v)
 
+    @cached_property
+    def present(self) -> Column:
+        return self.v.isNotNull()
 
-def _arr(v: Column) -> Column:
-    return F.try_variant_get(v, "$", "array<variant>")
+    @cached_property
+    def is_num(self) -> Column:
+        return self.t.isin("BIGINT", "DOUBLE", "FLOAT") \
+            | self.t_starts("DECIMAL")
+
+    @cached_property
+    def exact(self) -> Column:
+        """Stored exactly (BIGINT / DECIMAL), not as a double."""
+        return self.t_is("BIGINT") | self.t_starts("DECIMAL")
+
+    @cached_property
+    def is_obj(self) -> Column:
+        return self.t_starts("OBJECT") | self.t_starts("STRUCT")
+
+    @cached_property
+    def is_null(self) -> Column:
+        return F.is_variant_null(self.v)
+
+    @cached_property
+    def vscale(self) -> Column:
+        """The value's STORED decimal scale (:func:`_stored_scale`)."""
+        return _stored_scale(self.t)
+
+    def scale_is(self, op: str, k: int) -> Column:
+        """``vscale <op> k`` for ``op`` in ``<=``, ``>``, ``==``."""
+        cmp = {"<=": operator.le, ">": operator.gt, "==": operator.eq}[op]
+        return self._once(("vscale", op, k), lambda: cmp(self.vscale, k))
+
+    @cached_property
+    def n_nonnull(self) -> Column:
+        return self.slot("n").isNotNull()
+
+    @cached_property
+    def exact_in18(self) -> Column:
+        """Exact, and faithful in the bound decimal(38,18) slot ``n``."""
+        return self.exact & self.n_nonnull & self.scale_is("<=", 18)
+
+    @cached_property
+    def exact_fine(self) -> Column:
+        """Exact with a stored scale past 18: every decimal view rounds."""
+        return self.exact & self.scale_is(">", 18)
+
+    def exact_at(self, s: int) -> Column:
+        """Exact, and faithful in the ``decimal(38,s)`` view."""
+        return self._once(("exact_at", s), lambda: (
+            self.exact & self.scale_is("<=", s)
+            & self.get(f"decimal(38,{s})").isNotNull()))
+
+    @cached_property
+    def dec_text_key(self) -> tuple[Column, Column]:
+        """``(negative, key)`` for :func:`_dec_text_cmp`: the sign and the
+        ``lpad(int_part) || rpad(frac)`` decision key of the STRING
+        rendering."""
+        s = self.get("string")
+        mag = F.regexp_replace(s, "^-", "")
+        int_part = F.substring_index(mag, ".", 1)
+        frac = F.when(mag.contains("."), F.substring_index(mag, ".", -1)) \
+                .otherwise(F.lit(""))
+        return s.startswith("-"), F.concat(F.lpad(int_part, 39, "0"),
+                                           F.rpad(frac, 38, "0"))
+
+    @cached_property
+    def present_obj(self) -> Column:
+        return self.present & self.is_obj
+
+    @cached_property
+    def unbound(self) -> _Node:
+        """The same value read without the binding (type string from
+        ``v``): the root of ``_json_eq_deep``'s literal recursion."""
+        return _Node(self.v) if self.b is not None else self
 
 
 def _canon_num_text(t: Column) -> Column:
@@ -132,19 +234,18 @@ def _canon_elem(e: Column) -> Column:
       exact among doubles; the one residual is a double equal in value
       to an out-of-window exact decimal in the SAME array (kernel says
       duplicate, this canon keeps them distinct — documented tail)."""
-    t = _vtype(e)
-    exact_t = (t == "BIGINT") | t.startswith("DECIMAL")
-    dbl = F.try_variant_get(e, "$", "double")
-    d18 = _num(e)
+    n = _Node(e)
+    dbl = n.get("double")
+    d18 = n.get(_DEC)
     roundtrips = d18.isNotNull() & (d18.cast("double") == dbl)
-    num_canon = F.when(exact_t, _canon_num_text(_str(e))) \
+    num_canon = F.when(n.exact, _canon_num_text(n.get("string"))) \
                  .when(roundtrips, _canon_num_text(d18.cast("string"))) \
                  .otherwise(F.concat(F.lit("dbl:"), dbl.cast("string")))
-    return F.when(_is_numberv(e), F.concat(F.lit("n:"), num_canon)) \
+    return F.when(n.is_num, F.concat(F.lit("n:"), num_canon)) \
             .otherwise(F.coalesce(F.to_json(e), F.lit("null")))
 
 
-def _dec_text_cmp(v: Column, d: Decimal, op: str) -> Column:
+def _dec_text_cmp(n: _Node, d: Decimal, op: str) -> Column:
     """Exact comparison of an exact-stored variant number against a bound,
     through the variant's STRING rendering (always plain decimal text —
     probed on Spark 4.1). Decision key: ``lpad(int_part) || rpad(frac)``
@@ -154,14 +255,6 @@ def _dec_text_cmp(v: Column, d: Decimal, op: str) -> Column:
     0.99999999999999999999 fell to the double view and passed minimum 1).
     NULL string (shouldn't happen for exact types) → NULL, caller
     coalesces."""
-    s = F.try_variant_get(v, "$", "string")
-    neg = s.startswith("-")
-    mag = F.regexp_replace(s, "^-", "")
-    int_part = F.substring_index(mag, ".", 1)
-    frac = F.when(mag.contains("."), F.substring_index(mag, ".", -1)) \
-            .otherwise(F.lit(""))
-    key = F.concat(F.lpad(int_part, 39, "0"), F.rpad(frac, 38, "0"))
-
     dt = d.as_tuple()
     neg_d = dt.sign == 1
     mag_d = format(abs(d), "f")
@@ -176,6 +269,7 @@ def _dec_text_cmp(v: Column, d: Decimal, op: str) -> Column:
     # value; truncating its key makes "equal keys" mean |v| < |d|
     d_finer = len(fr_d) > 38
     key_d = F.lit(ip_d.zfill(39) + fr_d[:38].ljust(38, "0"))
+    neg, key = n.dec_text_key
 
     if neg_d:
         # equal truncated keys ⟹ |v| < |d| ⟹ v > d for negatives: the
@@ -213,9 +307,7 @@ def _stored_scale(t: Column) -> Column:
         F.lit(0))
 
 
-def _multiple_of_fail_variant(v: Column, mo: Any, t: Column,
-                              n18: Column | None = None,
-                              nd: Column | None = None) -> Column:
+def _multiple_of_fail_variant(n: _Node, mo: Any) -> Column:
     """Decimal-exact ``multipleOf`` with the columnar path's overflow tiers
     (reference semantics NumberValidators.scala:89-109).
 
@@ -274,21 +366,18 @@ def _multiple_of_fail_variant(v: Column, mo: Any, t: Column,
     if s_ > 18 or not (binary_mo_ or 1 <= M_ <= 2 ** 53):
         raise VariantUnsupported("pathological multipleOf (kernel fallback)")
 
-    exact = (t == "BIGINT") | t.startswith("DECIMAL")
-    # callers inside a node binding pass the ALREADY-BOUND decimal(38,18)
-    # and double views (b["n"] / b["nd"]) so the hot tiers read struct
-    # fields instead of re-running two variant extractions per row
-    # (interpreted trees get no CSE; guide §1.2) — values identical
-    nd18 = n18 if n18 is not None \
-        else F.try_variant_get(v, "$", "decimal(38,18)")
-    d6 = F.try_variant_get(v, "$", "decimal(38,6)")
-    d0 = F.try_variant_get(v, "$", "decimal(38,0)")
-    dbl = nd if nd is not None else F.try_variant_get(v, "$", "double")
+    exact = n.exact
+    # the hot tiers read the node's ALREADY-BOUND decimal(38,18) and
+    # double views (slots n / nd) instead of re-running two variant
+    # extractions per row (interpreted trees get no CSE; guide §1.2)
+    nd18 = n.slot("n")
+    d6 = n.get("decimal(38,6)")
+    d0 = n.get("decimal(38,0)")
+    dbl = n.slot("nd")
     # stored scale: extraction at a coarser scale ROUNDS, so each decimal
     # tier requires stored_scale <= extraction scale (fuzz-found r3: a
     # DECIMAL(22,1) with a .5 fraction slipped to the exact-binary double
     # path and "became" a multiple of 2)
-    vscale = _stored_scale(t)
     fail18 = ColumnCompiler._multiple_of_fail(nd18, T.DecimalType(38, 18), mo)
     fail6 = ColumnCompiler._multiple_of_fail(d6, T.DecimalType(38, 6), mo)
     fail0 = ColumnCompiler._multiple_of_fail(d0, T.DecimalType(38, 0), mo)
@@ -302,19 +391,20 @@ def _multiple_of_fail_variant(v: Column, mo: Any, t: Column,
     # above): such a value can NEVER be a multiple — k*mo has scale <=
     # scale(mo) (review find r3b: DECIMAL(20,20) fell to the double view)
     return F.coalesce(
-        F.when(exact & (vscale > 18), F.lit(True))
-         .when(exact & (vscale <= 18) & nd18.isNotNull(), fail18)
-         .when(exact & (vscale <= 6) & d6.isNotNull(), fail6)
-         .when(exact & (vscale == 0) & d0.isNotNull(), fail0)
+        F.when(n.exact_fine, n.true)
+         .when(exact & n.scale_is("<=", 18) & nd18.isNotNull(), fail18)
+         .when(n.exact_at(6), fail6)
+         .when(exact & n.scale_is("==", 0) & d0.isNotNull(), fail0)
          .otherwise(dbl_fail),
-        F.lit(True))
+        n.true)
 
 
-def _num_eq_variant(v: Column, c: Any, t: Column) -> Column:
+def _num_eq_variant(n: _Node, c: Any) -> Column:
     """JSON-equality of a variant number against a literal, tiered like
-    ``columns._num_eq_lit``: the old ``_num(v) == F.lit(c).cast(decimal(38,
-    12))`` CRASHED at plan time for literals outside that window (ANSI
-    decimal overflow on constant folding) and NULLed out-of-range values.
+    ``columns._num_eq_lit``: the old ``decimal view == F.lit(c).cast(
+    decimal(38,12))`` CRASHED at plan time for literals outside that
+    window (ANSI decimal overflow on constant folding) and NULLed
+    out-of-range values.
 
     Exact-stored variants (BIGINT/DECIMAL) compare decimal-exactly when the
     literal fits decimal(38,18) (or scale-0 decimal(38,0) for wide whole
@@ -327,43 +417,41 @@ def _num_eq_variant(v: Column, c: Any, t: Column) -> Column:
     scale = max(-d.as_tuple().exponent, 0)
     int_digits = _dec_precision(d) - scale
 
-    exact = (t == "BIGINT") | t.startswith("DECIMAL")
-    nd18 = F.try_variant_get(v, "$", "decimal(38,18)")
-    d0 = F.try_variant_get(v, "$", "decimal(38,0)")
-    dbl = F.try_variant_get(v, "$", "double")
-    # the value's STORED scale, parsed from schema_of_variant — extraction
-    # at a smaller scale ROUNDS (try_variant_get, HALF_UP), so every
-    # decimal-equality tier must require stored_scale ≤ extraction scale
-    # or a rounded near-miss would compare equal (0.54 == 0.5 at scale 1)
-    vscale = _stored_scale(t)  # BIGINT stores scale 0
-
+    # the value's STORED scale (n.vscale, parsed from schema_of_variant;
+    # BIGINT stores scale 0) — extraction at a smaller scale ROUNDS
+    # (try_variant_get, HALF_UP), so every decimal-equality tier must
+    # require stored_scale ≤ extraction scale or a rounded near-miss would
+    # compare equal (0.54 == 0.5 at scale 1)
+    false = n.false
     if scale <= 18 and int_digits <= 20:
-        exact_eq = F.coalesce((vscale <= 18) & (nd18 == F.lit(d)), F.lit(False))
+        exact_eq = F.coalesce(n.scale_is("<=", 18)
+                              & (n.get("decimal(38,18)") == F.lit(d)), false)
     elif scale == 0 and _dec_precision(d) <= 38:
-        exact_eq = F.coalesce((vscale == 0) & (d0 == F.lit(d)), F.lit(False))
+        exact_eq = F.coalesce(n.scale_is("==", 0)
+                              & (n.get("decimal(38,0)") == F.lit(d)), false)
     elif scale <= 38 and _dec_precision(d) <= 38:
         # wide (21-38 integer digits) or fine (scale 19-38) literals:
         # VARIANT stores up to 38 digits exactly — extract at the
         # literal's own scale; exact when the stored scale is no finer
         # (a scale-30 const was declared unequal to its own exactly-stored
         # value; fuzz-found r3)
-        ds = F.try_variant_get(v, "$", f"decimal(38,{scale})")
-        exact_eq = F.coalesce((vscale <= scale) & (ds == F.lit(d)),
-                              F.lit(False))
+        exact_eq = F.coalesce(n.scale_is("<=", scale)
+                              & (n.get(f"decimal(38,{scale})") == F.lit(d)),
+                              false)
     else:
         # >38-digit literal: no exactly-stored JSON number can equal it
-        exact_eq = F.lit(False)
+        exact_eq = false
 
     try:
         representable = as_decimal(float(d)) == d
     except (OverflowError, ValueError):
         representable = False
-    dbl_eq = F.coalesce(dbl == F.lit(float(d)), F.lit(False)) \
-        if representable else F.lit(False)
-    return F.coalesce(F.when(exact, exact_eq).otherwise(dbl_eq), F.lit(False))
+    dbl_eq = F.coalesce(n.get("double") == F.lit(float(d)), false) \
+        if representable else false
+    return F.coalesce(F.when(n.exact, exact_eq).otherwise(dbl_eq), false)
 
 
-def _json_eq_deep(v: Column, c: Any, depth: int = 0) -> Column:
+def _json_eq_deep(n: _Node, c: Any, depth: int = 0) -> Column:
     """Structural JSON equality of a variant against a LITERAL value,
     matching the kernel's deep equality (1.0 ≡ 1 numerically, 1 ≢ true,
     object key SETS equal, array order significant — jsonvalue.json_equal).
@@ -372,34 +460,29 @@ def _json_eq_deep(v: Column, c: Any, depth: int = 0) -> Column:
     coalesce makes them unequal. Never NULL (callers AND it directly)."""
     if depth > 32:
         raise VariantUnsupported("const/enum literal nesting too deep")
-    t = _vtype(v)
+    false = n.false
     if c is None:
-        return F.coalesce(F.is_variant_null(v), F.lit(False))
+        return F.coalesce(n.is_null, false)
     if isinstance(c, bool):
         return F.coalesce(
-            (t == "BOOLEAN") & (F.try_variant_get(v, "$", "boolean") == c),
-            F.lit(False))
+            n.t_is("BOOLEAN") & (n.get("boolean") == c), false)
     if is_number(c):
-        is_num = t.isin("BIGINT", "DOUBLE", "FLOAT") | t.startswith("DECIMAL")
-        return F.coalesce(is_num & _num_eq_variant(v, c, t), F.lit(False))
+        return F.coalesce(n.is_num & _num_eq_variant(n, c), false)
     if isinstance(c, str):
-        return F.coalesce(
-            (t == "STRING") & (F.try_variant_get(v, "$", "string") == c),
-            F.lit(False))
+        return F.coalesce(n.t_is("STRING") & (n.get("string") == c), false)
     if isinstance(c, list):
-        arr = F.try_variant_get(v, "$", "array<variant>")
-        cond = t.startswith("ARRAY") & (F.size(arr) == len(c))
+        arr = n.get("array<variant>")
+        cond = n.t_starts("ARRAY") & (F.size(arr) == len(c))
         for i, ci in enumerate(c):
-            cond = cond & _json_eq_deep(F.get(arr, i), ci, depth + 1)
-        return F.coalesce(cond, F.lit(False))
+            cond = cond & _json_eq_deep(_Node(F.get(arr, i)), ci, depth + 1)
+        return F.coalesce(cond, false)
     if isinstance(c, dict):
-        m = v.try_cast("map<string,variant>")
-        cond = (t.startswith("OBJECT") | t.startswith("STRUCT")) \
-            & (F.size(m) == len(c))
+        m = n.v.try_cast("map<string,variant>")
+        cond = n.is_obj & (F.size(m) == len(c))
         for k, cv in c.items():
-            cond = cond & _json_eq_deep(F.try_element_at(m, F.lit(k)), cv,
-                                        depth + 1)
-        return F.coalesce(cond, F.lit(False))
+            cond = cond & _json_eq_deep(
+                _Node(F.try_element_at(m, F.lit(k))), cv, depth + 1)
+        return F.coalesce(cond, false)
     raise VariantUnsupported(f"const/enum literal {type(c).__name__}")
 
 
@@ -441,7 +524,7 @@ def _propname_ok(k: Column, schema: Any) -> Column:
         ok = ok & (grapheme_length_col(k) <= mx)
     pat = schema.get("pattern")
     if isinstance(pat, str):
-        jp = _pattern_or_invalid(pat)
+        jp = _java_pattern(pat)
         # invalid pattern: every property NAME fails (kernel
         # str.invalid.pattern); no runtime rlike crash (review find r4)
         ok = ok & (F.lit(False) if jp is None else k.rlike(jp))
@@ -459,26 +542,6 @@ def _propname_ok(k: Column, schema: Any) -> Column:
         # under ANSI for non-numeric keys (review find r4)
         ok = ok & format_predicate(fmt, k)
     return ok
-
-
-def _pattern_or_invalid(pat: str) -> str | None:
-    """Java regex for the ``pattern`` KEYWORD: ``None`` when the kernel
-    emits str.invalid.pattern (pattern compiles in neither form — every
-    string value fails, interpreter.py:356-359); VariantUnsupported when
-    only the translated form is uncompilable (kernel semantics would come
-    from the raw pattern — fall back)."""
-    from sparkschema.spec.ecma_pattern import translate_ecma_checked
-
-    tp = translate_ecma_checked(pat, "python")
-    try:
-        re.compile(tp)
-    except re.error:
-        try:
-            re.compile(pat)
-        except re.error:
-            return None
-        raise VariantUnsupported(f"pattern {pat!r} untranslatable")
-    return _checked_java_form(pat)
 
 
 def _checked_java_form(pat: str) -> str:
@@ -511,12 +574,16 @@ def _checked_java_form(pat: str) -> str:
 
 
 def _java_pattern(pat: str) -> str | None:
-    """Java regex for an ECMA patternProperties pattern, mirroring the
-    kernel's skip rule (interpreter._compile_pattern): ``None`` when the
-    kernel would skip the pattern entirely (nothing compiles);
-    :class:`VariantUnsupported` when the kernel's semantics would come
-    from the RAW pattern (translated form uncompilable) — fall back to
-    the kernel rather than diverge on that edge."""
+    """Java regex for an ECMA pattern, gated like the kernel compiles it
+    (interpreter._compile_pattern).
+
+    ``None`` when the pattern compiles in neither form. The callers then
+    do what the kernel does: a ``pattern`` keyword fails every string
+    value (str.invalid.pattern, interpreter.py:356-359), a
+    ``patternProperties`` pattern is skipped. :class:`VariantUnsupported`
+    when only the translated form is uncompilable: the kernel's semantics
+    would come from the RAW pattern, so fall back to the kernel rather
+    than diverge on that edge."""
     from sparkschema.spec.ecma_pattern import translate_ecma_checked
 
     tp = translate_ecma_checked(pat, "python")
@@ -526,7 +593,7 @@ def _java_pattern(pat: str) -> str | None:
         try:
             re.compile(pat)
         except re.error:
-            return None  # the kernel skips this pattern too
+            return None
         raise VariantUnsupported(f"pattern {pat!r} untranslatable")
     return _checked_java_form(pat)
 
@@ -579,6 +646,34 @@ def _needs(schema: dict) -> dict:
     }
 
 
+def _bind(v: Column, needs: dict, body) -> Column:
+    """Evaluate ``body(node)`` with the slots ``needs`` asks for BOUND
+    through a 1-element-array HOF lambda, so each slot evaluates once per
+    row instead of once per keyword reference (interpreted expressions get
+    no CSE; the same lambda-binding trick as dedup.char_shingles). Only
+    the requested slots are materialized; ``t`` always is."""
+    fields = [_vtype(v).alias("t")]
+    if needs["n"]:
+        fields.append(F.try_variant_get(v, "$", _DEC).alias("n"))
+        fields.append(F.try_variant_get(v, "$", "double").alias("nd"))
+    if needs["s"]:
+        fields.append(F.try_variant_get(v, "$", "string").alias("s"))
+    if needs["a"]:
+        fields.append(F.try_variant_get(v, "$", "array<variant>").alias("a"))
+    if needs["k"]:
+        fields.append(_object_keys(v).alias("k"))
+    if needs["m"]:
+        fields.append(_entries(v).alias("m"))
+    return F.get(F.transform(F.array(F.struct(*fields)),
+                             lambda b: body(_Node(v, b))), 0)
+
+
+def _check_supported(schema: dict) -> None:
+    for kw in _UNSUPPORTED:
+        if kw in schema:
+            raise VariantUnsupported(kw)
+
+
 def variant_valid(v: Column, schema: Any, depth: int = 0) -> Column:
     """True iff the variant value at ``v`` satisfies ``schema``.
     SQL-NULL ``v`` (absent property) passes vacuously — ``required`` is the
@@ -586,10 +681,8 @@ def variant_valid(v: Column, schema: Any, depth: int = 0) -> Column:
 
     The node's shared sub-expressions — ``schema_of_variant``, the numeric
     / string / array extractions, ``json_object_keys(to_json(v))`` — are
-    BOUND through a 1-element-array HOF lambda so each evaluates once per
-    row instead of once per keyword reference (interpreted expressions get
-    no CSE; the same lambda-binding trick as dedup.char_shingles). Only
-    the slots this node's keywords actually read are materialized."""
+    bound once per row (:func:`_bind`); only the slots this node's
+    keywords actually read are materialized."""
     if depth > 32:
         raise VariantUnsupported("spec nesting too deep")
     if schema is True:
@@ -598,26 +691,8 @@ def variant_valid(v: Column, schema: Any, depth: int = 0) -> Column:
         return v.isNull()  # only absence "passes" a false schema vacuously
     if not isinstance(schema, dict):
         return F.lit(True)
-    for kw in _UNSUPPORTED:
-        if kw in schema:
-            raise VariantUnsupported(kw)
-
-    needs = _needs(schema)
-    fields = [_vtype(v).alias("t")]
-    if needs["n"]:
-        fields.append(_num(v).alias("n"))
-        fields.append(F.try_variant_get(v, "$", "double").alias("nd"))
-    if needs["s"]:
-        fields.append(_str(v).alias("s"))
-    if needs["a"]:
-        fields.append(_arr(v).alias("a"))
-    if needs["k"]:
-        fields.append(_object_keys(v).alias("k"))
-    if needs["m"]:
-        fields.append(_entries(v).alias("m"))
-    return F.get(F.transform(
-        F.array(F.struct(*fields)),
-        lambda b: _node_valid(v, b, schema, depth)), 0)
+    _check_supported(schema)
+    return _bind(v, _needs(schema), lambda n: _node_valid(n, schema, depth))
 
 
 def variant_valid_many(v: Column, schemas: list, depth: int = 0) -> Column:
@@ -641,85 +716,62 @@ def variant_valid_many(v: Column, schemas: list, depth: int = 0) -> Column:
         return F.struct(F.lit(True).alias("q0"))
     dict_schemas = [s for s in schemas if isinstance(s, dict)]
     for s in dict_schemas:  # eager VariantUnsupported, like variant_valid
-        for kw in _UNSUPPORTED:
-            if kw in s:
-                raise VariantUnsupported(kw)
+        _check_supported(s)
     union: dict[str, bool] = {k: False for k in "nsakm"}
     for s in dict_schemas:
         for k, flag in _needs(s).items():
             union[k] = union[k] or flag
-    fields = [_vtype(v).alias("t")]
-    if union["n"]:
-        fields.append(_num(v).alias("n"))
-        fields.append(F.try_variant_get(v, "$", "double").alias("nd"))
-    if union["s"]:
-        fields.append(_str(v).alias("s"))
-    if union["a"]:
-        fields.append(_arr(v).alias("a"))
-    if union["k"]:
-        fields.append(_object_keys(v).alias("k"))
-    if union["m"]:
-        fields.append(_entries(v).alias("m"))
 
-    def _one(b: Column, s: Any) -> Column:
+    def _one(n: _Node, s: Any) -> Column:
         if s is True:
             return F.lit(True)
         if s is False:
             return v.isNull()
         if not isinstance(s, dict):
             return F.lit(True)
-        return _node_valid(v, b, s, depth)
+        return _node_valid(n, s, depth)
 
-    return F.get(F.transform(
-        F.array(F.struct(*fields)),
-        lambda b: F.struct(*[_one(b, s).alias(f"q{i}")
-                             for i, s in enumerate(schemas)])), 0)
+    return _bind(v, union, lambda n: F.struct(
+        *[_one(n, s).alias(f"q{i}") for i, s in enumerate(schemas)]))
 
 
-def _node_valid(v: Column, b: Column, schema: dict, depth: int) -> Column:
-    present = v.isNotNull()
+def _node_valid(n: _Node, schema: dict, depth: int) -> Column:
+    """The verdict of one schema node. Every shared sub-expression comes
+    from ``n`` (:class:`_Node`), so it is built only if a keyword of this
+    node reads it, and then once."""
+    v = n.v
     needs = _needs(schema)
-    t = b["t"]
-    is_num = t.isin("BIGINT", "DOUBLE", "FLOAT") | t.startswith("DECIMAL")
-    # the value's STORED scale (trailing zeros strip at parse, so this is
-    # the true scale); extractions at a coarser scale ROUND, so every
-    # decimal-window read guards on it
-    vscale = _stored_scale(t)
     ok = F.lit(True)
 
     def type_ok(name: str) -> Column:
         if name == "string":
-            return t == "STRING"
+            return n.t_is("STRING")
         if name == "boolean":
-            return t == "BOOLEAN"
+            return n.t_is("BOOLEAN")
         if name == "number":
-            return is_num
+            return n.is_num
         if name == "integer":
-            nn, nd = b["n"], b["nd"]
+            nn, nd = n.slot("n"), n.slot("nd")
             # decimal window -> exact floor compare; wide exact DECIMALs
             # check their string rendering for a nonzero fraction (the
             # ">= 2^53 is whole" shortcut only holds for DOUBLE-stored
             # values); DOUBLE >= 2^53 is always whole; else floor-compare
             # the double (branch-guarded: floor(double) -> long would
-            # throw under ANSI past 2^53)
-            exact_t = (t == "BIGINT") | t.startswith("DECIMAL")
-            # the decimal-window tier is for EXACT-stored values only:
+            # throw under ANSI past 2^53).
+            # The decimal-window tier is for EXACT-stored values only:
             # nn of a DOUBLE rounds (1e-19 -> 0 "is" an integer) — DOUBLE/
             # FLOAT must fall through to the double branches (ADVICE r3)
-            return is_num & (
-                F.when(exact_t & nn.isNotNull() & (vscale <= 18),
-                       nn == F.floor(nn).cast(_DEC))
-                 .when(exact_t,
-                       ~F.try_variant_get(v, "$", "string")
-                        .rlike(r"\.\d*[1-9]"))
-                 .when(F.abs(nd) >= F.lit(float(2 ** 53)), F.lit(True))
+            return n.is_num & (
+                F.when(n.exact_in18, nn == F.floor(nn).cast(_DEC))
+                 .when(n.exact, ~n.get("string").rlike(r"\.\d*[1-9]"))
+                 .when(F.abs(nd) >= F.lit(float(2 ** 53)), n.true)
                  .otherwise(nd == F.floor(nd).cast("double")))
         if name == "array":
-            return t.startswith("ARRAY")
+            return n.t_starts("ARRAY")
         if name == "object":
-            return t.startswith("OBJECT") | t.startswith("STRUCT")
+            return n.is_obj
         if name == "null":
-            return F.is_variant_null(v)
+            return n.is_null
         raise VariantUnsupported(f"unknown type {name!r}")
 
     tn = schema.get("type")
@@ -728,33 +780,33 @@ def _node_valid(v: Column, b: Column, schema: dict, depth: int) -> Column:
         cond = type_ok(names[0])
         for name in names[1:]:
             cond = cond | type_ok(name)
-        ok = ok & ~(present & ~cond)
+        ok = ok & ~(n.present & ~cond)
 
     def const_ok(c: Any) -> Column:
         if c is None:
-            return F.is_variant_null(v)
+            return n.is_null
         if isinstance(c, bool):
-            return (t == "BOOLEAN") & (F.try_variant_get(v, "$", "boolean") == c)
+            return n.t_is("BOOLEAN") & (n.get("boolean") == c)
         if is_number(c):
-            return is_num & _num_eq_variant(v, c, t)
+            return n.is_num & _num_eq_variant(n, c)
         if isinstance(c, str):
-            return (t == "STRING") & (b["s"] == c)
+            return n.t_is("STRING") & (n.slot("s") == c)
         # structural array/object literals: compile-time recursion over
         # the literal builds a bounded deep-equality predicate
-        return _json_eq_deep(v, c)
+        return _json_eq_deep(n.unbound, c)
 
     if "enum" in schema:
         cond = F.lit(False)
         for e in schema["enum"]:
             cond = cond | const_ok(e)
-        ok = ok & ~(present & ~cond)
+        ok = ok & ~(n.present & ~cond)
     if "const" in schema:
-        ok = ok & ~(present & ~const_ok(schema["const"]))
+        ok = ok & ~(n.present & ~const_ok(schema["const"]))
 
     # numeric keywords gate on the value being a number (vacuous otherwise)
     if needs["n"]:
-        n, nd = b["n"], b["nd"]
-        isnum = present & is_num
+        nb, nd = n.slot("n"), n.slot("nd")
+        isnum = n.present & n.is_num
 
         def num_cmp(bound_val, op: str) -> Column:
             """Bound comparison that never NULL-poisons: decimal-exact in
@@ -770,39 +822,35 @@ def _node_valid(v: Column, b: Column, schema: dict, depth: int) -> Column:
             s = max(-d.as_tuple().exponent, 0)
             fits = (_dec_precision(d) <= 38 and s <= 18
                     and _dec_precision(d) - s <= 20)
+            lit_d = F.lit(d)
 
             def apply(c: Column, lit: Column) -> Column:
                 return {"gt": c > lit, "ge": c >= lit,
                         "lt": c < lit, "le": c <= lit}[op]
 
-            exact_t = (t == "BIGINT") | t.startswith("DECIMAL")
-            vscale = _stored_scale(t)
             # double-typed variants go through the direction-aware
             # boundary double (kernel-exact even when the bound falls
             # between a double's decimal views — fuzz-found r3)
             dbl_cond = _double_cmp(nd, bound_val, op)
             if fits:
-                # n is faithful only when the stored scale fits the
+                # nb is faithful only when the stored scale fits the
                 # extraction scale (rounding could cross the bound); wide
                 # exact values (21+ int digits) compare at the bound's own
                 # scale, scale-19..38 values through the exact text
-                # comparator, before falling to the double view
-                ds = F.try_variant_get(v, "$", f"decimal(38,{s})")
-                # every n/nn decimal tier is gated on exact_t: n of a
+                # comparator, before falling to the double view.
+                # Every decimal tier is gated on exactness: nb of a
                 # DOUBLE-stored value ROUNDS to scale 18 (shortest repr
                 # of 9.999999999999998e-4 has 19 fractional digits), so
                 # doubles must reach dbl_cond (ADVICE r3)
-                return F.when(exact_t & n.isNotNull() & (vscale <= 18),
-                              apply(n, F.lit(d))) \
-                        .when(exact_t & (vscale > 18),
-                              _dec_text_cmp(v, d, op)) \
-                        .when(exact_t & (vscale <= s) & ds.isNotNull(),
-                              apply(ds, F.lit(d))) \
+                return F.when(n.exact_in18, apply(nb, lit_d)) \
+                        .when(n.exact_fine, _dec_text_cmp(n, d, op)) \
+                        .when(n.exact_at(s),
+                              apply(n.get(f"decimal(38,{s})"), lit_d)) \
                         .otherwise(dbl_cond)
-            # bound outside the window: an in-window n (scale ≤ 18,
-            # |n| < 10²⁰) still compares EXACTLY — constant when
+            # bound outside the window: an in-window nb (scale ≤ 18,
+            # |nb| < 10²⁰) still compares EXACTLY — constant when
             # |d| ≥ 10²⁰ (every window value is smaller in magnitude),
-            # else against d floored/ceiled to scale 18 (n is a multiple
+            # else against d floored/ceiled to scale 18 (nb is a multiple
             # of 10⁻¹⁸, so the strict relation is preserved). The old
             # n.cast("double") middle tier collapsed B37 onto 1e20 and
             # declared it ≥ 10²⁰ (fuzz-found r3).
@@ -817,27 +865,24 @@ def _node_valid(v: Column, b: Column, schema: dict, depth: int) -> Column:
                     dlo = d.quantize(q18, rounding=_dec.ROUND_FLOOR)
                     dhi = d.quantize(q18, rounding=_dec.ROUND_CEILING)
                 if dlo == d:
-                    n_cmp = apply(n, F.lit(dlo))
+                    n_cmp = apply(nb, F.lit(dlo))
                 elif op in ("le", "lt"):
-                    n_cmp = n <= F.lit(dlo)
+                    n_cmp = nb <= F.lit(dlo)
                 else:
-                    n_cmp = n >= F.lit(dhi)
+                    n_cmp = nb >= F.lit(dhi)
             # wide bound (21-38 integer digits): exactly-stored values
             # whose scale is no finer than the bound's compare exactly at
             # the bound's own scale (fuzz-found r3: a wide DECIMAL equal
             # to the bound diverged through the double view); the rest
             # fall to the double comparisons
             if s <= 18 and _dec_precision(d) <= 38:
-                ds = F.try_variant_get(v, "$", f"decimal(38,{s})")
-                return F.when(exact_t & (vscale <= s) & ds.isNotNull(),
-                              apply(ds, F.lit(d))) \
-                        .when(exact_t & (vscale > 18),
-                              _dec_text_cmp(v, d, op)) \
-                        .when(exact_t & n.isNotNull() & (vscale <= 18),
-                              n_cmp) \
+                return F.when(n.exact_at(s),
+                              apply(n.get(f"decimal(38,{s})"), lit_d)) \
+                        .when(n.exact_fine, _dec_text_cmp(n, d, op)) \
+                        .when(n.exact_in18, n_cmp) \
                         .otherwise(dbl_cond)
-            return F.when(exact_t & (vscale > 18), _dec_text_cmp(v, d, op)) \
-                    .when(exact_t & n.isNotNull() & (vscale <= 18), n_cmp) \
+            return F.when(n.exact_fine, _dec_text_cmp(n, d, op)) \
+                    .when(n.exact_in18, n_cmp) \
                     .otherwise(dbl_cond)
 
         for kw in ("minimum", "maximum"):
@@ -858,8 +903,7 @@ def _node_valid(v: Column, b: Column, schema: dict, depth: int) -> Column:
             ok = ok & ~(isnum & ~num_cmp(emx, "lt"))
         mo = schema.get("multipleOf")
         if is_number(mo):
-            ok = ok & ~(isnum & _multiple_of_fail_variant(v, mo, t,
-                                                          n18=n, nd=nd))
+            ok = ok & ~(isnum & _multiple_of_fail_variant(n, mo))
         if schema.get("format") in ("int32", "int64"):
             from sparkschema.compiler.formats_sql import int_format_double
             fmtname = schema["format"]
@@ -869,31 +913,34 @@ def _node_valid(v: Column, b: Column, schema: dict, depth: int) -> Column:
             # reads guard on the stored scale (1E-30 rounded to 0 and
             # "was" an int32 — fuzz-found r3); exact values outside both
             # windows are wide (>20 int digits) or fine-scaled — never ints
-            pred = F.when(t.isin("DOUBLE", "FLOAT"),
+            pred = F.when(n.t.isin("DOUBLE", "FLOAT"),
                           int_format_double(nd, fmtname)) \
-                    .when(n.isNotNull() & (vscale <= 18),
-                          format_predicate(fmtname, n)) \
-                    .otherwise(F.lit(False))
-            ok = ok & ~(isnum & ~F.coalesce(pred, F.lit(False)))
+                    .when(n.n_nonnull & n.scale_is("<=", 18),
+                          format_predicate(fmtname, nb)) \
+                    .otherwise(n.false)
+            ok = ok & ~(isnum & ~F.coalesce(pred, n.false))
 
     if needs["s"]:
-        s = b["s"]
-        isstr = present & (t == "STRING")
+        s = n.slot("s")
+        isstr = n.present & n.t_is("STRING")
+
+        def glen() -> Column:
+            from sparkschema.compiler.columns import grapheme_length_col
+            return n._once("glen", lambda: grapheme_length_col(s))
+
         mn = schema.get("minLength")
         if isinstance(mn, int) and not isinstance(mn, bool):
-            from sparkschema.compiler.columns import grapheme_length_col
-            ok = ok & ~(isstr & (grapheme_length_col(s) < mn))
+            ok = ok & ~(isstr & (glen() < mn))
         mx = schema.get("maxLength")
         if isinstance(mx, int) and not isinstance(mx, bool):
-            from sparkschema.compiler.columns import grapheme_length_col
-            ok = ok & ~(isstr & (grapheme_length_col(s) > mx))
+            ok = ok & ~(isstr & (glen() > mx))
         pat = schema.get("pattern")
         if isinstance(pat, str):
-            # compile-time validity check (the _java_pattern kernel-skip
-            # shape): an uncompilable regex previously crashed the WHOLE
-            # job at rlike evaluation, while the kernel emits
-            # str.invalid.pattern — every string value fails (review r4)
-            jp = _pattern_or_invalid(pat)
+            # compile-time validity check: an uncompilable regex
+            # previously crashed the WHOLE job at rlike evaluation, while
+            # the kernel emits str.invalid.pattern — every string value
+            # fails (review r4)
+            jp = _java_pattern(pat)
             if jp is None:
                 ok = ok & ~isstr
             else:
@@ -903,14 +950,18 @@ def _node_valid(v: Column, b: Column, schema: dict, depth: int) -> Column:
             ok = ok & ~(isstr & ~format_predicate(fmt, s))
 
     if needs["a"]:
-        arr = b["a"]
-        isarr = present & t.startswith("ARRAY")
+        arr = n.slot("a")
+        isarr = n.present & n.t_starts("ARRAY")
+
+        def size() -> Column:
+            return n._once("size(a)", lambda: F.size(arr))
+
         mn = schema.get("minItems")
         if isinstance(mn, int) and not isinstance(mn, bool):
-            ok = ok & ~(isarr & (F.size(arr) < mn))
+            ok = ok & ~(isarr & (size() < mn))
         mx = schema.get("maxItems")
         if isinstance(mx, int) and not isinstance(mx, bool):
-            ok = ok & ~(isarr & (F.size(arr) > mx))
+            ok = ok & ~(isarr & (size() > mx))
         if schema.get("uniqueItems") is True:
             canon = F.transform(arr, _canon_elem)
             ok = ok & ~(isarr & (F.size(F.array_distinct(canon)) != F.size(canon)))
@@ -924,16 +975,16 @@ def _node_valid(v: Column, b: Column, schema: dict, depth: int) -> Column:
             for i, sub in enumerate(items):
                 el = F.get(arr, i)  # SQL NULL past the end -> vacuous pass
                 el_ok = variant_valid(el, sub, depth + 1)
-                ok = ok & ~(isarr & (F.size(arr) > i) & ~el_ok)
+                ok = ok & ~(isarr & (size() > i) & ~el_ok)
             add = schema.get("additionalItems")
             if add is False:
-                ok = ok & ~(isarr & (F.size(arr) > len(items)))
+                ok = ok & ~(isarr & (size() > len(items)))
             elif isinstance(add, (dict, bool)) and add is not True:
                 tail = F.slice(arr, len(items) + 1,
                                2147483647 - len(items) - 1)
                 tail_ok = F.forall(
                     tail, lambda e: variant_valid(e, add, depth + 1))
-                ok = ok & ~(isarr & (F.size(arr) > len(items)) & ~tail_ok)
+                ok = ok & ~(isarr & (size() > len(items)) & ~tail_ok)
         if "contains" in schema:
             has = F.exists(arr, lambda e: variant_valid(e, schema["contains"],
                                                         depth + 1)
@@ -941,29 +992,33 @@ def _node_valid(v: Column, b: Column, schema: dict, depth: int) -> Column:
             ok = ok & ~(isarr & ~has)
 
     props = schema.get("properties")
-    isobj = present & (t.startswith("OBJECT") | t.startswith("STRUCT"))
     if isinstance(props, dict):
         for k, sub in props.items():
-            child_ok = variant_valid(_get(v, k), sub, depth + 1)
-            ok = ok & ~(isobj & ~child_ok)
+            child_ok = variant_valid(n.child(k), sub, depth + 1)
+            ok = ok & ~(n.present_obj & ~child_ok)
     req = schema.get("required")
     if isinstance(req, list):
         for k in req:
-            ok = ok & ~(isobj & _get(v, k).isNull())
+            ok = ok & ~(n.present_obj & n.child(k).isNull())
 
     # key-only object keywords over json_object_keys(to_json(v)) — all
     # Catalyst-native (ObjectValidators.scala:16-35,128-171,173-258)
     if needs["k"]:
-        keys = b["k"]
+        isobj = n.present_obj
+        keys = n.slot("k")
+
+        def nkeys() -> Column:
+            return n._once("size(k)", lambda: F.size(keys))
+
         if "propertyNames" in schema:
             pn = schema["propertyNames"]
             ok = ok & ~(isobj & ~F.forall(keys, lambda k: _propname_ok(k, pn)))
         mnp = schema.get("minProperties")
         if isinstance(mnp, int) and not isinstance(mnp, bool):
-            ok = ok & ~(isobj & (F.size(keys) < mnp))
+            ok = ok & ~(isobj & (nkeys() < mnp))
         mxp = schema.get("maxProperties")
         if isinstance(mxp, int) and not isinstance(mxp, bool):
-            ok = ok & ~(isobj & (F.size(keys) > mxp))
+            ok = ok & ~(isobj & (nkeys() > mxp))
         if schema.get("additionalProperties") is False:
             # allowed keys: declared properties ∪ patternProperties matches
             # (unmatched.intersect(remaining), ObjectConstraints4.scala:53)
@@ -980,7 +1035,8 @@ def _node_valid(v: Column, b: Column, schema: dict, depth: int) -> Column:
         deps = schema.get("dependencies")
         if isinstance(deps, dict):
             for dk, dv in deps.items():
-                has = F.coalesce(F.array_contains(keys, F.lit(dk)), F.lit(False))
+                has = F.coalesce(F.array_contains(keys, F.lit(dk)),
+                                 n.false)
                 if isinstance(dv, list):
                     dep_ok = F.lit(True)
                     for r in dv:
@@ -991,12 +1047,13 @@ def _node_valid(v: Column, b: Column, schema: dict, depth: int) -> Column:
                     dep_ok = variant_valid(v, dv, depth + 1)
                 else:
                     raise VariantUnsupported("dependencies value form")
-                ok = ok & ~(isobj & has & ~F.coalesce(dep_ok, F.lit(False)))
+                ok = ok & ~(isobj & has & ~F.coalesce(dep_ok, n.false))
 
     # value-reading object keywords over the map<string,variant> entries
     # (ObjectValidators.scala:128-171; interpreter.py:448-475)
     if needs["m"]:
-        entries = b["m"]
+        isobj = n.present_obj
+        entries = n.slot("m")
         pairs = _compiled_patprops(schema)
         for jp, sub in pairs:
             def _pat_ok(jp=jp, sub=sub):  # bind per-pattern, 1-arg lambdas
@@ -1037,16 +1094,16 @@ def _node_valid(v: Column, b: Column, schema: dict, depth: int) -> Column:
                 for c in conds[1:]:
                     agg = agg + c.cast("int")
                 agg = agg == 1
-            ok = ok & ~(present & ~agg)
+            ok = ok & ~(n.present & ~agg)
     if "not" in schema:
-        ok = ok & ~(present & variant_valid(v, schema["not"], depth + 1))
+        ok = ok & ~(n.present & variant_valid(v, schema["not"], depth + 1))
     if "if" in schema:
         cond = variant_valid(v, schema["if"], depth + 1)
         then_ok = variant_valid(v, schema["then"], depth + 1) \
             if "then" in schema else F.lit(True)
         else_ok = variant_valid(v, schema["else"], depth + 1) \
             if "else" in schema else F.lit(True)
-        ok = ok & ~(present & ~F.when(cond, then_ok).otherwise(else_ok))
+        ok = ok & ~(n.present & ~F.when(cond, then_ok).otherwise(else_ok))
     return ok
 
 
@@ -1060,11 +1117,12 @@ def variant_valid_column(json_col: Column | str, schema: Any) -> Column:
     interpreted variant expressions; review find r4 — binding measured
     3.8→2.0 s at 1 property and 20.2→14.0 s at 12 on 300 k rows; the
     remaining width-linearity is the per-keyword variant ops themselves).
-    The compile itself must happen OUTSIDE the lambda so
-    VariantUnsupported still raises eagerly for json_valid_auto."""
+
+    The predicate is compiled once, inside the lambda: PySpark calls a
+    higher-order function's Python lambda when it builds the Column, so
+    :class:`VariantUnsupported` still raises here, eagerly, for
+    ``json_valid_auto``'s kernel fallback."""
     col = F.col(json_col) if isinstance(json_col, str) else json_col
-    probe = variant_valid(F.try_parse_json(col), schema)  # noqa: F841
-    del probe  # compile-check only (raises VariantUnsupported eagerly)
 
     def body(v: Column) -> Column:
         return F.when(v.isNull(), F.lit(False)) \

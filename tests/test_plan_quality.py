@@ -282,3 +282,151 @@ def test_drift_statistics_bucket_windows_only(spark):
     plan = _plan(drift_statistics_histograms(h1, h2))
     assert "Python" not in plan
     assert "Window" in plan
+
+
+# the benchmark's ``json_documents`` spec (perfbench/workloads.py), copied:
+# a $ref'd draft-7 document schema exercising enum, pattern, tuple items,
+# uniqueItems, nested required and if/then on the VARIANT path
+BENCH_JSON_SCHEMA = {
+    "$schema": "http://json-schema.org/draft-07/schema#",
+    "definitions": {
+        "box": {
+            "type": "object",
+            "required": ["label", "bbox"],
+            "properties": {
+                "label": {"enum": ["cat", "dog", "car", "tree", "person",
+                                   "boat", "bird", "sign"]},
+                "bbox": {"type": "array", "minItems": 4, "maxItems": 4,
+                         "items": {"type": "integer", "minimum": 0}},
+            },
+        },
+        "tag": {"type": "string", "pattern": "^t[0-9]+$"},
+    },
+    "type": "object",
+    "required": ["id", "source", "size", "objects"],
+    "properties": {
+        "id": {"type": "string", "pattern": "^doc-[0-9]{8}$"},
+        "source": {"enum": ["crawl", "vendor", "synthetic", "user"]},
+        "size": {"type": "array",
+                 "items": [{"type": "integer", "minimum": 1},
+                           {"type": "integer", "minimum": 1},
+                           {"enum": [1, 3, 4]}],
+                 "additionalItems": False},
+        "objects": {"type": "array", "minItems": 1,
+                    "items": {"$ref": "#/definitions/box"}},
+        "tags": {"type": "array", "uniqueItems": True,
+                 "items": {"$ref": "#/definitions/tag"}},
+        "license": {"type": "string"},
+    },
+    "if": {"properties": {"source": {"const": "vendor"}}},
+    "then": {"required": ["license"]},
+}
+
+# SHA-256 of the normalized optimized plan of json_valid_auto over
+# BENCH_JSON_SCHEMA, recorded before the VARIANT compiler stopped
+# rebuilding shared sub-expressions per keyword. A change that means to
+# alter the compiled predicate must update it, with the evidence that
+# the new plan is right.
+BENCH_JSON_PLAN_SHA256 = \
+    "da2c215349b85f1e93e49a32aa0db7c6f4e6162196872f05d9d895e579738c5c"
+
+
+def _bench_json_compile():
+    import copy
+
+    from sparkschema.compiler.variantcol import json_valid_auto
+    from sparkschema.spec.parser import parse_spec
+
+    schema = parse_spec(copy.deepcopy(BENCH_JSON_SCHEMA), "draft7").schema
+    return json_valid_auto("doc", schema, dialect="draft7")
+
+
+def _normalized_optimized_plan(df) -> str:
+    """The optimized logical plan, every field printed, with lambda
+    variables renumbered by first appearance and ``#id``s stripped: two
+    compiles of the same predicate render identically."""
+    import re
+
+    plan = df._jdf.queryExecution().optimizedPlan() \
+        .treeString(False, False, 2 ** 31 - 1, False, False)
+    names: dict = {}
+    plan = re.sub(r"\bx_\d+\b",
+                  lambda m: names.setdefault(m.group(0), f"x_{len(names)}"),
+                  plan)
+    return re.sub(r"#\d+L?", "", plan)
+
+
+def test_variant_compile_round_trips_pinned(spark):
+    """Compiling the benchmark's JSON spec on the VARIANT path costs at
+    most 13,000 py4j round trips. Every ``F.*`` call or Column operator is
+    about ten; the compiler used to build the whole tree twice and rebuild
+    each node's shared sub-expressions per keyword (~27,500)."""
+    import gc
+
+    import py4j.clientserver
+    import py4j.java_gateway
+
+    _bench_json_compile()  # first-call JVM class loading is not counted
+    count = [0]
+    patched = []
+    for cls in (py4j.clientserver.ClientServerConnection,
+                py4j.java_gateway.GatewayConnection):
+        orig = cls.send_command
+
+        def counting(self, *a, _orig=orig, **k):
+            count[0] += 1
+            return _orig(self, *a, **k)
+
+        patched.append((cls, orig))
+        cls.send_command = counting
+    # garbage from earlier tests would release its JVM objects through
+    # the same socket; collect it first and keep the collector off
+    gc.collect()
+    gc.disable()
+    try:
+        count[0] = 0
+        _bench_json_compile()
+        n = count[0]
+    finally:
+        gc.enable()
+        for cls, orig in patched:
+            cls.send_command = orig
+    assert 0 < n <= 13_000, n
+
+
+def test_variant_compile_plan_pinned(spark):
+    """The normalized optimized plan of the benchmark's JSON spec is the
+    one recorded before the compile was made cheaper: fewer Columns on
+    the driver, the same Catalyst plan."""
+    import hashlib
+
+    base = spark.range(0, 1, 1, 1).select(F.col("id").cast("string")
+                                          .alias("doc"))
+    plan = _normalized_optimized_plan(
+        base.select(_bench_json_compile().alias("ok")))
+    assert hashlib.sha256(plan.encode()).hexdigest() \
+        == BENCH_JSON_PLAN_SHA256, plan[:2000]
+
+
+def test_violation_report_schema_pinned(spark):
+    """The violation report's columns, types and nullability. Key columns
+    keep their own nullability (cast to string); every report field is
+    nullable, because ``explode_outer`` makes the exploded struct
+    nullable. The no-check path returns the same schema."""
+    imgs = images_df(spark, 50, partitions=2)
+    report = [("image_id", "string", False)] + [
+        (name, "string", True)
+        for name in ("keyword", "schema_path", "instance_path", "value",
+                     "msg", "errors", "resolution_scope", "referrer")]
+
+    def fields(df):
+        return [(f.name, f.dataType.simpleString(), f.nullable)
+                for f in df.schema.fields]
+
+    cts = compile_table_spec(SPEC, imgs, key_cols=["image_id"])
+    assert fields(cts.violations(imgs)) == report
+    assert fields(cts.violations(imgs, cast_keys=False)) == report
+    empty = compile_table_spec({"type": "object"}, imgs,
+                               key_cols=["image_id"])
+    assert not empty.checks
+    assert fields(empty.violations(imgs)) == report

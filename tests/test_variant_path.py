@@ -80,6 +80,38 @@ def test_json_valid_auto_falls_back(spark):
     assert got[0].ok is True
 
 
+@pytest.mark.parametrize("spec,docs", [
+    # Java rejects the non-ASCII group name; the check runs inside the
+    # forall lambda of `items`
+    ({"type": "array", "items": {"type": "string", "pattern": "(?<nmü>x)"}},
+     ['["x", "ax"]', '["y"]', '[]']),
+    # scale-20 multipleOf is kernel-only; it sits inside the root node's
+    # binding lambda, one property down
+    ({"properties": {"a": {"multipleOf": 2 ** -20}}},
+     ['{"a": 0.00000286102294921875}', '{"a": 0.00000286102294921876}']),
+], ids=["items_pattern", "properties_multipleOf"])
+def test_unsupported_inside_hof_lambda_falls_back_eagerly(spark, spec, docs):
+    """The predicate is compiled once, inside the higher-order-function
+    lambdas PySpark calls while it builds the Column. A construct that is
+    unsupported deep inside those lambdas must still raise
+    VariantUnsupported from variant_valid_column, and json_valid_auto
+    must hand the spec to the Arrow kernel and get its verdicts."""
+    from sparkschema.spec.interpreter import Validator
+    from sparkschema.spec.jsonvalue import parse_json
+
+    with pytest.raises(VariantUnsupported):
+        variant_valid_column("j", spec)
+    col = json_valid_auto("j", spec)
+    assert "is_valid_udf" in str(col), col  # the kernel column
+    df = spark.createDataFrame(list(enumerate(docs)), "i int, j string")
+    got = {r.i: r.ok for r in df.select("i", col.alias("ok")).collect()}
+    kernel = Validator()
+    want = {i: not kernel.validate(spec, parse_json(d))
+            for i, d in enumerate(docs)}
+    assert got == want, (got, want)
+    assert set(want.values()) == {True, False}
+
+
 def test_json_valid_auto_duplicate_keys_hybrid(spark):
     """Spark's variant parser rejects duplicate-key objects the reference
     (Jackson last-wins) accepts — json_valid_auto re-routes exactly those
