@@ -9,6 +9,10 @@ Corpus selection mirrors the reference's spec classes:
   its ``isWhole`` integer predicate intentionally treats 1.0 as integer);
 - the 16 ajv regression files listed in AjvSpecs.scala:13-29;
 - refRemote fixtures with remotes/ pre-registered (no network).
+
+Without the reference checkout the draft4/*.json and draft7/*.json keyword
+files are not collected at all (the glob finds nothing), and each of the 18
+named files (optional format/bignum, ajv) skips on its own missing path.
 """
 
 import glob
@@ -47,6 +51,8 @@ def file_ids():
 
 @pytest.mark.parametrize("dialect,path", corpus(), ids=file_ids())
 def test_fixture_file(dialect, path):
+    if not os.path.exists(path):
+        pytest.skip(f"reference fixture {path} is absent")
     failures = []
     for case in load_json(path):
         for t in case["tests"]:

@@ -1,7 +1,11 @@
 """Multi-document schema smoke tests from the reference's own suites:
 TinCanSpec.scala:40-57 (eleven cross-referencing '#name' documents) and
 ExamplesSpec.scala:20-44 (swagger petstore examples + meta-schema
-self-validation). Consumes the reference's resource files in place."""
+self-validation). Consumes the reference's resource files in place; a test
+whose files are absent skips with the missing path as its reason. The
+meta-schema test falls back to the published draft-04/draft-07 meta-schemas
+shipped in ``jsonschema_specifications`` when the reference copies are
+absent."""
 
 import glob
 import json
@@ -13,6 +17,11 @@ import pytest
 from sparkschema.spec.registry import SpecRegistry
 
 RES = "/root/reference/src/test/resources"
+META = "/root/reference/src/main/resources"
+
+needs_tincan = pytest.mark.skipif(
+    not os.path.exists(f"{RES}/tincan"),
+    reason=f"reference fixture directory {RES}/tincan is absent")
 
 
 def load(path):
@@ -38,12 +47,14 @@ def tincan_registry() -> SpecRegistry:
     return reg
 
 
+@needs_tincan
 def test_tincan_statement_validates():
     reg = tincan_registry()
     schema = load(f"{RES}/tincan/statement_base.json")
     assert reg.validate(schema, TINCAN_INSTANCE) == []
 
 
+@needs_tincan
 def test_tincan_rejects_bad_statement():
     reg = tincan_registry()
     schema = load(f"{RES}/tincan/statement_base.json")
@@ -53,11 +64,22 @@ def test_tincan_rejects_bad_statement():
     assert errs, "invalid verb must be rejected"
 
 
+def load_meta_schema(name: str, published: str):
+    """The reference's copy of a draft meta-schema where it exists, else the
+    published document of the same id from ``jsonschema_specifications``."""
+    path = f"{META}/{name}.json"
+    if not os.path.exists(path):
+        specs = pytest.importorskip("jsonschema_specifications")
+        path = os.path.join(os.path.dirname(specs.__file__), "schemas",
+                            published, "metaschema.json")
+    return load(path)
+
+
 def test_meta_schema_validates_itself():
     # ExamplesSpec "validate core schema against itself"
     for name, dialect in (("json-schema-draft-04", "draft4"),
                           ("json-schema-draft-07", "draft7")):
-        meta = load(f"/root/reference/src/main/resources/{name}.json")
+        meta = load_meta_schema(name, dialect)
         reg = SpecRegistry(dialect)
         reg.add_schema(meta.get("$id") or meta.get("id"), meta)
         assert reg.validate(meta, meta) == [], name

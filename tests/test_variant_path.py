@@ -1,6 +1,8 @@
 """VARIANT fast-path parity: the Catalyst-native dynamic-JSON compiler must
 agree with the semantics kernel on every spec it claims to support —
-verified over the golden-suite fixtures whose schemas compile to VARIANT."""
+verified over the golden-suite fixtures whose schemas compile to VARIANT.
+The two golden-corpus tests skip, naming the missing directory, when none of
+their fixture files exist (no reference checkout)."""
 
 import glob
 import os
@@ -44,6 +46,13 @@ def _cases():
     return out
 
 
+GOLDEN = f"{REFERENCE}/src/test/resources"
+REF_FILES = [f"{GOLDEN}/{d}/{n}" for d in ("draft4", "draft7")
+             for n in ("ref.json", "refRemote.json", "definitions.json")]
+
+
+@pytest.mark.skipif(not _cases(), reason=(
+    f"no golden fixture file under {GOLDEN}/draft4 or {GOLDEN}/draft7"))
 def test_variant_path_matches_kernel_on_golden_corpus(spark):
     total = checked = skipped = 0
     failures = []
@@ -140,6 +149,9 @@ def test_variant_null_vs_absent(spark):
     assert got == {1: False, 2: False, 3: True}
 
 
+@pytest.mark.skipif(not any(os.path.exists(p) for p in REF_FILES), reason=(
+    "none of ref.json, refRemote.json, definitions.json exists under "
+    f"{GOLDEN}/draft4 or {GOLDEN}/draft7"))
 def test_json_valid_auto_refs_stay_native_on_golden_corpus(spark):
     """r4: json_valid_auto inlines non-recursive $refs at compile time, so
     the ref/refRemote/definitions fixture files should now mostly run on
