@@ -32,6 +32,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparkschema._worker import ready
 from sparkschema.compiler.formats_sql import format_predicate
 from sparkschema.spec import messages as msg_catalog
 from sparkschema.spec.jsonvalue import is_number
@@ -124,6 +125,7 @@ def _kernel_pattern_search_udf(pat: str):
 
     @_F.pandas_udf("boolean")
     def fn(vals):
+        ready()
         import pandas as pd
 
         return pd.Series(
@@ -163,6 +165,7 @@ def _as_decimal_mod_fail_udf(mo_dec: Decimal):
 
     @_F.pandas_udf("boolean")
     def fn(vals):
+        ready()
         import pandas as pd
 
         from sparkschema.spec.jsonvalue import as_decimal

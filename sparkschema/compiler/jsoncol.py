@@ -16,8 +16,13 @@ closure and are rebuilt lazily worker-side (driver-only compile, SURVEY.md
 task rebuilds it; a rebuild costs about 0.1 ms for the benchmark's
 ``json_documents`` spec. The per-task start-up cost of a Python worker is
 elsewhere: PySpark's ``worker_util.setup_spark_files`` calls
-``importlib.invalidate_caches()`` on every task, which took 160–240 ms of
-CPU per call on a 4-vCPU host, even in a reused worker.
+``importlib.invalidate_caches()`` on every task, and before Python 3.12
+that makes every zipimporter re-read its archive's central directory —
+on Spark 4.1.2 and Python 3.11, 12 importers over ``pyspark.zip`` (1,328
+entries) and 4 over the py4j zip and the ``spark-core`` jar, about
+0.3–0.8 CPU-s per task even in a reused worker. The call itself costs
+0.06 ms. Both UDF bodies call :func:`sparkschema._worker.ready`, after
+which a reused worker re-reads an archive only when it changed.
 """
 
 from __future__ import annotations
@@ -28,6 +33,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from sparkschema._worker import ready
 
 VIOLATION_ARRAY_TYPE = T.ArrayType(T.StructType([
     T.StructField("keyword", T.StringType()),
@@ -91,6 +98,7 @@ def _make_udfs(schema: Any, registry, dialect: str | None):
 
     @F.pandas_udf(T.BooleanType())
     def is_valid_udf(s):
+        ready()
         import pandas as pd
 
         from sparkschema.spec.jsonvalue import parse_json
@@ -109,6 +117,7 @@ def _make_udfs(schema: Any, registry, dialect: str | None):
 
     @F.pandas_udf(VIOLATION_ARRAY_TYPE)
     def violations_udf(s):
+        ready()
         import pandas as pd
 
         from sparkschema.spec.jsonvalue import parse_json

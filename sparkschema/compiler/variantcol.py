@@ -337,9 +337,11 @@ def _multiple_of_fail_variant(n: _Node, mo: Any) -> Column:
     than 38 digits and exponents past double range (``1e999``) collapse to
     DOUBLE/Infinity where the kernel stays exact; a LONE surrogate escape
     in a string becomes ``?`` where Python keeps the surrogate
-    (length/pattern checks on such strings can differ). Duplicate-key
-    objects — which Spark REJECTS at parse — are handled: json_valid_auto
-    re-routes those rows to the kernel.
+    (length/pattern checks on such strings can differ); text after the
+    first complete value is ignored (``try_parse_json('{"k": 3} x')`` is
+    ``{"k":3}`` on Spark 4.1.2) where the kernel rejects the document as
+    unparsable. Duplicate-key objects — which Spark REJECTS at parse — are
+    handled: json_valid_auto re-routes those rows to the kernel.
     """
     from pyspark.sql import types as T
 

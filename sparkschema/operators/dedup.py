@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparkschema._worker import ready
+
 # ---------------------------------------------------------------------------
 # signature-impl auto-selection
 
@@ -188,6 +190,7 @@ def _minhash_sig_udf(num_hashes: int, shingle_k: int, seed: int):
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def sig_udf(texts):
+        ready()
         import re
 
         import pandas as pd
@@ -482,6 +485,7 @@ def _simhash_sig_udf(bits: int, shingle_k: int, seed: int):
 
     @F.pandas_udf(T.LongType())
     def sig_udf(texts):
+        ready()
         import re
 
         import pandas as pd

@@ -27,9 +27,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparkschema._worker import ready
+
 
 @F.pandas_udf(T.LongType())
 def _phash_udf(bufs):
+    ready()
     import pandas as pd
 
     from sparkschema.functions.imagecodec import phash_bytes
@@ -49,6 +52,7 @@ def _phash_map_batches(it):
     5.4 s → 1.7 s for the 20 k-image / 2.6 GiB decode pass, hashes
     bit-identical (the decode kernel reads any buffer protocol object).
     """
+    ready()
     import numpy as np
     import pyarrow as pa
 

@@ -18,6 +18,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from sparkschema._worker import ready
+
 FEATURE_SCHEMA = ("image_id string, ok boolean, w int, h int, fmt string, "
                   "mean_r double, mean_g double, mean_b double, "
                   "std_gray double")
@@ -29,6 +31,7 @@ def extract_image_features(images: DataFrame, batch_hint: int = 2048) -> DataFra
     ``ok=false`` rows instead of failing the task."""
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ready()
         import numpy as np
 
         from sparkschema.functions.imagecodec import CorruptImage, decode
@@ -77,6 +80,7 @@ def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
     Demonstrates a mutate-and-reencode batch kernel."""
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ready()
         import numpy as np
 
         from sparkschema.functions.imagecodec import CorruptImage, decode, encode
@@ -108,6 +112,7 @@ def frame_sample_stub(videos: DataFrame, every_n: int = 30) -> DataFrame:
     contract (``(video_id, frame_index, bytes)``)."""
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ready()
         raise NotImplementedError(
             "video decode requires an external codec (ffmpeg); "
             "plug a decoder into frame_sample_stub.kernel")
@@ -121,6 +126,7 @@ def decode_external(images: DataFrame, fmt: str) -> DataFrame:
     :func:`extract_image_features`'s decode step."""
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ready()
         raise NotImplementedError(
             f"decoding external format {fmt!r} requires Pillow/libvips; "
             "the engine container format decodes via extract_image_features")

@@ -42,6 +42,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
+from sparkschema._worker import ready
+
 # C0 controls minus \t \n \r, plus DEL. Java∩RE2: \x escapes and
 # explicit ranges only — no character-class shorthands that diverge.
 _CONTROL_CLASS = "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]"
@@ -60,6 +62,7 @@ _CONTROL_CHARS = "".join(
 # would make this module unimportable before a session exists.
 @pandas_udf(StringType())
 def _nfc(s: pd.Series) -> pd.Series:
+    ready()
     # Series.str.normalize delegates to unicodedata.normalize('NFC')
     # element-wise and passes NULLs through untouched.
     return s.str.normalize("NFC")

@@ -23,6 +23,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sparkschema._worker import ready
 from sparkschema.functions.imagecodec import FMT_CODES, encode, synth_pixels
 
 TOKENS = [
@@ -122,6 +123,7 @@ def images_df(
         store_lossless = is_ref
 
         def gen_bytes(it: Iterator) -> Iterator:
+            ready()
             for pdf in it:
                 bufs = []
                 for iid, ww, hh, ff, hc in zip(pdf["image_id"], pdf["w"], pdf["h"],

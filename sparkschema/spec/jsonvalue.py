@@ -37,6 +37,10 @@ from typing import Any
 PARSE_MAX_NESTING = 1000
 
 
+def _reject_constant(name: str):
+    raise ValueError(f"non-standard JSON constant {name}")
+
+
 def parse_json(text: str) -> Any:
     """Parse JSON with exact decimal numbers (BigDecimal parity).
 
@@ -44,7 +48,9 @@ def parse_json(text: str) -> Any:
     reference's ``JsNumber(BigDecimal)`` so ``multipleOf`` and numeric
     equality behave decimal-exactly. Documents nested beyond
     :data:`PARSE_MAX_NESTING` raise ``ValueError`` (reference parity:
-    Jackson's depth constraint surfaces as a parse failure).
+    Jackson's depth constraint surfaces as a parse failure), and so do
+    ``NaN``, ``Infinity`` and ``-Infinity``, which RFC 8259 and Jackson's
+    defaults reject and no numeric keyword could judge.
     """
     # C-speed gate for the kernel hot path: depth > N needs at least N
     # opening brackets, so almost every real document skips both the
@@ -60,7 +66,8 @@ def parse_json(text: str) -> Any:
         if sys.getrecursionlimit() < 15000:
             sys.setrecursionlimit(15000)
     try:
-        value = json.loads(text, parse_float=Decimal)
+        value = json.loads(text, parse_float=Decimal,
+                           parse_constant=_reject_constant)
     except RecursionError:
         # deeper than even the raised stack allows — uniform parse error
         raise ValueError(

@@ -48,6 +48,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from sparkschema._worker import ready
+
 _STATE_SCHEMA = "ids ARRAY<STRING>, shs ARRAY<LONG>"
 _OUT_SCHEMA = T.StructType([
     T.StructField("id_a", T.StringType()),
@@ -148,6 +150,7 @@ def streaming_signature_neardup(sigs: DataFrame, chunks: int = 8,
                            "id", "sh", "__ord"))
 
     def update(key: tuple, pdfs: Iterable, state: GroupState):
+        ready()
         import numpy as np
         import pandas as pd
 

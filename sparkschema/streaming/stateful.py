@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from sparkschema._worker import ready
+
 STATE_SCHEMA = "rows LONG, violations LONG, quarantined BOOLEAN"
 OUTPUT_SCHEMA = T.StructType([
     T.StructField("key", T.StringType()),
@@ -65,6 +67,7 @@ def keyed_violation_state(stream_df: DataFrame, spec: Any, key_col: str,
         (~cts.row_valid()).cast("long").alias("invalid"))
 
     def update(key: tuple, pdfs: Iterable, state: GroupState):
+        ready()
         import pandas as pd
 
         if state.hasTimedOut:

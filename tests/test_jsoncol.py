@@ -79,3 +79,26 @@ def test_registry_dialect_wins_when_caller_omits_it(spark):
         "id", json_valid_column("j", spec, registry=reg4).alias("ok"))
         .collect()}
     assert got == {1: False, 2: True}  # draft-7 would ignore the flag
+
+
+NON_STANDARD = [(1, '{"k": NaN}'), (2, '{"k": Infinity}'),
+                (3, '{"k": [-Infinity]}'), (4, '{"k": 1.5}')]
+NUMERIC_SPEC = {"properties": {"k": {"minimum": 0, "multipleOf": 0.5,
+                                     "items": {"maximum": 0}}}}
+
+
+def test_non_standard_constants_are_parse_errors(spark):
+    """NaN, Infinity and -Infinity are not JSON (RFC 8259; Jackson's
+    defaults reject them): the row fails to parse instead of reaching a
+    numeric keyword, which raised and failed the whole job."""
+    from sparkschema.compiler.variantcol import json_valid_auto
+
+    df = spark.createDataFrame(NON_STANDARD, "id long, doc string")
+    for col in (json_valid_column("doc", NUMERIC_SPEC),
+                json_valid_auto("doc", NUMERIC_SPEC)):
+        got = {r.id: r.ok for r in df.select("id", col.alias("ok")).collect()}
+        assert got == {1: False, 2: False, 3: False, 4: True}
+
+    out = validate_json_column(df, "doc", NUMERIC_SPEC, key_cols=["id"])
+    got = sorted((r.id, r.keyword, r.msg) for r in out.collect())
+    assert got == [(i, "parse", "Could not parse JSON.") for i in (1, 2, 3)]
