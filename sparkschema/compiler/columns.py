@@ -23,7 +23,6 @@ Typed-column semantics (the columnar re-expression of SURVEY.md §2.2):
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 from decimal import Decimal
 from typing import Any, Callable
@@ -35,6 +34,8 @@ from pyspark.sql import types as T
 from sparkschema._worker import ready
 from sparkschema.compiler.formats_sql import format_predicate
 from sparkschema.spec import messages as msg_catalog
+from sparkschema.spec.ecma_pattern import (UnportablePattern, java_regex,
+                                           kernel_regex)
 from sparkschema.spec.jsonvalue import is_number
 
 INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -85,43 +86,15 @@ def statically_integer(dt: T.DataType) -> bool:
     return isinstance(dt, INTEGRAL) or (isinstance(dt, T.DecimalType) and dt.scale == 0)
 
 
-def _java_regex_compiles(jpat: str) -> bool:
-    """Driver-side proof that a translated Java-dialect regex compiles on
-    the live JVM. ``rlike`` compiles its pattern at RUNTIME, so an invalid
-    form kills the whole job, not the row — and the Python-form gate alone
-    misses patterns Python accepts but Java rejects (non-ASCII named
-    groups, …; ADVICE r4). With no active session (driver-only tests) the
-    check is skipped optimistically."""
-    try:
-        from pyspark.sql import SparkSession
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            return True
-        spark._jvm.java.util.regex.Pattern.compile(jpat)
-        return True
-    except Exception:
-        return False
-
-
 def _kernel_pattern_search_udf(pat: str):
-    """Arrow-batched fallback match for the ``pattern`` keyword when the
-    Java translation does not compile: evaluates exactly the kernel's
-    compiled pattern (translated-Python form, raw-pattern fallback, or
-    every-string-fails when neither compiles — interpreter._compile_pattern).
+    """Arrow-batched match of the kernel's own regex, for a ``pattern``
+    keyword with no portable Java form (:class:`UnportablePattern`).
     Cold path for a handful of dialect-divergent patterns; NULLs pass
     through as False (the ``present`` gate owns null semantics, but the
     hoisted UDF must not crash)."""
     from pyspark.sql import functions as _F
 
-    from sparkschema.spec.ecma_pattern import translate_ecma_checked
-
-    try:
-        rx = re.compile(translate_ecma_checked(pat, "python"))
-    except re.error:
-        try:
-            rx = re.compile(pat)
-        except re.error:
-            rx = None
+    rx = kernel_regex(pat)
 
     @_F.pandas_udf("boolean")
     def fn(vals):
@@ -129,28 +102,10 @@ def _kernel_pattern_search_udf(pat: str):
         import pandas as pd
 
         return pd.Series(
-            [False if s is None else (rx is not None and bool(rx.search(s)))
-             for s in vals], dtype="boolean")
+            [False if s is None else bool(rx.search(s)) for s in vals],
+            dtype="boolean")
 
     return fn
-
-
-def _require_java_form(pat: str) -> str:
-    """Java translation for HOF-embedded pattern sites (patternProperties
-    matching over key arrays), where no Python fallback can run inside the
-    lambda: raises :class:`~sparkschema.spec.parser.SpecError` at COMPILE
-    time when the JVM rejects the translated form, instead of letting the
-    job crash at ``rlike`` evaluation (ADVICE r4)."""
-    from sparkschema.spec.ecma_pattern import translate_ecma_checked
-
-    jpat = translate_ecma_checked(pat, "java")
-    if not _java_regex_compiles(jpat):
-        from sparkschema.spec.parser import SpecError
-        raise SpecError("#/patternProperties",
-                        f"pattern {pat!r}: Java form does not compile; "
-                        f"not supported on typed columns (use the kernel "
-                        f"path for this spec)")
-    return jpat
 
 
 def _as_decimal_mod_fail_udf(mo_dec: Decimal):
@@ -830,16 +785,21 @@ class ColumnCompiler:
                                  "str.max.length", col, F.lit(str(mx))))
         pat = schema.get("pattern")
         if isinstance(pat, str):
-            from sparkschema.spec.ecma_pattern import translate_ecma_checked
-            jpat = translate_ecma_checked(pat, "java")
             # rlike = unanchored find, same as the reference's matcher.search(0);
-            # Java-uncompilable translation (Python-only constructs) falls
-            # back to an Arrow-batched kernel-dialect match (ADVICE r4)
-            matches = col.rlike(jpat) if _java_regex_compiles(jpat) \
-                else _kernel_pattern_search_udf(pat)(col)
+            # an uncompilable pattern fails every string like the kernel,
+            # and one without a portable Java form runs the kernel's regex
+            msg = ("str.pattern", col, F.lit(pat))
+            try:
+                jpat = java_regex(pat)
+                if jpat is None:
+                    matches = F.lit(False)
+                    msg = ("str.invalid.pattern", F.lit(pat))
+                else:
+                    matches = col.rlike(jpat)
+            except UnportablePattern:
+                matches = _kernel_pattern_search_udf(pat)(col)
             out.append(self._chk("pattern", f"{spath}/pattern", ipath,
-                                 present & ~matches, col,
-                                 "str.pattern", col, F.lit(pat)))
+                                 present & ~matches, col, *msg))
         fmt = schema.get("format")
         if isinstance(fmt, str) and fmt not in ("int32", "int64"):
             pred = format_predicate(fmt, col, self.formats)
@@ -968,14 +928,13 @@ class ColumnCompiler:
                             & chk.fail))
 
             patprops = schema.get("patternProperties")
-            kernel_rx = None
+            rxs = []
             if isinstance(patprops, dict):
-                from sparkschema.spec.interpreter import Validator
-                kernel_rx = Validator()
                 for pat, sub in patprops.items():
-                    rx = kernel_rx._compile_pattern(pat)
+                    rx = kernel_regex(pat)
                     if rx is None:
                         continue
+                    rxs.append(rx)
                     for k in names:
                         if rx.search(k):
                             el = col[k]
@@ -987,12 +946,6 @@ class ColumnCompiler:
             ap = schema.get("additionalProperties")
             if ap is not None and ap is not True:
                 declared = set(props.keys()) if isinstance(props, dict) else set()
-                rxs = []
-                if isinstance(patprops, dict):
-                    from sparkschema.spec.interpreter import Validator
-                    kv2 = kernel_rx or Validator()
-                    rxs = [r for r in (kv2._compile_pattern(p)
-                                       for p in patprops) if r is not None]
                 extras = [k for k in names
                           if k not in declared
                           and not any(r.search(k) for r in rxs)]
@@ -1060,12 +1013,28 @@ class ColumnCompiler:
                                      F.lit("null"), "obj.required.prop",
                                      F.lit(k)))
 
+        # key patterns in their Java form, skipping those the kernel skips;
+        # HOF lambdas cannot run the kernel's regex, so a pattern with no
+        # portable Java form refuses the spec at compile time
         patprops = schema.get("patternProperties")
-        if isinstance(patprops, dict):
+        jpats: dict[str, str] = {}
+        for pat in (patprops if isinstance(patprops, dict) else ()):
+            try:
+                jp = java_regex(pat)
+            except UnportablePattern:
+                from sparkschema.spec.parser import SpecError
+                raise SpecError("#/patternProperties",
+                                f"pattern {pat!r}: Java form does not "
+                                f"compile; not supported on typed columns "
+                                f"(use the kernel path for this spec)") from None
+            if jp is not None:
+                jpats[pat] = jp
+        if jpats:
             import dataclasses
-            for pat, sub in patprops.items():
-                flt = self._map_filter_by_key(col, pat)
-                vals = F.map_values(flt)
+            for pat, jp in jpats.items():
+                sub = patprops[pat]
+                vals = F.map_values(
+                    F.map_filter(col, lambda k, v: k.rlike(jp)))
                 # one check per INNER keyword of the subschema — kernel/
                 # reference attribution (a key's value failing "minimum"
                 # reports "minimum", not a patternProperties umbrella):
@@ -1088,17 +1057,11 @@ class ColumnCompiler:
         add = schema.get("additionalProperties")
         if add is not None and add is not True:
             declared = list(props.keys()) if isinstance(props, dict) else []
-            # translate like _map_filter_by_key does — the raw ECMA pattern
-            # in rlike could disagree with the patternProperties matching
-            # above on dialect-divergent constructs (review find r3)
-            pats = [_require_java_form(p)
-                    for p in patprops.keys()] if isinstance(patprops, dict) \
-                else []
 
             def is_extra(k: Column) -> Column:
                 cond = ~k.isin(declared) if declared else F.lit(True)
-                for p in pats:
-                    cond = cond & ~k.rlike(p)
+                for jp in jpats.values():
+                    cond = cond & ~k.rlike(jp)
                 return cond
 
             extras = F.filter(keys, is_extra)
@@ -1183,11 +1146,6 @@ class ColumnCompiler:
                         & ~F.coalesce(dep_ok, F.lit(False)),
                         col.cast("string"), "comp.no.schema"))
         return out
-
-    @staticmethod
-    def _map_filter_by_key(col: Column, pattern: str) -> Column:
-        jpat = _require_java_form(pattern)
-        return F.map_filter(col, lambda k, v: k.rlike(jpat))
 
     def _combinator_checks(self, schema, col, dt, spath, ipath, present) -> list[Check]:
         out: list[Check] = []

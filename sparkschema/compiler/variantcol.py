@@ -37,6 +37,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from sparkschema.compiler.formats_sql import format_predicate
+from sparkschema.spec.ecma_pattern import UnportablePattern, java_regex
 from sparkschema.spec.jsonvalue import is_number
 
 _DEC = "decimal(38,18)"
@@ -546,58 +547,18 @@ def _propname_ok(k: Column, schema: Any) -> Column:
     return ok
 
 
-def _checked_java_form(pat: str) -> str:
-    """Translate ``pat`` to the Java dialect AND prove the translation
-    compiles on the live JVM. The Python-form gate alone is not enough:
-    a pattern whose Python rewrite compiles while the Java form is
-    invalid (e.g. a non-ASCII named group ``(?<nmü>x)``, accepted by
-    Python, rejected by Java) previously reached ``rlike`` unverified and
-    crashed the whole job at evaluation time — the exact failure this
-    gate exists to prevent (ADVICE r4). Java-compile failure ⇒
-    :class:`VariantUnsupported` (kernel fallback). With no active JVM
-    (pure-driver unit tests) the check is skipped; any such pattern is
-    then only ever evaluated by the kernel anyway."""
-    from sparkschema.spec.ecma_pattern import translate_ecma_checked
-
-    jp = translate_ecma_checked(pat, "java")
-    try:
-        from pyspark.sql import SparkSession
-        spark = SparkSession.getActiveSession()
-        jvm = spark._jvm if spark is not None else None
-    except Exception:
-        jvm = None
-    if jvm is not None:
-        try:
-            jvm.java.util.regex.Pattern.compile(jp)
-        except Exception:
-            raise VariantUnsupported(
-                f"pattern {pat!r}: Java form does not compile") from None
-    return jp
-
-
 def _java_pattern(pat: str) -> str | None:
-    """Java regex for an ECMA pattern, gated like the kernel compiles it
-    (interpreter._compile_pattern).
+    """:func:`~sparkschema.spec.ecma_pattern.java_regex`, with no portable
+    Java form raised as :class:`VariantUnsupported` (kernel fallback).
 
     ``None`` when the pattern compiles in neither form. The callers then
     do what the kernel does: a ``pattern`` keyword fails every string
-    value (str.invalid.pattern, interpreter.py:356-359), a
-    ``patternProperties`` pattern is skipped. :class:`VariantUnsupported`
-    when only the translated form is uncompilable: the kernel's semantics
-    would come from the RAW pattern, so fall back to the kernel rather
-    than diverge on that edge."""
-    from sparkschema.spec.ecma_pattern import translate_ecma_checked
-
-    tp = translate_ecma_checked(pat, "python")
+    value (str.invalid.pattern), a ``patternProperties`` pattern is
+    skipped."""
     try:
-        re.compile(tp)
-    except re.error:
-        try:
-            re.compile(pat)
-        except re.error:
-            return None
-        raise VariantUnsupported(f"pattern {pat!r} untranslatable")
-    return _checked_java_form(pat)
+        return java_regex(pat)
+    except UnportablePattern as e:
+        raise VariantUnsupported(str(e)) from None
 
 
 def _compiled_patprops(schema: dict) -> list[tuple[str, Any]]:
@@ -1003,6 +964,8 @@ def _node_valid(n: _Node, schema: dict, depth: int) -> Column:
         for k in req:
             ok = ok & ~(n.present_obj & n.child(k).isNull())
 
+    # (java_pattern, subschema) pairs, proved on the JVM once per node
+    pairs = _compiled_patprops(schema)
     # key-only object keywords over json_object_keys(to_json(v)) — all
     # Catalyst-native (ObjectValidators.scala:16-35,128-171,173-258)
     if needs["k"]:
@@ -1025,7 +988,7 @@ def _node_valid(n: _Node, schema: dict, depth: int) -> Column:
             # allowed keys: declared properties ∪ patternProperties matches
             # (unmatched.intersect(remaining), ObjectConstraints4.scala:53)
             declared = list((props or {}).keys())
-            pats = [jp for jp, _ in _compiled_patprops(schema)]
+            pats = [jp for jp, _ in pairs]
 
             def allowed(k: Column) -> Column:
                 c = k.isin(declared) if declared else F.lit(False)
@@ -1056,7 +1019,6 @@ def _node_valid(n: _Node, schema: dict, depth: int) -> Column:
     if needs["m"]:
         isobj = n.present_obj
         entries = n.slot("m")
-        pairs = _compiled_patprops(schema)
         for jp, sub in pairs:
             def _pat_ok(jp=jp, sub=sub):  # bind per-pattern, 1-arg lambdas
                 return F.forall(

@@ -22,6 +22,9 @@ construct             ECMA-262                        Python / Java if untransla
 ``[]``                never matches                   Python: unterminated class
 ``[^]``               matches anything                Python: unterminated class
 lone ``{``            literal brace                   Java: dangling-metachar error
+``x{,n}``             literal text ``x{,n}`` (Annex   Python: quantifier ``{0,n}`` —
+                      B: not a quantifier)            the brace is escaped on
+                                                      both targets
 ``[\\s-a]`` (dash      literal '-' (shorthands are     Python AND Java: bad
 next to a shorthand)  not range endpoints)            character range — the dash
                                                       is escaped ``\\-``
@@ -48,9 +51,23 @@ letter                letter (Annex B)                meaning — emitted as the
 Escapes inside character classes and quantifier braces are scanned
 context-aware; anything beyond this table passes through untouched (and
 the corpus shows agreement there).
+
+Which regex each evaluator runs is decided here and nowhere else.
+:func:`kernel_regex` is the kernel's regex: the Python translation, else
+the raw pattern, else ``None`` (the pattern compiles in neither form: a
+``pattern`` keyword fails every string, a ``patternProperties`` entry is
+skipped, and the parser rejects it). :func:`java_regex` is the form the
+Catalyst paths hand to ``rlike``: ``None`` exactly when
+:func:`kernel_regex` is ``None``, otherwise the Java translation, proved
+to compile on the live JVM when a session is active. It raises
+:class:`UnportablePattern` when no Java form has the kernel's meaning —
+the kernel runs the raw pattern, or the JVM rejects the translation — and
+each caller then falls back to the kernel or refuses the spec.
 """
 
 from __future__ import annotations
+
+import re
 
 # ECMA WhiteSpace ∪ LineTerminator (incl. NBSP + BOM), for translating \s/\S
 _ECMA_WS = (" \\t\\n\\x0b\\f\\r\\u00a0\\u1680\\u2000-\\u200a"
@@ -282,10 +299,10 @@ def translate_ecma(pattern: str, target: str = "python") -> tuple[str, list[str]
                 i += 1
                 continue
             if ch == "{":
-                # lone { is a literal in ECMA; Java rejects a dangling brace
-                import re as _re
-                if target == "java" and not _re.match(
-                        r"\{\d+(,\d*)?\}", pattern[i:]):
+                # a { that does not start {n}, {n,} or {n,m} is literal in
+                # ECMA; Java rejects a dangling brace and Python reads
+                # {,n} as {0,n}
+                if not re.match(r"\{\d+(,\d*)?\}", pattern[i:]):
                     out.append("\\{")
                     i += 1
                     continue
@@ -312,3 +329,56 @@ def translate_ecma(pattern: str, target: str = "python") -> tuple[str, list[str]
         i += 1
 
     return "".join(out), warnings
+
+
+class UnportablePattern(Exception):
+    """No Java regex has the kernel's meaning for this pattern: the kernel
+    runs the raw pattern, or the JVM rejects the translated form."""
+
+
+def _kernel_form(pattern: str) -> tuple[re.Pattern | None, bool]:
+    """The kernel's compiled regex and whether it is the translation."""
+    try:
+        return re.compile(translate_ecma_checked(pattern, "python")), True
+    except re.error:
+        pass
+    try:  # translation should never be worse than the raw pattern
+        return re.compile(pattern), False
+    except re.error:
+        return None, False
+
+
+def kernel_regex(pattern: str) -> re.Pattern | None:
+    """The regex the kernel evaluates: the translated Python form, else the
+    raw pattern, else ``None`` when neither compiles."""
+    return _kernel_form(pattern)[0]
+
+
+def java_regex(pattern: str) -> str | None:
+    """The Java form for ``rlike``; ``None`` exactly when
+    :func:`kernel_regex` is ``None``.
+
+    ``rlike`` compiles its pattern at run time, so a form the JVM rejects
+    would kill the whole job, not the row: the translation is compiled
+    once on the live JVM here, and :class:`UnportablePattern` is raised
+    instead. With no active session (driver-only use) that proof is
+    skipped. :class:`UnportablePattern` is also raised when the kernel
+    runs the raw pattern, whose meaning no translation carries."""
+    rx, translated = _kernel_form(pattern)
+    if rx is None:
+        return None
+    if not translated:
+        raise UnportablePattern(f"pattern {pattern!r}: untranslatable")
+    jpat = translate_ecma_checked(pattern, "java")
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors.exceptions.captured import CapturedException
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.getActiveSession()
+    if spark is not None:
+        try:
+            spark._jvm.java.util.regex.Pattern.compile(jpat)
+        except (CapturedException, Py4JJavaError):  # PatternSyntaxException
+            raise UnportablePattern(
+                f"pattern {pattern!r}: Java form does not compile") from None
+    return jpat

@@ -50,6 +50,7 @@ import sys
 from typing import Any, Callable, NamedTuple
 
 from sparkschema.spec import messages as msg
+from sparkschema.spec.ecma_pattern import kernel_regex
 from sparkschema.spec.formats import DEFAULT_FORMATS
 from sparkschema.spec.jsonvalue import (
     as_decimal,
@@ -567,15 +568,7 @@ class Validator:
 
     def _compile_pattern(self, pat: str) -> re.Pattern | None:
         if pat not in self._pattern_cache:
-            from sparkschema.spec.ecma_pattern import translate_ecma_checked
-            translated = translate_ecma_checked(pat, "python")
-            try:
-                self._pattern_cache[pat] = re.compile(translated)
-            except re.error:
-                try:  # translation should never be worse than the raw pattern
-                    self._pattern_cache[pat] = re.compile(pat)
-                except re.error:
-                    self._pattern_cache[pat] = None
+            self._pattern_cache[pat] = kernel_regex(pat)
         return self._pattern_cache[pat]
 
     @staticmethod

@@ -16,9 +16,9 @@ Normalization handles the dialect deltas:
 
 from __future__ import annotations
 
-import re
 from typing import Any
 
+from sparkschema.spec.ecma_pattern import kernel_regex
 from sparkschema.spec.jsonvalue import is_number, parse_json
 from sparkschema.spec.registry import sniff_dialect
 
@@ -103,10 +103,10 @@ def _check(node: Any, path: str, dialect: str, sdepth: int = 0) -> None:
     if pat is not None:
         if not isinstance(pat, str):
             raise SpecError(path + "/pattern", "must be a string")
-        try:
-            re.compile(pat)
-        except re.error as e:
-            raise SpecError(path + "/pattern", f"invalid pattern: {e}") from None
+        if kernel_regex(pat) is None:
+            raise SpecError(path + "/pattern",
+                            "invalid pattern: compiles neither as ECMA-262 "
+                            "nor as a Python regex")
 
     enum = node.get("enum")
     if enum is not None and (not isinstance(enum, list) or not enum):

@@ -1,12 +1,24 @@
 """ECMA-262 pattern dialect shim: known-divergent constructs must behave
 like Nashorn's RegExpFactory (reference StringValidators.scala:16-50) on
-both the kernel (Python re) and the columnar (Java rlike) paths."""
+all three evaluation paths — the kernel (Python re), typed columns and
+VARIANT columns (Java rlike) — and only ``spec/ecma_pattern.py`` decides
+which regex each path runs."""
+
+import ast
+import json
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
 
+import sparkschema
 from sparkschema.compiler.columns import ColumnCompiler
-from sparkschema.spec.ecma_pattern import translate_ecma
+from sparkschema.compiler.variantcol import (VariantUnsupported,
+                                             json_valid_auto,
+                                             variant_valid_column)
+from sparkschema.spec.ecma_pattern import (UnportablePattern, java_regex,
+                                           translate_ecma)
+from sparkschema.spec.parser import SpecError
 from sparkschema.spec.registry import SpecRegistry
 
 # (pattern, value, ecma_matches) for constructs where raw Python/Java regex
@@ -46,6 +58,8 @@ DIVERGENT_CASES = [
     (r"\v", "\x0b", True),           # ECMA \v is VT, not Java's \v class
     (r"\v", " ", False),
     (r"\c1x", "\\c1x", True),         # \c + non-letter: literal "\c"
+    (r"^x{,3}$", "xx", False),       # Annex B: {,n} is literal text,
+    (r"^x{,3}$", "x{,3}", True),     # not Python's {0,n} quantifier
 ]
 
 
@@ -72,12 +86,148 @@ def test_columnar_matches_ecma_semantics(spark):
         assert bool(got[i][f"p{i}"]) is expected, (p, v)
 
 
+def test_variant_matches_ecma_semantics(spark):
+    """Third path over the same table, in parity with the kernel: each row
+    through ``variant_valid_column``, or ``json_valid_auto`` where the
+    pattern is not VARIANT-native."""
+    df = spark.createDataFrame(
+        [(i, json.dumps(v)) for i, (_, v, _) in enumerate(DIVERGENT_CASES)],
+        "i int, j string")
+    cols = []
+    for i, (p, _, _) in enumerate(DIVERGENT_CASES):
+        try:
+            c = variant_valid_column("j", {"pattern": p})
+        except VariantUnsupported:
+            c = json_valid_auto("j", {"pattern": p})
+        cols.append(c.alias(f"p{i}"))
+    got = {r.i: r for r in df.select("i", *cols).collect()}
+    for i, (p, v, expected) in enumerate(DIVERGENT_CASES):
+        assert bool(got[i][f"p{i}"]) is expected is kernel_matches(p, v), \
+            (p, v)
+
+
+def test_table_spec_accepts_ecma_only_patterns(spark):
+    """The parser rejects only what the kernel cannot compile: ECMA named
+    groups/backreferences and ``\\cX`` parse and give the kernel's
+    verdicts; a pattern that compiles in no form still fails at parse."""
+    from sparkschema.compiler.table import compile_table_spec
+
+    cases = [(r"^(?<y>[0-9]{4})-\k<y>$", ["2024-2024", "2024-2025"]),
+             (r"^\cJ$", ["\n", "J"])]
+    for pat, values in cases:
+        df = spark.createDataFrame([(v,) for v in values], "s string")
+        spec = {"type": "object",
+                "properties": {"s": {"type": "string", "pattern": pat}}}
+        cts = compile_table_spec(spec, df, key_cols=["s"])
+        bad = {r.value for r in cts.violations(df).collect()}
+        assert bad == {v for v in values if not kernel_matches(pat, v)}, pat
+        assert len(bad) == 1, pat
+    df = spark.createDataFrame([("x",)], "s string")
+    with pytest.raises(SpecError, match="invalid pattern"):
+        compile_table_spec({"properties": {"s": {"pattern": "("}}}, df,
+                           key_cols=["s"])
+
+
+def test_typed_invalid_pattern_reports_kernel_message(spark):
+    """A pattern that compiles in no form fails every string on a typed
+    column with the kernel's ``str.invalid.pattern`` row."""
+    from pyspark.sql import types as T
+
+    from sparkschema.spec.interpreter import Validator
+
+    [chk] = ColumnCompiler().compile_checks(
+        {"pattern": "("}, F.col("s"), T.StringType(), "#", "/")
+    df = spark.createDataFrame([("x",), (None,)], "s string")
+    got = df.select(chk.fail.alias("f"), chk.msg.alias("m")).collect()
+    [want] = Validator().validate({"pattern": "("}, "x")
+    assert [(r.f, r.m) for r in got] == [(True, want.msg), (False, want.msg)]
+
+
+# ------------------------------------------------------ Java regex gate
+
+# Python compiles the translation of a non-ASCII group name; Java
+# requires [A-Za-z][A-Za-z0-9]*
+_PY_ONLY_PATTERN = "(?<nmü>x)"
+
+
+def test_java_regex_compile_gate(spark):
+    assert java_regex("^a+b$")
+    assert java_regex("(") is None          # compiles in no form: skipped
+    with pytest.raises(UnportablePattern):
+        java_regex(_PY_ONLY_PATTERN)
+
+
+def test_columnar_pattern_java_invalid_falls_back_to_kernel(spark):
+    """A pattern whose Python form compiles but whose Java translation the
+    JVM rejects must NOT reach rlike (job crash at evaluation, ADVICE r4);
+    the scalar site falls back to an Arrow-batched kernel-dialect match."""
+    from sparkschema.compiler.table import compile_table_spec
+
+    df = spark.createDataFrame([("x",), ("y",), (None,)], "s string")
+    spec = {"type": "object",
+            "properties": {"s": {"type": "string",
+                                 "pattern": _PY_ONLY_PATTERN}}}
+    cts = compile_table_spec(spec, df, key_cols=["s"])
+    rows = cts.violations(df).collect()
+    bad = {r.value for r in rows if r.keyword == "pattern"}
+    assert bad == {"y"}
+
+
+def test_variant_pattern_java_invalid_raises_unsupported(spark):
+    assert variant_valid_column("j", {"pattern": "^a+$"}) is not None
+    with pytest.raises(VariantUnsupported):
+        variant_valid_column("j", {"pattern": _PY_ONLY_PATTERN})
+
+
+def test_patternproperties_java_invalid_loud_compile_error(spark):
+    """HOF-embedded sites can't run Python inside the lambda — the guard
+    converts the runtime job crash into a compile-time SpecError."""
+    from pyspark.sql import types as T
+
+    cc = ColumnCompiler()
+    dt = T.MapType(T.StringType(), T.IntegerType())
+    assert cc.compile_valid({"patternProperties": {"^v[0-9]+$": {}}},
+                            F.col("x"), dt) is not None
+    with pytest.raises(SpecError, match="Java form"):
+        cc.compile_valid({"patternProperties": {_PY_ONLY_PATTERN: {}}},
+                         F.col("x"), dt)
+
+
+def test_only_ecma_pattern_translates_or_jvm_compiles():
+    """No module but ``spec/ecma_pattern.py`` translates an ECMA pattern or
+    compiles one on the JVM: every path asks ``kernel_regex`` /
+    ``java_regex``."""
+    root = pathlib.Path(sparkschema.__file__).parent
+    banned = {"translate_ecma", "translate_ecma_checked"}
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "spec" / "ecma_pattern.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.alias):
+                hit = node.name in banned
+            elif isinstance(node, ast.Name):
+                hit = node.id in banned
+            elif isinstance(node, ast.Attribute):
+                hit = node.attr in banned or ast.unparse(node).endswith(
+                    "regex.Pattern.compile")
+            else:
+                continue
+            if hit:
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, offenders
+
+
 def test_java_lone_brace_escaped():
     # ECMA treats a dangling '{' as a literal; Java regex rejects it
     jpat, _ = translate_ecma("a{x", "java")
     assert jpat == r"a\{x"
     jpat2, _ = translate_ecma("a{2,3}", "java")
     assert jpat2 == "a{2,3}"  # real quantifiers untouched
+    # {,n} is no quantifier in ECMA: escaped for Python too, which would
+    # otherwise read it as {0,n}
+    assert translate_ecma("x{,3}", "python")[0] == r"x\{,3}"
+    assert translate_ecma("x{,3}", "java")[0] == r"x\{,3}"
 
 
 def test_formerly_warned_constructs_now_translate():

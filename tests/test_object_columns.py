@@ -44,6 +44,11 @@ def test_map_column_keywords_match_kernel(spark):
         {"properties": {"a": {}}, "additionalProperties": False},
         {"properties": {"a": {}}, "additionalProperties": {"maximum": 5}},
         {"dependencies": {"a": ["b"]}},
+        # a key pattern that compiles in neither form is skipped, as in
+        # the kernel, not refused
+        {"patternProperties": {"(": {"maximum": 0}}},
+        {"patternProperties": {"(": {"maximum": 0}},
+         "additionalProperties": False},
     ]
     cc = ColumnCompiler()
     kernel = Validator()

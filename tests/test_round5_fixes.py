@@ -1,6 +1,6 @@
 """Regression tests for the round-5 ADVICE fixes and VERDICT tasks:
 structural-nesting guards, checkpoint meta pinning, catalog-location
-equality, JVM-verified Java regex forms, and run_validation cache scopes."""
+equality and run_validation cache scopes."""
 
 import json
 import os
@@ -115,54 +115,6 @@ def test_ensure_bucketed_rejects_suffix_location(spark, tmp_path):
     got = {r.v for r in spark.table(name).collect()}
     assert got == {i + 100 for i in range(10)}
     spark.sql(f"drop table if exists {name}")
-
-
-# ------------------------------------------------------ Java regex gate
-
-# Python accepts non-ASCII named groups; Java requires [A-Za-z][A-Za-z0-9]*
-_PY_ONLY_PATTERN = "(?P<nmü>x)"
-
-
-def test_java_regex_compile_gate(spark):
-    from sparkschema.compiler.columns import _java_regex_compiles
-
-    assert _java_regex_compiles("^a+b$")
-    assert not _java_regex_compiles("(?<nmü>x)")
-
-
-def test_columnar_pattern_java_invalid_falls_back_to_kernel(spark):
-    """A pattern whose Python form compiles but whose Java translation the
-    JVM rejects must NOT reach rlike (job crash at evaluation, ADVICE r4);
-    the scalar site falls back to an Arrow-batched kernel-dialect match."""
-    from sparkschema.compiler.table import compile_table_spec
-
-    df = spark.createDataFrame([("x",), ("y",), (None,)], "s string")
-    spec = {"type": "object",
-            "properties": {"s": {"type": "string",
-                                 "pattern": _PY_ONLY_PATTERN}}}
-    cts = compile_table_spec(spec, df, key_cols=["s"])
-    rows = cts.violations(df).collect()
-    bad = {r.value for r in rows if r.keyword == "pattern"}
-    assert bad == {"y"}
-
-
-def test_variant_pattern_java_invalid_raises_unsupported(spark):
-    from sparkschema.compiler.variantcol import (VariantUnsupported,
-                                                 _checked_java_form)
-
-    assert _checked_java_form("^a+$")  # valid both dialects
-    with pytest.raises(VariantUnsupported):
-        _checked_java_form("(?<nmü>x)")
-
-
-def test_patternproperties_java_invalid_loud_compile_error(spark):
-    """HOF-embedded sites can't run Python inside the lambda — the guard
-    converts the runtime job crash into a compile-time SpecError."""
-    from sparkschema.compiler.columns import _require_java_form
-
-    assert _require_java_form("^v[0-9]+$")
-    with pytest.raises(SpecError, match="Java form"):
-        _require_java_form("(?<nmü>x)")
 
 
 # ------------------------------------------------------ validation scope
