@@ -16,6 +16,13 @@ an archive only when its ``(st_mtime_ns, st_size, st_ino)`` differs from
 the last read, so an archive rewritten in place (an ``addPyFile`` zip, say)
 is still picked up. A reused worker then pays for the re-read on its first
 task only. On Python 3.12 and later :func:`ready` does nothing.
+
+:func:`ready` runs when a worker loads a sparkschema function, not when
+the function runs: every Python-worker entry point is marked with
+:func:`on_load`, and unpickling the mark calls :func:`ready`. A worker
+unpickles a task's functions before it reads any input, so a worker whose
+tasks get no rows — an empty partition, or the second evaluation Catalyst
+adds when a filter reads a UDF's output — is served from the cache too.
 """
 
 from __future__ import annotations
@@ -23,6 +30,7 @@ from __future__ import annotations
 import collections
 import os
 import sys
+import types
 import zipimport
 
 # invalidations of a zipimporter: "reread" went to the archive,
@@ -91,3 +99,39 @@ def ready() -> None:
     _installed = True
     if sys.version_info < (3, 12):
         _install()
+
+
+class _LoadMark:
+    """Unpickles to a call of :func:`ready`."""
+
+    def __reduce__(self):
+        return _loaded, ()
+
+
+def _loaded() -> _LoadMark:
+    ready()
+    return _MARK
+
+
+_MARK = _LoadMark()
+
+
+def on_load(fn: types.FunctionType) -> types.FunctionType:
+    """A copy of ``fn`` that calls :func:`ready` in the process that
+    unpickles it. Mark every Python-worker entry point (a UDF, a
+    ``mapInPandas``/``mapInArrow`` kernel, an ``applyInPandas`` function)
+    with it, as a decorator under the UDF decorator or where the function
+    is handed to Spark.
+
+    cloudpickle pickles a function's attributes with it when it pickles
+    the function by value; the copy is not reachable under its module and
+    name, so it is pickled by value even when ``fn`` is a module-level
+    function that would be pickled by reference."""
+    out = types.FunctionType(fn.__code__, fn.__globals__, fn.__name__,
+                             fn.__defaults__, fn.__closure__)
+    for attr in ("__kwdefaults__", "__qualname__", "__doc__", "__module__",
+                 "__annotations__"):
+        setattr(out, attr, getattr(fn, attr))
+    out.__dict__.update(fn.__dict__)
+    out._sparkschema_ready = _MARK
+    return out

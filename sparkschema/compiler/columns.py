@@ -31,8 +31,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sparkschema._worker import ready
+from sparkschema._worker import on_load
 from sparkschema.compiler.formats_sql import format_predicate
+from sparkschema.compiler.sqltext import functions_for
 from sparkschema.spec import messages as msg_catalog
 from sparkschema.spec.ecma_pattern import (UnportablePattern, java_regex,
                                            kernel_regex)
@@ -97,8 +98,8 @@ def _kernel_pattern_search_udf(pat: str):
     rx = kernel_regex(pat)
 
     @_F.pandas_udf("boolean")
+    @on_load
     def fn(vals):
-        ready()
         import pandas as pd
 
         return pd.Series(
@@ -119,8 +120,8 @@ def _as_decimal_mod_fail_udf(mo_dec: Decimal):
     from pyspark.sql import functions as _F
 
     @_F.pandas_udf("boolean")
+    @on_load
     def fn(vals):
-        ready()
         import pandas as pd
 
         from sparkschema.spec.jsonvalue import as_decimal
@@ -155,7 +156,8 @@ def _double_cmp(col: Column, v: Any, op: str) -> Column:
     are totally ordered by their decimal views, so the exact predicate
     compiles to a plain comparison against the DIRECTION-AWARE boundary
     double — the largest (le/lt) or smallest (ge/gt) double whose kernel
-    view satisfies the bound."""
+    view satisfies the bound. SQL text in
+    (:mod:`sparkschema.compiler.sqltext`), SQL text out."""
     import math
 
     from sparkschema.spec.jsonvalue import as_decimal
@@ -172,7 +174,7 @@ def _double_cmp(col: Column, v: Any, op: str) -> Column:
             f = math.nextafter(f, math.inf)
         elif op == "gt" and not fe > d:
             f = math.nextafter(f, math.inf)
-    lit = F.lit(f)
+    lit = functions_for(col).lit(f)
     # the boundary double is INCLUDED in the satisfying set by construction
     return (col <= lit) if op in ("le", "lt") else (col >= lit)
 
@@ -310,11 +312,13 @@ def grapheme_length_col(col: Column) -> Column:
     to one char via one regexp_replace, so F.length of the result is the
     cluster count. ASCII fast path: when codepoint count equals byte
     count and no CRLF is present, F.length is already the cluster count
-    (no regex runs — CASE branches evaluate lazily in codegen)."""
-    clusters = F.regexp_replace(col, _GRAPHEME_CLUSTER_RE, "X")
-    ascii_no_crlf = (F.length(col) == F.octet_length(col)) \
-        & ~col.contains(F.lit("\r\n"))
-    return F.when(ascii_no_crlf, F.length(col)).otherwise(F.length(clusters))
+    (no regex runs — CASE branches evaluate lazily in codegen). SQL text
+    in (:mod:`sparkschema.compiler.sqltext`), SQL text out."""
+    fx = functions_for(col)
+    clusters = fx.regexp_replace(col, _GRAPHEME_CLUSTER_RE, "X")
+    ascii_no_crlf = (fx.length(col) == fx.octet_length(col)) \
+        & ~col.contains(fx.lit("\r\n"))
+    return fx.when(ascii_no_crlf, fx.length(col)).otherwise(fx.length(clusters))
 
 
 def json_eq_col(col: Column, v: Any, dt: T.DataType) -> Column:
@@ -661,8 +665,14 @@ class ColumnCompiler:
         Pathological mo (scale > 18 or ≥ 16 significant digits) has no
         Catalyst-expressible exact view of a ≥2⁵³ double; that one tier
         drops to an Arrow-batched kernel twin (compile-time scoped: only
-        specs carrying such an mo pay it)."""
+        specs carrying such an mo pay it).
+
+        ``col`` may also be SQL text (:mod:`sparkschema.compiler.sqltext`),
+        as the VARIANT compiler passes it; the result is then SQL text.
+        The Arrow tiers need a Column, so that compiler rules their mo out
+        before calling."""
         from sparkschema.spec.jsonvalue import as_decimal, normalize_exact
+        fx = functions_for(col)
         mo_dec = normalize_exact(as_decimal(mo))
         if mo_dec == 0:
             # kernel parity: nothing is a multiple of 0 (interpreter
@@ -687,30 +697,30 @@ class ColumnCompiler:
             except (OverflowError, ValueError):
                 binary_mo_w = False
             dblw = col.cast("double")
-            nonf = dblw.isNaN() | (F.abs(dblw) == F.lit(float("inf")))
+            nonf = dblw.isNaN() | (fx.abs(dblw) == fx.lit(float("inf")))
             if binary_mo_w:
                 # IEEE fmod exact for binary-representable mo
-                return F.when(nonf, F.lit(True)).otherwise(
-                    F.coalesce((dblw % F.lit(float(mo_dec))) != 0,
-                               F.lit(True)))
+                return fx.when(nonf, fx.lit(True)).otherwise(
+                    fx.coalesce((dblw % fx.lit(float(mo_dec))) != 0,
+                                fx.lit(True)))
             # a DECIMAL-literal mo wider than 38 digits that is NOT a
             # double (e.g. 1E+40): the old fmod against its neighboring
             # double silently passed values the kernel flags (review
             # find r4) — take the kernel's own exact view per row
-            return F.when(nonf, F.lit(True)).otherwise(
-                F.coalesce(_as_decimal_mod_fail_udf(mo_dec)(dblw),
-                           F.lit(True)))
+            return fx.when(nonf, fx.lit(True)).otherwise(
+                fx.coalesce(_as_decimal_mod_fail_udf(mo_dec)(dblw),
+                            fx.lit(True)))
 
         if statically_integer(dt):
             if is_whole_mo:
                 if not -2 ** 63 <= mo_dec < 2 ** 63:
                     # mo exceeds int64: the only int64 multiple is 0
                     return col != 0
-                return (col % F.lit(int(mo_dec))) != 0
+                return (col % fx.lit(int(mo_dec))) != 0
             scale = min(s, 18)
-            return (col.cast(f"decimal(38,{scale})") % F.lit(mo_dec)) != 0
+            return (col.cast(f"decimal(38,{scale})") % fx.lit(mo_dec)) != 0
         if isinstance(dt, T.DecimalType):
-            return (col % F.lit(mo_dec)) != 0
+            return (col % fx.lit(mo_dec)) != 0
 
         # double / float columns
         dbl = col.cast("double")
@@ -722,9 +732,9 @@ class ColumnCompiler:
             # 2^53 its verdict provably equals the kernel's shortest-repr
             # view, above it the exact-binary view — one expression, no
             # range split, no UDF tier.
-            nonfinite_ = dbl.isNaN() | (F.abs(dbl) == F.lit(float("inf")))
-            return F.when(nonfinite_, F.lit(True)) \
-                    .otherwise((col % F.lit(float(mo_dec))) != 0)
+            nonfinite_ = dbl.isNaN() | (fx.abs(dbl) == fx.lit(float("inf")))
+            return fx.when(nonfinite_, fx.lit(True)) \
+                    .otherwise((col % fx.lit(float(mo_dec))) != 0)
 
         if s > 18:
             # the round-trip guard below is only valid when the cast
@@ -732,16 +742,16 @@ class ColumnCompiler:
             # multiple like 1e-19 rounds to 0 at scale 18 and was flagged
             # (review find r4, the columnar twin of the variant-path
             # binary-mo fix) — every value takes the kernel-exact view
-            nonfinite_s = dbl.isNaN() | (F.abs(dbl) == F.lit(float("inf")))
-            return F.when(nonfinite_s, F.lit(True)).otherwise(
-                F.coalesce(_as_decimal_mod_fail_udf(mo_dec)(dbl),
-                           F.lit(True)))
+            nonfinite_s = dbl.isNaN() | (fx.abs(dbl) == fx.lit(float("inf")))
+            return fx.when(nonfinite_s, fx.lit(True)).otherwise(
+                fx.coalesce(_as_decimal_mod_fail_udf(mo_dec)(dbl),
+                            fx.lit(True)))
 
         scale = min(max(s, 12), 18)
         dcol = col.cast(f"decimal(38,{scale})")
         roundtrips = dcol.isNotNull() & (dcol.cast("double") == dbl)
-        base_fail = F.when(roundtrips, (dcol % F.lit(mo_dec)) != 0) \
-                     .otherwise(F.lit(True))
+        base_fail = fx.when(roundtrips, (dcol % fx.lit(mo_dec)) != 0) \
+                     .otherwise(fx.lit(True))
 
         import decimal as _dec
         M = int(mo_dec.scaleb(s, _dec.Context(prec=60)))  # scaleb rounds at
@@ -751,8 +761,8 @@ class ColumnCompiler:
             # (v·10^s) mod M = ((v mod M)·(10^s mod M)) mod M, with the
             # product done in decimal because it can exceed 2^53.
             t = pow(10, s, M)
-            vm = F.pmod(dbl, F.lit(float(M))).cast("decimal(20,0)")
-            big_fail = F.pmod(vm * F.lit(t), F.lit(M)) != 0
+            vm = fx.pmod(dbl, fx.lit(float(M))).cast("decimal(20,0)")
+            big_fail = fx.pmod(vm * fx.lit(t), fx.lit(M)) != 0
         else:
             # pathological mo (≥16 significant digits or scale >18, e.g.
             # multipleOf 10^26): no Catalyst-expressible view of the
@@ -766,9 +776,9 @@ class ColumnCompiler:
         # NaN/±Inf are not JSON numbers (the kernel never sees them); on a
         # double column they are never a multiple of anything — and they
         # must not reach the decimal casts, which throw under ANSI mode
-        nonfinite = dbl.isNaN() | (F.abs(dbl) == F.lit(float("inf")))
-        return (F.when(nonfinite, F.lit(True))
-                 .when(F.abs(dbl) >= F.lit(float(2 ** 53)), big_fail)
+        nonfinite = dbl.isNaN() | (fx.abs(dbl) == fx.lit(float("inf")))
+        return (fx.when(nonfinite, fx.lit(True))
+                 .when(fx.abs(dbl) >= fx.lit(float(2 ** 53)), big_fail)
                  .otherwise(base_fail))
 
     def _string_checks(self, schema, col, spath, ipath, present) -> list[Check]:

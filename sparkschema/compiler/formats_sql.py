@@ -5,15 +5,19 @@ internal/validators/DefaultFormats.scala:18-29): each named format maps a
 string/number column to a boolean Column. Everything stays inside
 whole-stage codegen — regex via ``rlike``, timestamps via ``try_to_timestamp``
 — no Python in the hot path. Unknown format names compile to ``lit(True)``
-(StringValidators.scala:120)."""
+(StringValidators.scala:120).
+
+Every builder also takes SQL text (:class:`~sparkschema.compiler.sqltext.Sql`)
+for the VARIANT compiler and then returns SQL text: the function namespace
+comes from the input (:func:`~sparkschema.compiler.sqltext.functions_for`)."""
 
 from __future__ import annotations
 
 from typing import Callable
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
+from sparkschema.compiler.sqltext import functions_for
 from sparkschema.spec.formats import (
     EMAIL_RE,
     HOSTNAME_RE,
@@ -43,15 +47,17 @@ def _rx(pattern: str) -> Callable[[Column], Column]:
 def _datetime(c: Column) -> Column:
     # ISO-8601 with offset (reference: OffsetDateTime.parse,
     # DefaultFormats.scala:33-44); accept Z or numeric offsets
-    cleaned = F.regexp_replace(c, r"[zZ]$", "+00:00")
+    fx = functions_for(c)
+    cleaned = fx.regexp_replace(c, r"[zZ]$", "+00:00")
     return (
-        F.try_to_timestamp(cleaned, F.lit("yyyy-MM-dd'T'HH:mm:ss[.SSSSSS][.SSS]XXX")).isNotNull()
-        | F.try_to_timestamp(cleaned, F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")).isNotNull()
+        fx.try_to_timestamp(cleaned, fx.lit("yyyy-MM-dd'T'HH:mm:ss[.SSSSSS][.SSS]XXX")).isNotNull()
+        | fx.try_to_timestamp(cleaned, fx.lit("yyyy-MM-dd'T'HH:mm:ssXXX")).isNotNull()
     )
 
 
 def _date(c: Column) -> Column:
-    return F.try_to_timestamp(c, F.lit("yyyy-MM-dd")).isNotNull() & c.rlike(r"^\d{4}-\d{2}-\d{2}$")
+    fx = functions_for(c)
+    return fx.try_to_timestamp(c, fx.lit("yyyy-MM-dd")).isNotNull() & c.rlike(r"^\d{4}-\d{2}-\d{2}$")
 
 
 def _int32(c: Column) -> Column:
@@ -71,8 +77,9 @@ def _int64(c: Column) -> Column:
 def _whole_double(c: Column) -> Column:
     """Integer-valued check on a double: every |v| >= 2^53 is whole;
     below, floor-compare (floor(double) -> long saturates past 2^63)."""
-    return F.when(F.abs(c) >= F.lit(float(2 ** 53)), F.lit(True)) \
-            .otherwise(c == F.floor(c))
+    fx = functions_for(c)
+    return fx.when(fx.abs(c) >= fx.lit(float(2 ** 53)), fx.lit(True)) \
+             .otherwise(c == fx.floor(c))
 
 
 def int_format_double(c: Column, name: str) -> Column:
@@ -98,7 +105,7 @@ SQL_FORMATS: dict[str, Callable[[Column], Column]] = {
     "ipv4": _rx(_IPV4_RE),
     "ipv6": _rx(_IPV6_RE),
     "uri": _rx(_URI_RE),
-    "hostname": lambda c: (F.length(c) <= 253) & c.rlike(HOSTNAME_RE.pattern),
+    "hostname": lambda c: (functions_for(c).length(c) <= 253) & c.rlike(HOSTNAME_RE.pattern),
     "email": _rx(EMAIL_RE.pattern),
     "uuid": _rx(UUID_RE.pattern),
     # `regex` (compilability of the value as a regex) is inherently
@@ -113,5 +120,5 @@ def format_predicate(name: str, col: Column,
                      extra: dict[str, Callable[[Column], Column]] | None = None) -> Column:
     fn = (extra or {}).get(name) or SQL_FORMATS.get(name)
     if fn is None:
-        return F.lit(True)  # unknown format ⇒ success
+        return functions_for(col).lit(True)  # unknown format ⇒ success
     return fn(col)

@@ -21,8 +21,10 @@ that makes every zipimporter re-read its archive's central directory —
 on Spark 4.1.2 and Python 3.11, 12 importers over ``pyspark.zip`` (1,328
 entries) and 4 over the py4j zip and the ``spark-core`` jar, about
 0.3–0.8 CPU-s per task even in a reused worker. The call itself costs
-0.06 ms. Both UDF bodies call :func:`sparkschema._worker.ready`, after
-which a reused worker re-reads an archive only when it changed.
+0.06 ms. Both UDFs are marked with :func:`sparkschema._worker.on_load`,
+so a worker that loads either — even for a task with no rows — calls
+:func:`~sparkschema._worker.ready`, after which it re-reads an archive
+only when it changed.
 """
 
 from __future__ import annotations
@@ -34,7 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sparkschema._worker import ready
+from sparkschema._worker import on_load
 
 VIOLATION_ARRAY_TYPE = T.ArrayType(T.StructType([
     T.StructField("keyword", T.StringType()),
@@ -97,8 +99,8 @@ def _make_udfs(schema: Any, registry, dialect: str | None):
         return state["v"]
 
     @F.pandas_udf(T.BooleanType())
+    @on_load
     def is_valid_udf(s):
-        ready()
         import pandas as pd
 
         from sparkschema.spec.jsonvalue import parse_json
@@ -116,8 +118,8 @@ def _make_udfs(schema: Any, registry, dialect: str | None):
         return pd.Series([one(x) for x in s])
 
     @F.pandas_udf(VIOLATION_ARRAY_TYPE)
+    @on_load
     def violations_udf(s):
-        ready()
         import pandas as pd
 
         from sparkschema.spec.jsonvalue import parse_json

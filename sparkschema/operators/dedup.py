@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sparkschema._worker import ready
+from sparkschema._worker import on_load
 
 # ---------------------------------------------------------------------------
 # signature-impl auto-selection
@@ -189,8 +189,8 @@ def _minhash_sig_udf(num_hashes: int, shingle_k: int, seed: int):
                     dtype=np.uint64)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
+    @on_load
     def sig_udf(texts):
-        ready()
         import re
 
         import pandas as pd
@@ -484,8 +484,8 @@ def _simhash_sig_udf(bits: int, shingle_k: int, seed: int):
     BITPOS = np.arange(bits, dtype=np.uint64)
 
     @F.pandas_udf(T.LongType())
+    @on_load
     def sig_udf(texts):
-        ready()
         import re
 
         import pandas as pd

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from sparkschema._worker import ready
+from sparkschema._worker import on_load
 from sparkschema.operators.stats import histogram
 
 
@@ -245,8 +245,8 @@ def ks_exact_by_group(df: DataFrame, group_col: str, value_col: str,
     tagged = df.select(group_col, value_col, F.lit(0).alias("__side")).unionByName(
         ref.select(group_col, value_col, F.lit(1).alias("__side")))
 
+    @on_load
     def ks(pdf):
-        ready()
         import numpy as np
         import pandas as pd
         a = np.sort(pdf.loc[pdf["__side"] == 0, value_col].to_numpy(dtype=float))

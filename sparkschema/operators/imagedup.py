@@ -27,12 +27,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sparkschema._worker import ready
+from sparkschema._worker import on_load
 
 
 @F.pandas_udf(T.LongType())
+@on_load
 def _phash_udf(bufs):
-    ready()
     import pandas as pd
 
     from sparkschema.functions.imagecodec import phash_bytes
@@ -52,7 +52,6 @@ def _phash_map_batches(it):
     5.4 s → 1.7 s for the 20 k-image / 2.6 GiB decode pass, hashes
     bit-identical (the decode kernel reads any buffer protocol object).
     """
-    ready()
     import numpy as np
     import pyarrow as pa
 
@@ -99,7 +98,7 @@ def image_phash_frame(df: DataFrame, bytes_col: str = "bytes",
         base = base.repartition(spread_partitions, "id")
     out_schema = T.StructType([base.schema["id"],
                                T.StructField("phash", T.LongType())])
-    return base.mapInArrow(_phash_map_batches, out_schema)
+    return base.mapInArrow(on_load(_phash_map_batches), out_schema)
 
 
 def image_phash_pairs(df: DataFrame, bytes_col: str = "bytes",

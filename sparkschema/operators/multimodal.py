@@ -18,7 +18,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from sparkschema._worker import ready
+from sparkschema._worker import on_load
 
 FEATURE_SCHEMA = ("image_id string, ok boolean, w int, h int, fmt string, "
                   "mean_r double, mean_g double, mean_b double, "
@@ -30,8 +30,8 @@ def extract_image_features(images: DataFrame, batch_hint: int = 2048) -> DataFra
     fmt, mean_r, mean_g, mean_b, std_gray)``. Corrupt buffers yield
     ``ok=false`` rows instead of failing the task."""
 
+    @on_load
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ready()
         import numpy as np
 
         from sparkschema.functions.imagecodec import CorruptImage, decode
@@ -79,8 +79,8 @@ def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
     ``(image_id, bytes)`` with the payload re-encoded at (out_w, out_h).
     Demonstrates a mutate-and-reencode batch kernel."""
 
+    @on_load
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ready()
         import numpy as np
 
         from sparkschema.functions.imagecodec import CorruptImage, decode, encode
@@ -111,8 +111,8 @@ def frame_sample_stub(videos: DataFrame, every_n: int = 30) -> DataFrame:
     environment; the batch interface and output schema are the real
     contract (``(video_id, frame_index, bytes)``)."""
 
+    @on_load
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ready()
         raise NotImplementedError(
             "video decode requires an external codec (ffmpeg); "
             "plug a decoder into frame_sample_stub.kernel")
@@ -125,8 +125,8 @@ def decode_external(images: DataFrame, fmt: str) -> DataFrame:
     """External image codec decode (real JPEG/PNG) — STUB, same contract as
     :func:`extract_image_features`'s decode step."""
 
+    @on_load
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ready()
         raise NotImplementedError(
             f"decoding external format {fmt!r} requires Pillow/libvips; "
             "the engine container format decodes via extract_image_features")

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from sparkschema._worker import ready
+from sparkschema._worker import on_load
 
 # C0 controls minus \t \n \r, plus DEL. Java∩RE2: \x escapes and
 # explicit ranges only — no character-class shorthands that diverge.
@@ -61,8 +61,8 @@ _CONTROL_CHARS = "".join(
 # is parsed through the active SparkContext at decoration time, which
 # would make this module unimportable before a session exists.
 @pandas_udf(StringType())
+@on_load
 def _nfc(s: pd.Series) -> pd.Series:
-    ready()
     # Series.str.normalize delegates to unicodedata.normalize('NFC')
     # element-wise and passes NULLs through untouched.
     return s.str.normalize("NFC")

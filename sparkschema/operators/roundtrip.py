@@ -17,12 +17,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sparkschema._worker import ready
+from sparkschema._worker import on_load
 
 
 @F.pandas_udf(T.DoubleType())
+@on_load
 def _psnr_udf(a, b):
-    ready()
     import math
 
     import pandas as pd

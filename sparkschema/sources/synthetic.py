@@ -23,7 +23,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkschema._worker import ready
+from sparkschema._worker import on_load
 from sparkschema.functions.imagecodec import FMT_CODES, encode, synth_pixels
 
 TOKENS = [
@@ -122,8 +122,8 @@ def images_df(
         corrupt_cut = 0 if is_ref else int(corrupt_fraction * 10_000)
         store_lossless = is_ref
 
+        @on_load
         def gen_bytes(it: Iterator) -> Iterator:
-            ready()
             for pdf in it:
                 bufs = []
                 for iid, ww, hh, ff, hc in zip(pdf["image_id"], pdf["w"], pdf["h"],

@@ -46,7 +46,6 @@ Known, documented deviations (SURVEY.md §7 watch list):
 from __future__ import annotations
 
 import re
-import sys
 from typing import Any, Callable, NamedTuple
 
 from sparkschema.spec import messages as msg
@@ -56,12 +55,18 @@ from sparkschema.spec.jsonvalue import (
     as_decimal,
     canonical,
     dump_json,
+    enter_deep_recursion,
     is_number,
     json_equal,
     json_type,
+    leave_deep_recursion,
     matches_type,
 )
 from sparkschema.spec.refs import MAX_DEPTH, RefError, RefResolver, Scope
+
+# _validate levels (about three Python frames each) after which a
+# validation raises the recursion limit for the rest of its run
+_DEEP_FRAMES = 100
 
 
 class Violation(NamedTuple):
@@ -102,10 +107,8 @@ class Validator:
         self._pattern_cache: dict[str, re.Pattern | None] = {}
         self._struct_depth = 0
         self._frames = 0
-        # headroom for the total-frame budget below (~3 Python frames per
-        # _validate level + caller stack); raise-only, never lowered
-        if sys.getrecursionlimit() < 15000:
-            sys.setrecursionlimit(15000)
+        # whether this validation raised the recursion limit (see _validate)
+        self._deep = False
 
     # -- public ------------------------------------------------------------
 
@@ -113,7 +116,12 @@ class Validator:
         """Validate one JSON value; return accumulated violations ([] = valid)."""
         if scope is None:
             scope = Scope(schema, "")
-        return self._validate(schema, value, scope, "#", "", 0)
+        try:
+            return self._validate(schema, value, scope, "#", "", 0)
+        finally:
+            if self._deep:
+                self._deep = False
+                leave_deep_recursion()
 
     def is_valid(self, schema: Any, value: Any, scope: Scope | None = None) -> bool:
         return not self.validate(schema, value, scope)
@@ -131,6 +139,12 @@ class Validator:
         # parse walk the same way.
         self._struct_depth += 1
         self._frames += 1
+        if self._frames == _DEEP_FRAMES and not self._deep:
+            # headroom for the total-frame budget below (~3 Python frames
+            # per level plus the caller's stack), held until validate()
+            # returns: only a deep validation changes the process limit
+            enter_deep_recursion()
+            self._deep = True
         try:
             if self._struct_depth > 200:
                 from sparkschema.spec.parser import SpecError

@@ -18,8 +18,11 @@ Python note: ``bool`` subclasses ``int``, so every type test checks
 
 from __future__ import annotations
 
+import contextlib
 import json
 import math
+import sys
+import threading
 from decimal import Decimal
 from typing import Any
 
@@ -35,6 +38,55 @@ from typing import Any
 #: stack-safe by construction, instead of each needing its own
 #: RecursionError guard inside an executor UDF (review find r5).
 PARSE_MAX_NESTING = 1000
+
+#: Recursion limit while a deep parse or validation runs: a document at
+#: :data:`PARSE_MAX_NESTING` needs more than Python's default 1000 frames
+#: in ``json.loads``, and the kernel's total frame budget (interpreter
+#: ``_frames``) about three Python frames per level.
+DEEP_RECURSION_LIMIT = 15000
+
+_deep_lock = threading.Lock()
+_deep_users = 0
+_saved_limit = 0
+
+
+def enter_deep_recursion() -> None:
+    """Raise the process-wide recursion limit to
+    :data:`DEEP_RECURSION_LIMIT` (never lower it) until the matching
+    :func:`leave_deep_recursion`. Nested and concurrent users share one
+    raise: the first to enter saves the limit, the last to leave restores
+    it, so no caller leaves the limit changed behind it."""
+    global _deep_users, _saved_limit
+    with _deep_lock:
+        if _deep_users == 0:
+            _saved_limit = sys.getrecursionlimit()
+            if _saved_limit < DEEP_RECURSION_LIMIT:
+                sys.setrecursionlimit(DEEP_RECURSION_LIMIT)
+        _deep_users += 1
+
+
+def leave_deep_recursion() -> None:
+    """Undo one :func:`enter_deep_recursion`."""
+    global _deep_users
+    with _deep_lock:
+        _deep_users -= 1
+        if _deep_users == 0 \
+                and sys.getrecursionlimit() == DEEP_RECURSION_LIMIT:
+            sys.setrecursionlimit(_saved_limit)
+
+
+@contextlib.contextmanager
+def deep_recursion():
+    """:func:`enter_deep_recursion` for the duration of a ``with`` block."""
+    enter_deep_recursion()
+    try:
+        yield
+    finally:
+        leave_deep_recursion()
+
+
+# brackets below which json.loads stays well inside the default limit
+_LOADS_SAFE_NESTING = 500
 
 
 def _reject_constant(name: str):
@@ -54,20 +106,19 @@ def parse_json(text: str) -> Any:
     """
     # C-speed gate for the kernel hot path: depth > N needs at least N
     # opening brackets, so almost every real document skips both the
-    # limit bump and the depth walk (brackets inside strings only
+    # limit raise and the depth walk (brackets inside strings only
     # over-count — the safe direction).
-    shallow = isinstance(text, str) and \
-        text.count("{") + text.count("[") <= PARSE_MAX_NESTING
-    if not shallow:
-        # a document allowed by the cap (≤1000 levels) must not die in
-        # json.loads under Python's default ~1000 recursion limit; same
-        # raise-only constant the interpreter uses for its frame budget
-        import sys
-        if sys.getrecursionlimit() < 15000:
-            sys.setrecursionlimit(15000)
+    brackets = text.count("{") + text.count("[") \
+        if isinstance(text, str) else 0
+    shallow = brackets <= PARSE_MAX_NESTING
     try:
-        value = json.loads(text, parse_float=Decimal,
-                           parse_constant=_reject_constant)
+        # json.loads recurses once per level: a document allowed by the
+        # cap (≤1000 levels) must not die under Python's default limit
+        # of 1000, which the caller's own frames already eat into
+        with contextlib.nullcontext() if brackets <= _LOADS_SAFE_NESTING \
+                else deep_recursion():
+            value = json.loads(text, parse_float=Decimal,
+                               parse_constant=_reject_constant)
     except RecursionError:
         # deeper than even the raised stack allows — uniform parse error
         raise ValueError(

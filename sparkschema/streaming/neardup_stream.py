@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from sparkschema._worker import ready
+from sparkschema._worker import on_load
 
 _STATE_SCHEMA = "ids ARRAY<STRING>, shs ARRAY<LONG>"
 _OUT_SCHEMA = T.StructType([
@@ -149,8 +149,8 @@ def streaming_signature_neardup(sigs: DataFrame, chunks: int = 8,
                            F.col("cc.chunk").alias("chunk"),
                            "id", "sh", "__ord"))
 
+    @on_load
     def update(key: tuple, pdfs: Iterable, state: GroupState):
-        ready()
         import numpy as np
         import pandas as pd
 

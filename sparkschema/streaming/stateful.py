@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from sparkschema._worker import ready
+from sparkschema._worker import on_load
 
 STATE_SCHEMA = "rows LONG, violations LONG, quarantined BOOLEAN"
 OUTPUT_SCHEMA = T.StructType([
@@ -66,8 +66,8 @@ def keyed_violation_state(stream_df: DataFrame, spec: Any, key_col: str,
         F.col(key_col).cast("string").alias("key"),
         (~cts.row_valid()).cast("long").alias("invalid"))
 
+    @on_load
     def update(key: tuple, pdfs: Iterable, state: GroupState):
-        ready()
         import pandas as pd
 
         if state.hasTimedOut:

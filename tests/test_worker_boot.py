@@ -119,3 +119,52 @@ def test_reused_worker_rereads_no_zip_directory(spark):
     for d in repeats:
         assert d["reread"] == 0
         assert d["cached"] > 0
+
+
+@needs_eager_zip_invalidation
+def test_worker_that_only_loads_the_kernel_is_ready(spark):
+    """A worker whose kernel tasks get no rows never runs the UDF body;
+    loading the UDF is enough. A filter leaves every partition empty in
+    front of the kernel; a later task of the same worker then has its
+    start-of-task invalidations served from the zip-directory cache.
+
+    The UDFs run in a worker pool of their own (PySpark keys worker pools
+    by the executor environment), so no earlier test's task warmed the
+    workers."""
+    import os
+    import uuid
+
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from sparkschema.compiler.jsoncol import json_valid_column
+
+    sc = spark.sparkContext
+    sc.environment["SPARKSCHEMA_TEST_POOL"] = uuid.uuid4().hex
+    try:
+        @F.pandas_udf(T.StringType())
+        def worker_state(ids):
+            # not a sparkschema function: loading it calls nothing
+            import pandas as pd
+
+            w = sys.modules.get("sparkschema._worker")
+            state = [os.getpid(), w is not None and w._installed,
+                     dict(w.counts) if w is not None else {}]
+            return pd.Series([json.dumps(state)] * len(ids))
+
+        empty = spark.range(0, 64, 1, 4).where(F.col("id") < 0) \
+            .select(F.format_string('{"k": %d}', "id").alias("doc"))
+        spec = {"properties": {"k": {"maximum": 20}}}
+        for _ in range(3):
+            assert empty.select(json_valid_column("doc", spec)).collect() == []
+            rows = [json.loads(r[0]) for r in spark.range(0, 8, 1, 4)
+                    .select(worker_state("id")).collect()]
+            ready = [(pid, counts) for pid, installed, counts in rows
+                     if installed]
+            if ready:
+                break
+        assert ready, "no worker that loaded the kernel UDF called ready()"
+        for _, counts in ready:
+            assert counts.get("cached", 0) > 0, counts
+    finally:
+        del sc.environment["SPARKSCHEMA_TEST_POOL"]
