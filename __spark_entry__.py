@@ -741,9 +741,10 @@ def _q_minhash_pairs_documents(spark, sf):
     the LSH pair set is a superset of the exact 5-gram-Jaccard ≥ 0.9 pair
     set (12 bands × 4 rows ⇒ per-pair miss probability ≈ 2.7e-6 at j=0.9).
     The oracle recomputes ``exact_pairs`` independently with DuckDB list
-    ops and asserts ``missed = 0``. Signatures use the Arrow-batched numpy
-    kernel (identical verified pairs to the expression path —
-    tests/test_pipeline_operators.py::test_minhash_numpy_kernel_identical_pairs)."""
+    ops and asserts ``missed = 0``. Signatures come from the Arrow-batched
+    numpy kernel, the only MinHash signature implementation; its emitted
+    jaccards are checked against an exact Python recomputation in
+    tests/test_pipeline_operators.py::test_minhash_pairs_match_exact_jaccard."""
     from sparkschema.operators.dedup import minhash_lsh_pairs
 
     d = _read(spark, sf, "documents").where(F.col("doc_id") < 60) \
@@ -752,8 +753,7 @@ def _q_minhash_pairs_documents(spark, sf):
                        F.concat(F.col("text"), F.lit(" tail tail")).alias("text"))
     corpus = d.unionByName(planted)
     pairs = minhash_lsh_pairs(corpus, "text", "doc_id", num_hashes=48,
-                              bands=12, shingle_k=5, jaccard_min=0.6,
-                              signature_impl="numpy") \
+                              bands=12, shingle_k=5, jaccard_min=0.6) \
         .select("id_a", "id_b")
     # shingle once per doc behind a barrier — an inline ngram_jaccard over
     # the crossJoin re-builds both interpreted shingle arrays per PAIR
@@ -823,9 +823,9 @@ def _q_simhash_documents(spark, sf):
     """Per-document SimHash, md5-hash variant: the full algorithm
     (normalize → 3-shingle → feature hash → per-bit majority vote) is
     recomputed independently by the DuckDB oracle — bit-for-bit
-    (VERDICT r1 #2). Production uses the faster xxhash64 variant
-    (operators.dedup.simhash_frame); the algorithms differ only in the
-    feature hash function."""
+    (VERDICT r1 #2). Production (operators.dedup.simhash_frame) runs the
+    Arrow-batched numpy kernel instead; the algorithms differ only in the
+    feature hash function (md5 here, a polynomial shingle hash there)."""
     from sparkschema.operators.dedup import simhash_md5_frame
 
     d = _read(spark, sf, "documents")

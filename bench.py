@@ -446,28 +446,18 @@ def bench_queries(spark, sf_dir: str, cpus: int,
         # stages (operators/caching.py).
         r["minhash_pairs_documents"] = timed(
             lambda: minhash_lsh_pairs(docs, "text", "doc_id", num_hashes=48,
-                                      bands=12, jaccard_min=0.6,
-                                      signature_impl="numpy").count(), runs=2)
+                                      bands=12, jaccard_min=0.6).count(),
+            runs=2)
         release_default_cache()
-        # signature-kernel record (VERDICT r4 next #4): the expr-vs-numpy
-        # gap the impl='auto' default decides on, on a corpus big enough
-        # to show it (TEXT_ROWS docs; the sf table is 500)
+        # signature-kernel record on a corpus big enough to show it
+        # (TEXT_ROWS docs; the sf table is 500)
         # bit_xor, not sum: the 64-bit signatures overflow a BIGINT sum
         # under ANSI; xor still forces every signature to evaluate
-        r["simhash_sigs_expr_100k"] = timed(
-            lambda: simhash_frame(text, "text", "doc_id", impl="expr")
-            .agg(F.bit_xor("simhash")).collect())
         r["simhash_sigs_numpy_100k"] = timed(
-            lambda: simhash_frame(text, "text", "doc_id", impl="numpy")
+            lambda: simhash_frame(text, "text", "doc_id")
             .agg(F.bit_xor("simhash")).collect())
-        r["minhash_sigs_expr_100k"] = timed(
-            lambda: minhash_signatures(text, "text", "doc_id", num_hashes=48,
-                                       impl="expr")
-            .agg(F.bit_xor(F.get(F.col("sig"), 0))).collect())
-        release_default_cache()
         r["minhash_sigs_numpy_100k"] = timed(
-            lambda: minhash_signatures(text, "text", "doc_id", num_hashes=48,
-                                       impl="numpy")
+            lambda: minhash_signatures(text, "text", "doc_id", num_hashes=48)
             .agg(F.bit_xor(F.get(F.col("sig"), 0))).collect())
         release_default_cache()
         return r

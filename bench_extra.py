@@ -118,24 +118,15 @@ def _one_group(spark, which: str, probes: dict) -> dict:
             r["minhash_pairs_documents"] = B.timed(
                 lambda: minhash_lsh_pairs(docs, "text", "doc_id",
                                           num_hashes=48, bands=12,
-                                          jaccard_min=0.6,
-                                          signature_impl="numpy").count(),
+                                          jaccard_min=0.6).count(),
                 runs=2)
             release_default_cache()
-            r["simhash_sigs_expr_100k"] = B.timed(
-                lambda: simhash_frame(text, "text", "doc_id", impl="expr")
-                .agg(F.bit_xor("simhash")).collect())
             r["simhash_sigs_numpy_100k"] = B.timed(
-                lambda: simhash_frame(text, "text", "doc_id", impl="numpy")
+                lambda: simhash_frame(text, "text", "doc_id")
                 .agg(F.bit_xor("simhash")).collect())
-            r["minhash_sigs_expr_100k"] = B.timed(
-                lambda: minhash_signatures(text, "text", "doc_id",
-                                           num_hashes=48, impl="expr")
-                .agg(F.bit_xor(F.get(F.col("sig"), 0))).collect())
-            release_default_cache()
             r["minhash_sigs_numpy_100k"] = B.timed(
                 lambda: minhash_signatures(text, "text", "doc_id",
-                                           num_hashes=48, impl="numpy")
+                                           num_hashes=48)
                 .agg(F.bit_xor(F.get(F.col("sig"), 0))).collect())
             release_default_cache()
             return r

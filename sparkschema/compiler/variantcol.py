@@ -53,6 +53,17 @@ _log = logging.getLogger(__name__)
 _DEC = "decimal(38,18)"
 _SIMPLE_KEY = re.compile(r"^[A-Za-z0-9_\-]+$")
 
+#: Iterations of Spark's Resolution batch a verdict may need, as counted
+#: by :func:`_valid`. The batch stops at ``spark.sql.analyzer.maxIterations``
+#: (100) and fails the query with "Max iterations (100) reached"; the
+#: count leaves out the 6 iterations a one-node spec takes and the one an
+#: expression-valued input adds. Nested ``properties`` are what reach it:
+#: level j costs j + 2 iterations (its ``try_variant_get`` chain resolves
+#: one call per iteration), so 11 levels (89) compile and 12 (103) take
+#: the Arrow kernel; ``items``, ``allOf`` and the other applicators cost
+#: 1-3 iterations a level.
+_MAX_ROUNDS = 92
+
 _UNSUPPORTED = ("$ref",)
 
 
@@ -627,7 +638,7 @@ def _check_supported(schema: dict) -> None:
             raise VariantUnsupported(kw)
 
 
-def _valid(v: Sql, schema: Any, depth: int) -> Sql:
+def _valid(v: Sql, schema: Any, rounds: int) -> Sql:
     """True iff the variant value at ``v`` satisfies ``schema``.
     SQL-NULL ``v`` (absent property) passes vacuously — ``required`` is the
     parent's business, exactly like the kernel.
@@ -635,9 +646,11 @@ def _valid(v: Sql, schema: Any, depth: int) -> Sql:
     The node's shared sub-expressions — ``schema_of_variant``, the numeric
     / string / array extractions, ``json_object_keys(to_json(v))`` — are
     bound once per row (:func:`_bind`); only the slots this node's
-    keywords actually read are materialized."""
-    if depth > 32:
-        raise VariantUnsupported("spec nesting too deep")
+    keywords actually read are materialized.
+
+    ``rounds`` estimates the analyzer iterations spent on the enclosing
+    nodes (see :data:`_MAX_ROUNDS`); past the budget the spec raises
+    :class:`VariantUnsupported` here instead of failing in analysis."""
     if schema is True:
         return S.lit(True)
     if schema is False:
@@ -645,7 +658,13 @@ def _valid(v: Sql, schema: Any, depth: int) -> Sql:
     if not isinstance(schema, dict):
         return S.lit(True)
     _check_supported(schema)
-    return _bind(v, _needs(schema), lambda n: _node_valid(n, schema, depth))
+    # the binding lambda resolves one round after its argument, and each
+    # try_variant_get nested in v (one per properties level below the
+    # nearest lambda variable) one round after the call inside it
+    rounds += 1 + v.text.count("try_variant_get(")
+    if rounds > _MAX_ROUNDS:
+        raise VariantUnsupported("spec nesting too deep for the analyzer")
+    return _bind(v, _needs(schema), lambda n: _node_valid(n, schema, rounds))
 
 
 def _valid_many(v: Sql, schemas: list) -> Sql:
@@ -667,16 +686,17 @@ def _valid_many(v: Sql, schemas: list) -> Sql:
             return v.isNull()
         if not isinstance(s, dict):
             return S.lit(True)
-        return _node_valid(n, s, 0)
+        return _node_valid(n, s, 1)  # rounds after the shared binding
 
     return _bind(v, union, lambda n: S.struct(
         *[_one(n, s).alias(f"q{i}") for i, s in enumerate(schemas)]))
 
 
-def _node_valid(n: _Node, schema: dict, depth: int) -> Sql:
+def _node_valid(n: _Node, schema: dict, rounds: int) -> Sql:
     """The verdict of one schema node: ``true`` AND-ed with one
     ``NOT (applies AND fails)`` term per keyword check, in keyword
-    order."""
+    order. A subschema costs ``rounds + 1``, or ``rounds + 2`` inside a
+    higher-order function's lambda (:func:`_valid`)."""
     v = n.v
     needs = _needs(schema)
     checks = [S.lit(True)]
@@ -902,14 +922,14 @@ def _node_valid(n: _Node, schema: dict, depth: int) -> Sql:
                                      != S.size(canon))))
         items = schema.get("items")
         if isinstance(items, (dict, bool)) and items is not True:
-            elem_ok = S.forall(arr, lambda e: _valid(e, items, depth + 1))
+            elem_ok = S.forall(arr, lambda e: _valid(e, items, rounds + 2))
             checks.append(~(isarr & ~elem_ok))
         elif isinstance(items, list):
             # positional tuple schemas + additionalItems
             # (TupleValidators.scala:44-108; interpreter.py:378-392)
             for i, sub in enumerate(items):
                 el = S.get(arr, i)  # SQL NULL past the end -> vacuous pass
-                el_ok = _valid(el, sub, depth + 1)
+                el_ok = _valid(el, sub, rounds + 1)
                 checks.append(~(isarr & (size > i) & ~el_ok))
             add = schema.get("additionalItems")
             if add is False:
@@ -918,18 +938,18 @@ def _node_valid(n: _Node, schema: dict, depth: int) -> Sql:
                 tail = S.slice(arr, len(items) + 1,
                                2147483647 - len(items) - 1)
                 tail_ok = S.forall(
-                    tail, lambda e: _valid(e, add, depth + 1))
+                    tail, lambda e: _valid(e, add, rounds + 2))
                 checks.append(~(isarr & (size > len(items)) & ~tail_ok))
         if "contains" in schema:
             has = S.exists(arr, lambda e: _valid(e, schema["contains"],
-                                                 depth + 1)
+                                                 rounds + 2)
                            & e.isNotNull())
             checks.append(~(isarr & ~has))
 
     props = schema.get("properties")
     if isinstance(props, dict):
         for k, sub in props.items():
-            child_ok = _valid(n.child(k), sub, depth + 1)
+            child_ok = _valid(n.child(k), sub, rounds + 1)
             checks.append(~(n.present_obj & ~child_ok))
     req = schema.get("required")
     if isinstance(req, list):
@@ -975,7 +995,7 @@ def _node_valid(n: _Node, schema: dict, depth: int) -> Sql:
                 elif isinstance(dv, str):  # draft-4 single-string form
                     dep_ok = S.array_contains(keys, dv)
                 elif isinstance(dv, (dict, bool)):
-                    dep_ok = _valid(v, dv, depth + 1)
+                    dep_ok = _valid(v, dv, rounds + 1)
                 else:
                     raise VariantUnsupported("dependencies value form")
                 checks.append(~(isobj & has & ~S.coalesce(dep_ok, n.false)))
@@ -988,7 +1008,7 @@ def _node_valid(n: _Node, schema: dict, depth: int) -> Sql:
         for jp, sub in pairs:
             pat_ok = S.forall(
                 S.filter(entries, lambda e, jp=jp: e["key"].rlike(jp)),
-                lambda e, sub=sub: _valid(e["value"], sub, depth + 1))
+                lambda e, sub=sub: _valid(e["value"], sub, rounds + 2))
             checks.append(~(isobj & ~pat_ok))
         ap = schema.get("additionalProperties")
         if isinstance(ap, dict):
@@ -1000,13 +1020,13 @@ def _node_valid(n: _Node, schema: dict, depth: int) -> Sql:
 
             ap_ok = S.forall(
                 S.filter(entries, _extra),
-                lambda e: _valid(e["value"], ap, depth + 1))
+                lambda e: _valid(e["value"], ap, rounds + 2))
             checks.append(~(isobj & ~ap_ok))
 
     for comb in ("allOf", "anyOf", "oneOf"):
         subs = schema.get(comb)
         if isinstance(subs, list) and subs:
-            conds = [_valid(v, sub, depth + 1) for sub in subs]
+            conds = [_valid(v, sub, rounds + 1) for sub in subs]
             if comb == "allOf":
                 agg = S.all_of(conds)
             elif comb == "anyOf":
@@ -1018,12 +1038,12 @@ def _node_valid(n: _Node, schema: dict, depth: int) -> Sql:
                 agg = agg == 1
             checks.append(~(n.present & ~agg))
     if "not" in schema:
-        checks.append(~(n.present & _valid(v, schema["not"], depth + 1)))
+        checks.append(~(n.present & _valid(v, schema["not"], rounds + 1)))
     if "if" in schema:
-        cond = _valid(v, schema["if"], depth + 1)
-        then_ok = _valid(v, schema["then"], depth + 1) \
+        cond = _valid(v, schema["if"], rounds + 1)
+        then_ok = _valid(v, schema["then"], rounds + 1) \
             if "then" in schema else S.lit(True)
-        else_ok = _valid(v, schema["else"], depth + 1) \
+        else_ok = _valid(v, schema["else"], rounds + 1) \
             if "else" in schema else S.lit(True)
         checks.append(~(n.present & ~S.when(cond, then_ok).otherwise(else_ok)))
     return S.all_of(checks)

@@ -1,7 +1,9 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-All hot paths are pure Catalyst expressions (higher-order functions over
-token/shingle arrays + hash-aggregations); no Python touches a row.
+The hot paths are Catalyst expressions (higher-order functions over
+token/shingle arrays + hash-aggregations), except the MinHash and SimHash
+signatures, which one Arrow-batched numpy kernel per hash family computes
+(:func:`_shingle_hashes` is their shared shingle hash).
 
 - exact: normalize → hash → groupBy (map-side combined; salted variant via
   operators.uniqueness for hot hashes);
@@ -17,21 +19,13 @@ token/shingle arrays + hash-aggregations); no Python touches a row.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sparkschema._worker import on_load
-
-# ---------------------------------------------------------------------------
-# signature-impl auto-selection
-
-# Above this input size the Arrow-batched numpy signature kernels win
-# decisively (~10× on the signature stage — BENCH.md known-costs, closed
-# per VERDICT r4 next #4); below it the pure-Catalyst expression path
-# keeps the zero-Python guarantee and avoids the Arrow round trip on
-# corpora where neither matters.
-_AUTO_KERNEL_BYTES = 64 * 1024 * 1024
 
 #: minhash_lsh_pairs exact-verify kernel gates (rationale at the use
 #: site): candidate-pair count at which the injectivity-certified
@@ -41,29 +35,6 @@ _AUTO_KERNEL_BYTES = 64 * 1024 * 1024
 _HASH_VERIFY_MIN_PAIRS = 1_000_000
 _SHINGLE_BROADCAST_MAX_DOCS = 100_000
 
-
-def _resolve_impl(impl: str, df: DataFrame) -> str:
-    """Resolve ``impl='auto'`` to 'numpy' or 'expr' from the size of the
-    DataFrame's underlying scan. Local files are summed directly; any
-    remote store (hdfs/s3/…) is by definition corpus-scale ⇒ numpy; a
-    frame with no traceable input files (in-memory test data) stays on
-    the expression path."""
-    if impl != "auto":
-        return impl
-    try:
-        from urllib.parse import unquote, urlparse
-
-        import os
-
-        total = 0
-        for f in df.inputFiles():
-            pr = urlparse(f)
-            if pr.scheme not in ("", "file"):
-                return "numpy"
-            total += os.path.getsize(unquote(pr.path))
-        return "numpy" if total >= _AUTO_KERNEL_BYTES else "expr"
-    except Exception:
-        return "expr"
 
 # ---------------------------------------------------------------------------
 # normalization + shingles (shared expression builders)
@@ -93,6 +64,31 @@ def char_shingles(col: Column, k: int = 5) -> Column:
             )
         )
     return F.get(F.transform(F.array(col), shingles_of), 0)
+
+
+# Java's \s, which normalized_text's regexp_replace matches (Python's \s
+# is Unicode-wide)
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+_POLY_BASE = 1099511628211  # FNV prime
+
+
+def _shingle_hashes(text: str, shingle_k: int):
+    """uint64 hashes of the character ``shingle_k``-grams of ``text``
+    normalized as :func:`normalized_text` does, one per position: the
+    shingle universe of :func:`char_shingles` (code points; the whole
+    string when shorter), each hashed as a polynomial in its code points.
+    Shared by the MinHash and SimHash signature kernels."""
+    import numpy as np
+
+    # Spark's trim strips only U+0020, where str.strip() strips any space
+    nt = _JAVA_WS.sub(" ", text.lower()).strip(" ")
+    cp = np.frombuffer(nt.encode("utf-32-le"), dtype=np.uint32) \
+           .astype(np.uint64)
+    m = max(cp.size - shingle_k + 1, 1)
+    h = np.zeros(m, dtype=np.uint64)
+    for j in range(min(shingle_k, cp.size)):
+        h = h * np.uint64(_POLY_BASE) + cp[j:m + j]
+    return h
 
 
 # ---------------------------------------------------------------------------
@@ -155,65 +151,26 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # MinHash + LSH
 
 
-def minhash_signature(col: Column, num_hashes: int = 64, shingle_k: int = 5,
-                      seed: int = 42) -> Column:
-    """Array of ``num_hashes`` minhash values for a text column, computed
-    entirely with HOFs: shingle → xxhash64(shingle, h) → array_min."""
-    sh = char_shingles(normalized_text(col), shingle_k)
-
-    def hasher(h: int):
-        return lambda s: F.xxhash64(s, F.lit(seed + h))
-
-    return F.array(*[F.array_min(F.transform(sh, hasher(h)))
-                     for h in range(num_hashes)])
-
-
 def _minhash_sig_udf(num_hashes: int, shingle_k: int, seed: int):
-    """Vectorized numpy minhash signature (Arrow-batched pandas UDF).
-
-    Same shingle universe as :func:`char_shingles` (k consecutive
-    codepoints of the normalized text; whole string when shorter), hashed
-    with a rolling polynomial base hash + ``num_hashes`` universal hashes
-    (a·h + b over uint64). One numpy pass per document instead of
-    ``num_hashes`` interpreted-HOF passes — the signature stage drops from
-    interpreted-expression-bound to memory-bandwidth-bound (VERDICT r1 #9).
-    A different (but equally valid) hash family than the expression path:
-    band buckets differ, the exact-Jaccard verify output does not."""
+    """Vectorized numpy minhash signature (Arrow-batched pandas UDF): the
+    shingle hashes of :func:`_shingle_hashes` through ``num_hashes``
+    universal hashes (a·h + b over uint64), minimized per lane in one
+    numpy pass per document."""
     import numpy as np
 
     rng = np.random.default_rng(seed)
     A = (rng.integers(1, 2 ** 62, num_hashes, dtype=np.uint64) << np.uint64(1)) | np.uint64(1)
     B = rng.integers(0, 2 ** 62, num_hashes, dtype=np.uint64)
-    P = np.uint64(1099511628211)  # FNV prime as polynomial base
-    POWS = np.array([P ** np.uint64(j) for j in range(shingle_k)][::-1],
-                    dtype=np.uint64)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     @on_load
     def sig_udf(texts):
-        import re
-
         import pandas as pd
-
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")  # Java \s, not Python's unicode \s
 
         def one(t):
             if t is None:
                 return None
-            nt = ws.sub(" ", t.lower()).strip()
-            cp = np.frombuffer(nt.encode("utf-32-le"), dtype=np.uint32) \
-                   .astype(np.uint64)
-            n = cp.size
-            if n < shingle_k:  # whole string is the single shingle
-                h = np.zeros(1, dtype=np.uint64)
-                for j in range(n):
-                    h = h * P + cp[j]
-                H = h
-            else:
-                m = n - shingle_k + 1
-                H = np.zeros(m, dtype=np.uint64)
-                for j in range(shingle_k):
-                    H += cp[j:m + j] * POWS[j]
+            H = _shingle_hashes(t, shingle_k)
             sig = np.full(num_hashes, np.iinfo(np.uint64).max, dtype=np.uint64)
             for lo in range(0, H.size, 1 << 15):  # bound the (H, hashes) 2D block
                 chunk = H[lo:lo + (1 << 15)]
@@ -228,71 +185,30 @@ def _minhash_sig_udf(num_hashes: int, shingle_k: int, seed: int):
 
 def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
                        num_hashes: int = 64, shingle_k: int = 5,
-                       seed: int = 42, impl: str = "expr",
-                       scope=None) -> DataFrame:
-    """Persisted ``(id, sig)`` signature table. The cache entry is owned
-    by ``scope`` (:class:`sparkschema.operators.caching.CacheScope`;
+                       seed: int = 42, scope=None) -> DataFrame:
+    """Persisted ``(id, sig)`` signature table from the Arrow-batched
+    numpy kernel (:func:`_minhash_sig_udf`). The cache entry is owned by
+    ``scope`` (:class:`sparkschema.operators.caching.CacheScope`;
     default: the process-wide scope) — release it after the last action.
 
-    ``impl='expr'`` (default): pure-Catalyst HOFs, zero Python on
-    executors. ``impl='numpy'``: the Arrow-batched kernel — ~an order of
-    magnitude faster on the signature stage (one vectorized pass instead
-    of ``num_hashes`` interpreted-HOF passes). ``impl='auto'``: numpy
-    above :data:`_AUTO_KERNEL_BYTES` of scanned input, expr below (see
-    :func:`_resolve_impl`).
-
-    The default stays 'expr' for the same reason as
-    :func:`simhash_frame`: the two impls are different hash families, so
-    raw signatures are only comparable within one impl — an 'auto'
-    default would flip emitted VALUES when a growing corpus crosses the
-    size threshold, poisoning any persisted signature store (review find
-    r5). :func:`minhash_lsh_pairs`, whose pair output is exact-verified,
-    defaults its ``signature_impl`` to 'auto' safely."""
-    impl = _resolve_impl(impl, df)
-    if impl == "numpy":
-        udf = _minhash_sig_udf(num_hashes, shingle_k, seed)
-        # a small input file arrives as one scan task; spread the Arrow
-        # batches across cores before the kernel runs
-        spread = df.select(F.col(id_col).alias("id"), F.col(text_col)) \
-                   .repartition(df.sparkSession.sparkContext.defaultParallelism, "id")
-        from sparkschema.operators.caching import default_scope
-        return (scope or default_scope()).persist(
-            spread.select("id", udf(F.col(text_col)).alias("sig")))
-    sh_col = char_shingles(normalized_text(F.col(text_col)), shingle_k)
-    shingled = df.select(F.col(id_col).alias("id"), sh_col.alias("sh")) \
-                 .repartition(df.sparkSession.sparkContext.defaultParallelism, "id")
-
-    # ONE interpreted-HOF pass instead of num_hashes passes (guide §1.2):
-    # the old shape ran array_min(transform(sh, xxhash64(·, seed+h)))
-    # per hash lane — 48 interpreted traversals of the shingle array per
-    # row. One F.aggregate carries a 48-wide running-minimum array and
-    # computes all 48 hashes per shingle in a single traversal: same
-    # hash family, same values (verified bit-identical over the 100 k-doc
-    # bench corpus; measured 10.2 s -> 4.2 s on that corpus). Init is
-    # Long.MAX so the running least() equals array_min exactly; NULL or
-    # (unreachable) empty shingle arrays keep the old all-NULL signature.
-    init = F.array_repeat(F.lit((1 << 63) - 1).cast("long"), num_hashes)
-
-    def _step(acc: Column, s: Column) -> Column:
-        hs = F.array(*[F.xxhash64(s, F.lit(seed + h))
-                       for h in range(num_hashes)])
-        return F.zip_with(acc, hs, lambda a, b: F.least(a, b))
-
-    sh = F.col("sh")
-    sig = F.when(sh.isNull() | (F.size(sh) == 0),
-                 F.array_repeat(F.lit(None).cast("long"), num_hashes)) \
-           .otherwise(F.aggregate(sh, init, _step))
-
+    Signatures are a pure function of the normalized text, ``num_hashes``,
+    ``shingle_k`` and ``seed``, whatever the corpus size, so a persisted
+    signature store stays comparable across runs."""
+    udf = _minhash_sig_udf(num_hashes, shingle_k, seed)
+    # a small input file arrives as one scan task; spread the Arrow
+    # batches across cores before the kernel runs
+    spread = df.select(F.col(id_col).alias("id"), F.col(text_col)) \
+               .repartition(df.sparkSession.sparkContext.defaultParallelism, "id")
     from sparkschema.operators.caching import default_scope
     return (scope or default_scope()).persist(
-        shingled.select("id", sig.alias("sig")))
+        spread.select("id", udf(F.col(text_col)).alias("sig")))
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
                       num_hashes: int = 64, bands: int = 16,
                       shingle_k: int = 5, jaccard_min: float = 0.7,
                       seed: int = 42, max_bucket: int = 1000,
-                      signature_impl: str = "auto", scope=None) -> DataFrame:
+                      scope=None) -> DataFrame:
     """Near-duplicate pairs ``(id_a, id_b, jaccard)`` with exact shingle
     Jaccard ≥ threshold, found via banded MinHash-LSH.
 
@@ -311,33 +227,24 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     3. **exact verify** — only surviving pairs join to shingle sets for
        the exact ``|∩|/|∪|``.
 
-    **Reproducibility note on ``signature_impl='auto'`` (the default):**
-    the expr and numpy signature kernels are different hash families, so
-    their LSH candidate recall differs — every emitted pair is still an
-    exact-verified true positive, but the FALSE-NEGATIVE set changes
-    when a growing corpus crosses the 64 MiB auto threshold, and
-    ``minhash_dedup`` survivors can churn between adjacent incremental
-    runs. Pipelines persisting dedup decisions across runs should pin
-    ``signature_impl`` ('expr' or 'numpy') explicitly; 'auto' is for
-    one-shot jobs where only within-run determinism matters.
+    Signatures come from :func:`minhash_signatures` (the numpy kernel,
+    one hash family at every corpus size), so the candidate set, and with
+    it the pair output, depends only on the documents and the
+    parameters. Every emitted pair is an exact-verified true positive;
+    a pair that shares no band bucket, or whose signature estimate falls
+    under the filter's margin, is missed.
     """
     rows = num_hashes // bands
 
-    # The signature table is computed ONCE and persisted. Two traps drove
-    # this shape (bench regression: 5k docs going from seconds to >15 min):
-    # (a) Catalyst's CollapseProject inlines a referenced projection per
-    #     use-site, so routing the 48-minhash array through a column ref
-    #     consumed by 48 F.get()s re-evaluates the whole array 48×;
-    # (b) higher-order functions are interpreted, not codegen'd, so the
-    #     shingle construction must not be inlined into each of the 48
-    #     transforms either. The repartition is the materialization
-    #     barrier; persist() makes the three consumers (buckets, estimate,
-    #     verify) share one computation — at real scale this is the
-    #     signature table you would write out anyway.
+    # The signature table is computed ONCE and persisted: the three
+    # consumers (buckets, estimate, verify) share one kernel pass — at
+    # real scale this is the signature table you would write out anyway.
+    # Looked up as a module attribute at call time, so a caller may wrap
+    # minhash_signatures (perfbench times it as dedup.signatures).
     from sparkschema.operators.caching import default_scope
     scope = scope or default_scope()
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_k,
-                              seed, impl=signature_impl, scope=scope)
+                              seed, scope=scope)
 
     band_arr = F.array(*[
         F.struct(F.lit(b).alias("band"),
@@ -466,51 +373,28 @@ def minhash_dedup(df: DataFrame, text_col: str, id_col: str,
 
 
 def _simhash_sig_udf(bits: int, shingle_k: int, seed: int):
-    """Vectorized numpy SimHash (Arrow-batched pandas UDF) — one pass per
-    document instead of ``bits`` interpreted per-bit filter passes (the
-    same treatment the minhash signature stage got, VERDICT r1 #9). Same
-    DISTINCT-shingle universe as :func:`char_shingles`; a different (but
-    equally valid) feature-hash family than the xxhash64 expression path,
-    so signatures differ between impls while near-dup Hamming semantics
-    hold."""
+    """Vectorized numpy SimHash (Arrow-batched pandas UDF): the DISTINCT
+    shingle hashes of :func:`_shingle_hashes` (``char_shingles`` is
+    distinct) through one universal hash, then a per-bit majority vote.
+    The batch :func:`simhash_frame` and the streaming
+    ``neardup_stream.streaming_simhash_neardup`` both run it, so their
+    signatures agree."""
     import numpy as np
 
     rng = np.random.default_rng(seed)
     A = (rng.integers(1, 2 ** 62, 1, dtype=np.uint64)[0] << np.uint64(1)) | np.uint64(1)
     B = rng.integers(0, 2 ** 62, 1, dtype=np.uint64)[0]
-    P = np.uint64(1099511628211)
-    POWS = np.array([P ** np.uint64(j) for j in range(shingle_k)][::-1],
-                    dtype=np.uint64)
     BITPOS = np.arange(bits, dtype=np.uint64)
 
     @F.pandas_udf(T.LongType())
     @on_load
     def sig_udf(texts):
-        import re
-
         import pandas as pd
-
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")  # Java \s, not Python's unicode
 
         def one(t):
             if t is None:
                 return None
-            nt = ws.sub(" ", t.lower()).strip()
-            cp = np.frombuffer(nt.encode("utf-32-le"), dtype=np.uint32) \
-                   .astype(np.uint64)
-            n = cp.size
-            if n < shingle_k:
-                h = np.zeros(1, dtype=np.uint64)
-                for j in range(n):
-                    h = h * P + cp[j]
-                H = h
-            else:
-                m = n - shingle_k + 1
-                H = np.zeros(m, dtype=np.uint64)
-                for j in range(shingle_k):
-                    H += cp[j:m + j] * POWS[j]
-            H = np.unique(H)              # char_shingles is DISTINCT
-            H = H * A + B                 # universal-hash mix
+            H = np.unique(_shingle_hashes(t, shingle_k)) * A + B
             # chunked bit-count: the full (H.size x bits) matrix is
             # ~0.5 GB for a 1M-shingle document x cores — bound the
             # block like the minhash kernel does (review find r4)
@@ -533,44 +417,26 @@ def _simhash_sig_udf(bits: int, shingle_k: int, seed: int):
 
 def simhash_frame(df: DataFrame, text_col: str, id_col: str,
                   bits: int = 64, seed: int = 42,
-                  shingle_k: int = 3, impl: str = "expr") -> DataFrame:
-    """``(id, simhash)`` for every document — the scale path.
-
-    ``impl='expr'`` (default, zero Python): the feature-hash array
-    materializes behind a repartition barrier before the ``bits`` per-bit
-    counts read it; without the barrier CollapseProject inlines the
-    shingle construction into all 64 filters (interpreted HOFs, 64×
-    recompute — same trap as minhash_lsh_pairs). ``impl='numpy'``: the
-    Arrow-batched kernel (~10×); ``impl='auto'`` picks numpy above
-    :data:`_AUTO_KERNEL_BYTES` of scanned input.
-
-    The default stays 'expr' because the two impls are DIFFERENT hash
-    families: raw signatures from this function are only comparable to
-    signatures produced by the same impl, so an 'auto' default would make
-    the emitted VALUES flip when a growing corpus crosses the size
-    threshold — poisoning any persisted signature store (review find r5).
-    Pair-producing operators whose output is exact-verified
-    (:func:`minhash_lsh_pairs`) default to 'auto' safely."""
-    impl = _resolve_impl(impl, df)
-    if impl == "numpy":
-        udf = _simhash_sig_udf(bits, shingle_k, seed)
-        spread = df.select(F.col(id_col).alias("id"), F.col(text_col)) \
-                   .repartition(df.sparkSession.sparkContext.defaultParallelism,
-                                "id")
-        return spread.select("id", udf(F.col(text_col)).alias("simhash"))
-    feats = char_shingles(normalized_text(F.col(text_col)), shingle_k)
-    hashed = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(feats, lambda t: F.xxhash64(t, F.lit(seed))).alias("hs"),
-    ).repartition(df.sparkSession.sparkContext.defaultParallelism, "id")
-    return hashed.select("id", _simhash_from_hashes(F.col("hs"), bits).alias("simhash"))
+                  shingle_k: int = 3) -> DataFrame:
+    """``(id, simhash)`` for every document from the Arrow-batched numpy
+    kernel (:func:`_simhash_sig_udf`); a NULL text gets a NULL
+    signature. Signatures are a pure function of the normalized text and
+    the parameters, so they stay comparable across runs and corpus
+    sizes."""
+    udf = _simhash_sig_udf(bits, shingle_k, seed)
+    spread = df.select(F.col(id_col).alias("id"), F.col(text_col)) \
+               .repartition(df.sparkSession.sparkContext.defaultParallelism,
+                            "id")
+    return spread.select("id", udf(F.col(text_col)).alias("simhash"))
 
 
 def _simhash_from_hashes(hashes: Column, bits: int) -> Column:
-    """NULL hash array (NULL text) yields a NULL signature — the old
-    fall-through gave every NULL document signature 0, pairing them all
-    with each other and with any real simhash-0 doc, while the numpy
-    impl returned NULL (review find r4).
+    """The SimHash of a feature-hash array column, as a bigint: bit i is
+    set iff at least half the hashes have bit i set. This is the
+    expression half of :func:`simhash_md5_frame`, whose SQL twin the
+    DuckDB oracle recomputes. A NULL hash array (NULL text) yields a NULL
+    signature, as the numpy kernel gives, never signature 0, which would
+    pair every NULL document with every other (review find r4).
 
     One interpreted-HOF pass (guide §1.2): the previous shape ran
     ``size(filter(hashes, bit i set))`` per bit — ``bits`` traversals of
@@ -608,45 +474,18 @@ def _simhash_from_hashes(hashes: Column, bits: int) -> Column:
     return F.when(hashes.isNull(), F.lit(None).cast("long")).otherwise(packed)
 
 
-def simhash(col: Column, bits: int = 64, seed: int = 42,
-            shingle_k: int = 3) -> Column:
-    """SimHash signature as a bigint: bit i is set iff features whose hash
-    has bit i set outnumber those that don't. Features are char k-shingles
-    (not whitespace tokens): short documents need many small features so a
-    local edit moves only a few votes and the Hamming distance stays small.
-
-    NOTE: as a bare expression the shingle construction is re-evaluated
-    once per bit (interpreted HOFs + projection collapse); for corpus-scale
-    use prefer :func:`simhash_frame`, which materializes feature hashes
-    behind a barrier first."""
-    feats = char_shingles(normalized_text(col), shingle_k)
-    hashes = F.transform(feats, lambda t: F.xxhash64(t, F.lit(seed)))
-    n = F.size(hashes)
-    # NB: HOF lambdas must have exactly the arity Spark expects — closures
-    # go through a factory, never through default-arg tricks
-    def bit_test(i: int):
-        return lambda h: F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1
-
-    acc = F.lit(0).cast("long")
-    for i in range(bits):
-        cnt = F.size(F.filter(hashes, bit_test(i)))
-        bit = F.shiftleft(F.lit(1).cast("long"), i)  # bit 63 wraps negative, fine
-        acc = acc + F.when(cnt * 2 >= n, bit).otherwise(F.lit(0).cast("long"))
-    return acc
-
-
 def simhash_md5_frame(df: DataFrame, text_col: str, id_col: str,
                       bits: int = 32, shingle_k: int = 3,
                       prefix_chars: int | None = None) -> DataFrame:
-    """``(id, simhash)`` using md5-derived feature hashes instead of
-    xxhash64 — bit-for-bit reproducible in any engine with md5 + hex
-    parsing (the DuckDB oracle twin recomputes it independently; see
-    __spark_entry__.oracle_sql()['simhash_documents']). xxhash64
-    (:func:`simhash_frame`) stays the production default — md5 is ~4×
-    slower — but this variant turns the simhash algorithm (shingling,
-    feature hashing, per-bit majority vote) into an oracle-checkable
-    query rather than a rows-only one. ``prefix_chars`` bounds the text
-    so the SQL twin stays cheap."""
+    """``(id, simhash)`` with md5-derived feature hashes, computed with
+    Catalyst expressions — bit-for-bit reproducible in any engine with
+    md5 + hex parsing (the DuckDB oracle twin recomputes it
+    independently; see __spark_entry__.oracle_sql()['simhash_documents']).
+    It turns the simhash algorithm (shingling, feature hashing, per-bit
+    majority vote) into an oracle-checkable query rather than a rows-only
+    one. Its signatures are not comparable with :func:`simhash_frame`'s,
+    the production path, which hashes shingles in the numpy kernel.
+    ``prefix_chars`` bounds the text so the SQL twin stays cheap."""
     col = F.col(text_col)
     if prefix_chars:
         col = F.substring(col, 1, prefix_chars)
@@ -721,11 +560,11 @@ def hamming_pairs(sigs: DataFrame, hash_col: str = "sh",
 
 def simhash_candidates(df: DataFrame, text_col: str, id_col: str,
                        chunks: int = 8, hamming_max: int = 12,
-                       seed: int = 42, impl: str = "expr") -> DataFrame:
+                       seed: int = 42) -> DataFrame:
     """Hamming-near document pairs via SimHash signatures + the shared
     chunk-pigeonhole bucketing (:func:`hamming_pairs` — see its recall
     contract)."""
-    base = simhash_frame(df, text_col, id_col, seed=seed, impl=impl) \
+    base = simhash_frame(df, text_col, id_col, seed=seed) \
         .select("id", F.col("simhash").alias("sh"))
     return hamming_pairs(base, "sh", "id", chunks, hamming_max)
 

@@ -7,8 +7,10 @@ signature table; a standing ingest stream can't self-join its whole
 history. The streaming shape is the same chunk-pigeonhole decomposition
 run against BOUNDED STATE:
 
-1. stateless Arrow signature pass — the numpy SimHash kernel
-   (``dedup._simhash_sig_udf``, no per-row Python) over each micro-batch;
+1. stateless Arrow signature pass over each micro-batch — the numpy
+   SimHash kernel (``dedup._simhash_sig_udf``) that batch
+   ``dedup.simhash_frame`` runs too, so a document gets the same
+   signature on either path;
 2. explode each 64-bit signature into ``chunks`` (chunk, value) bucket
    keys — the pigeonhole guarantee: pairs within Hamming distance
    < ``chunks`` share at least one bucket (``dedup.hamming_pairs``

@@ -50,22 +50,59 @@ def test_minhash_lsh_finds_planted_near_dups(spark, documents):
     assert all(r.jaccard > 0.6 for r in pairs.collect())
 
 
-def test_minhash_numpy_kernel_identical_pairs(spark, documents):
-    """The Arrow-batched numpy signature kernel (opt-in) must produce the
-    same exact-verified pair set as the pure-expression path — different
-    hash family, same candidate recall on the corpus, identical output
-    after the exact-Jaccard verify stage."""
+def test_minhash_pairs_match_exact_jaccard(spark, documents):
+    """Every planted near-duplicate is found, and every emitted jaccard is
+    the exact 5-gram Jaccard recomputed here in plain Python, at or above
+    ``jaccard_min``."""
+    import re
+
     base = documents.limit(5).select(
         (F.col("doc_id") + 100000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" extra")).alias("text"))
     df = documents.select("doc_id", "text").unionByName(base)
-    kw = dict(num_hashes=48, bands=12, jaccard_min=0.6)
-    p_expr = sorted((r.id_a, r.id_b, round(r.jaccard, 9)) for r in
-                    dedup.minhash_lsh_pairs(df, "text", "doc_id", **kw).collect())
-    p_np = sorted((r.id_a, r.id_b, round(r.jaccard, 9)) for r in
-                  dedup.minhash_lsh_pairs(df, "text", "doc_id",
-                                          signature_impl="numpy", **kw).collect())
-    assert p_expr == p_np and len(p_expr) >= 5
+    texts = {r.doc_id: r.text for r in df.collect()}
+
+    def shingles(t, k=5):
+        nt = re.sub(r"[ \t\n\x0b\f\r]+", " ", t.lower()).strip(" ")
+        return {nt[i:i + k] for i in range(len(nt) - k + 1)} or {nt}
+
+    def jaccard(a, b):
+        sa, sb = shingles(texts[a]), shingles(texts[b])
+        return len(sa & sb) / len(sa | sb)
+
+    got = {(r.id_a, r.id_b): r.jaccard for r in dedup.minhash_lsh_pairs(
+        df, "text", "doc_id", num_hashes=48, bands=12,
+        jaccard_min=0.6).collect()}
+    planted = {(r.doc_id - 100000, r.doc_id) for r in base.collect()}
+    assert len(planted) == 5 and planted <= got.keys()
+    for (a, b), j in got.items():
+        assert j == jaccard(a, b) and j >= 0.6, (a, b, j)
+
+
+def test_kernel_shingle_hashes_match_normalized_text(spark):
+    """The signature kernels hash the shingles of the text Spark's
+    ``normalized_text`` + ``char_shingles`` build, the sets the exact
+    verify compares: a drift between Python's and Spark's lowercasing or
+    whitespace handling would lose LSH recall without any error."""
+    k = 5
+    texts = ["\u00a0nbsp\u00a0and em\u2003space\u00a0",
+             "\u2003 lead em", "tab\tvt\x0bff\x0ccr\rlf\n  end  ",
+             "\u0130stanbul \u0130\u0130", "STRASSE \u1e9e GRO\u1e9e",
+             "\u039f\u0394\u039f\u03a3 \u039f\u03a3. \u03a3\u0391\u03a3",
+             "astral \U0001d518\U0001d52b\U0001f600\U0001f600 x",
+             "ab", "  Hi ", "\U0001f600", "", "\u00c0\u00c9\u00ce Mixed"]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    sh = dedup.char_shingles(dedup.normalized_text(F.col("text")), k)
+
+    def poly(s):
+        h = 0
+        for ch in s:
+            h = (h * dedup._POLY_BASE + ord(ch)) % 2 ** 64
+        return h
+
+    for r in df.select("i", sh.alias("sh")).collect():
+        got = set(dedup._shingle_hashes(texts[r.i], k).tolist())
+        assert got == {poly(s) for s in r.sh}, (texts[r.i], r.sh)
 
 
 def test_minhash_numpy_kernel_unicode_and_short(spark):
@@ -77,7 +114,7 @@ def test_minhash_numpy_kernel_unicode_and_short(spark):
         "doc_id long, text string")
     sigs = {r.id: r.sig for r in
             dedup.minhash_signatures(df, "text", "doc_id",
-                                     num_hashes=16, impl="numpy").collect()}
+                                     num_hashes=16).collect()}
     assert sigs[5] is None
     assert sigs[3] == sigs[4]                   # identical short docs
     same = sum(a == b for a, b in zip(sigs[1], sigs[2]))
@@ -101,12 +138,10 @@ def test_simhash_candidates(spark):
          (2, "the quick brown fox jumps over the lazy cat"),
          (3, "completely different words entirely unrelated text")],
         "doc_id long, text string")
-    for impl in ("expr", "numpy"):
-        cand = {(r.id_a, r.id_b): r.hamming
-                for r in dedup.simhash_candidates(df, "text", "doc_id",
-                                                  impl=impl).collect()}
-        assert (1, 2) in cand and cand[(1, 2)] <= 12, impl
-        assert (1, 3) not in cand, impl  # unrelated text exceeds hamming_max
+    cand = {(r.id_a, r.id_b): r.hamming
+            for r in dedup.simhash_candidates(df, "text", "doc_id").collect()}
+    assert (1, 2) in cand and cand[(1, 2)] <= 12
+    assert (1, 3) not in cand  # unrelated text exceeds hamming_max
 
 
 def test_simhash_numpy_kernel_separates_and_is_deterministic(spark):
@@ -118,9 +153,9 @@ def test_simhash_numpy_kernel_separates_and_is_deterministic(spark):
     rows += [(100 + i, rows[i][1] + "!") for i in range(5)]  # near-dups
     df = spark.createDataFrame(rows, "doc_id long, text string")
     a = {r.id: r.simhash for r in
-         dedup.simhash_frame(df, "text", "doc_id", impl="numpy").collect()}
+         dedup.simhash_frame(df, "text", "doc_id").collect()}
     b = {r.id: r.simhash for r in
-         dedup.simhash_frame(df, "text", "doc_id", impl="numpy").collect()}
+         dedup.simhash_frame(df, "text", "doc_id").collect()}
     assert a == b  # seeded, deterministic across runs
     ham = lambda x, y: bin((x ^ y) & ((1 << 64) - 1)).count("1")  # noqa: E731
     for i in range(5):
@@ -530,7 +565,7 @@ def test_minhash_verify_kernels_agree(spark, monkeypatch):
     def run():
         out = sorted(map(tuple, dd.minhash_lsh_pairs(
             df, "text", "doc_id", num_hashes=24, bands=6,
-            jaccard_min=0.5, signature_impl="expr").collect()))
+            jaccard_min=0.5).collect()))
         dd_release = __import__(
             "sparkschema.operators.caching",
             fromlist=["release_default_cache"]).release_default_cache

@@ -257,32 +257,6 @@ def test_grapheme_differential_on_unicode_delta_ranges(spark):
                           + "\n".join(problems[:10]))
 
 
-# ------------------------------------------------------ impl auto-select
-
-def test_signature_impl_auto_resolution(spark, tmp_path):
-    """impl='auto' routes big scans to the numpy kernel and keeps small /
-    in-memory frames on the zero-Python expression path (VERDICT r4 #4)."""
-    from sparkschema.operators.dedup import _resolve_impl
-
-    mem = spark.createDataFrame([(1, "x")], "id long, text string")
-    assert _resolve_impl("auto", mem) == "expr"     # no input files
-    assert _resolve_impl("expr", mem) == "expr"     # explicit wins
-    assert _resolve_impl("numpy", mem) == "numpy"
-
-    p = str(tmp_path / "small")
-    spark.range(100).selectExpr("id", "repeat('a', 10) as text") \
-        .write.parquet(p)
-    assert _resolve_impl("auto", spark.read.parquet(p)) == "expr"
-
-    import sparkschema.operators.dedup as dd
-    old = dd._AUTO_KERNEL_BYTES
-    try:
-        dd._AUTO_KERNEL_BYTES = 1          # everything is "big" now
-        assert _resolve_impl("auto", spark.read.parquet(p)) == "numpy"
-    finally:
-        dd._AUTO_KERNEL_BYTES = old
-
-
 # ------------------------------------------------ hostile-deep documents
 
 def test_total_frame_budget_violation_row_is_serializable():

@@ -36,7 +36,7 @@ def _batch_sigs(spark, rows):
     from sparkschema.operators.dedup import simhash_frame
     df = spark.createDataFrame(rows, "doc_id long, text string")
     return {r.id: r.simhash for r in
-            simhash_frame(df, "text", "doc_id", impl="numpy").collect()
+            simhash_frame(df, "text", "doc_id").collect()
             if r.simhash is not None}
 
 

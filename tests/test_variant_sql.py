@@ -187,3 +187,40 @@ def test_json_valid_auto_logs_the_path_it_took(spark, caplog):
     assert "VARIANT" in msg and "strict_spark_parse" in msg
     msg = one_record(schema={"multipleOf": 1e-20})
     assert "Arrow kernel" in msg and "pathological multipleOf" in msg
+
+
+def test_deep_nesting_takes_the_kernel_past_the_analyzer_limit(spark, caplog):
+    """Spark's analyzer resolves a VARIANT verdict in at most 100
+    iterations, and nested ``properties`` level j costs j + 2 of them:
+    12 and 15 levels take the Arrow kernel (and its verdicts) instead of
+    failing in analysis; 11 levels still take VARIANT."""
+    caplog.set_level(logging.DEBUG, logger="sparkschema")
+    kernel = Validator()
+
+    def nest(k, inner):
+        for _ in range(k):
+            inner = {"a": inner}
+        return inner
+
+    for k in (11, 12, 15):
+        spec = {"type": "integer", "minimum": 0}
+        for _ in range(k):
+            spec = {"properties": {"a": spec}}
+        docs = [json.dumps(nest(k, v)) for v in (1, -1, "x", 2.5)] + [
+            json.dumps(nest(k - 1, 5)), "{}", "[1]", "7"]
+        df = spark.createDataFrame(list(enumerate(docs)), "i int, j string")
+        caplog.clear()
+        col = json_valid_auto("j", spec)
+        msgs = [r.getMessage() for r in caplog.records
+                if r.name.startswith("sparkschema")]
+        assert len(msgs) == 1, msgs
+        if k == 11:
+            assert msgs[0].startswith("json_valid_auto: VARIANT;"), msgs
+        else:
+            assert "Arrow kernel for every row" in msgs[0], msgs
+            assert "too deep" in msgs[0], msgs
+        rows = df.select("i", col.alias("v")).collect()
+        assert len(rows) == len(docs)
+        for r in rows:
+            want = not kernel.validate(spec, parse_json(docs[r.i]))
+            assert r.v == want, (k, docs[r.i])
