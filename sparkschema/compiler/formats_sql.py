@@ -1,15 +1,14 @@
-"""Format registry — Catalyst ``Column`` builders.
+"""Format registry — Spark SQL predicate builders.
 
 The JVM-side twin of :mod:`sparkschema.spec.formats` (reference:
-internal/validators/DefaultFormats.scala:18-29): each named format maps a
-string/number column to a boolean Column. Everything stays inside
-whole-stage codegen — regex via ``rlike``, timestamps via ``try_to_timestamp``
-— no Python in the hot path. Unknown format names compile to ``lit(True)``
-(StringValidators.scala:120).
-
-Every builder also takes SQL text (:class:`~sparkschema.compiler.sqltext.Sql`)
-for the VARIANT compiler and then returns SQL text: the function namespace
-comes from the input (:func:`~sparkschema.compiler.sqltext.functions_for`)."""
+internal/validators/DefaultFormats.scala:18-29): each named format maps
+the SQL text (:class:`~sparkschema.compiler.sqltext.Sql`) of a
+string/number value to boolean SQL text, for the typed and the VARIANT
+compilers alike. Everything stays inside whole-stage codegen — regex via
+``rlike``, timestamps via ``try_to_timestamp`` — no Python in the hot
+path. Unknown format names compile to ``true`` (StringValidators.scala:120).
+A caller's format is a Column builder; :func:`format_predicate` binds its
+Column into the text."""
 
 from __future__ import annotations
 
@@ -17,7 +16,8 @@ from typing import Callable
 
 from pyspark.sql import Column
 
-from sparkschema.compiler.sqltext import functions_for
+from sparkschema.compiler import sqltext as S
+from sparkschema.compiler.sqltext import Sql
 from sparkschema.spec.formats import (
     EMAIL_RE,
     HOSTNAME_RE,
@@ -40,27 +40,25 @@ _IPV6_RE = (
 _URI_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*:[^\s]*$"
 
 
-def _rx(pattern: str) -> Callable[[Column], Column]:
+def _rx(pattern: str) -> Callable[[Sql], Sql]:
     return lambda c: c.rlike(pattern)
 
 
-def _datetime(c: Column) -> Column:
+def _datetime(c: Sql) -> Sql:
     # ISO-8601 with offset (reference: OffsetDateTime.parse,
     # DefaultFormats.scala:33-44); accept Z or numeric offsets
-    fx = functions_for(c)
-    cleaned = fx.regexp_replace(c, r"[zZ]$", "+00:00")
+    cleaned = S.regexp_replace(c, r"[zZ]$", "+00:00")
     return (
-        fx.try_to_timestamp(cleaned, fx.lit("yyyy-MM-dd'T'HH:mm:ss[.SSSSSS][.SSS]XXX")).isNotNull()
-        | fx.try_to_timestamp(cleaned, fx.lit("yyyy-MM-dd'T'HH:mm:ssXXX")).isNotNull()
+        S.try_to_timestamp(cleaned, S.lit("yyyy-MM-dd'T'HH:mm:ss[.SSSSSS][.SSS]XXX")).isNotNull()
+        | S.try_to_timestamp(cleaned, S.lit("yyyy-MM-dd'T'HH:mm:ssXXX")).isNotNull()
     )
 
 
-def _date(c: Column) -> Column:
-    fx = functions_for(c)
-    return fx.try_to_timestamp(c, fx.lit("yyyy-MM-dd")).isNotNull() & c.rlike(r"^\d{4}-\d{2}-\d{2}$")
+def _date(c: Sql) -> Sql:
+    return S.try_to_timestamp(c, S.lit("yyyy-MM-dd")).isNotNull() & c.rlike(r"^\d{4}-\d{2}-\d{2}$")
 
 
-def _int32(c: Column) -> Column:
+def _int32(c: Sql) -> Sql:
     # wholeness at the column's OWN scale — a decimal(38,9) intermediate
     # rounded finer fractions into "integers", and even `c == floor(c)`
     # is lossy (the mixed-scale comparison caps at precision 38 and
@@ -70,19 +68,18 @@ def _int32(c: Column) -> Column:
     return (c % 1 == 0) & c.between(INT32_MIN, INT32_MAX)
 
 
-def _int64(c: Column) -> Column:
+def _int64(c: Sql) -> Sql:
     return (c % 1 == 0) & c.between(INT64_MIN, INT64_MAX)
 
 
-def _whole_double(c: Column) -> Column:
+def _whole_double(c: Sql) -> Sql:
     """Integer-valued check on a double: every |v| >= 2^53 is whole;
     below, floor-compare (floor(double) -> long saturates past 2^63)."""
-    fx = functions_for(c)
-    return fx.when(fx.abs(c) >= fx.lit(float(2 ** 53)), fx.lit(True)) \
-             .otherwise(c == fx.floor(c))
+    return S.when(S.abs(c) >= S.lit(float(2 ** 53)), S.lit(True)) \
+             .otherwise(c == S.floor(c))
 
 
-def int_format_double(c: Column, name: str) -> Column:
+def int_format_double(c: Sql, name: str) -> Sql:
     """int32/int64 on a DOUBLE column, kernel-exact: the decimal(38,9)
     cast goes through shortest repr, which is lossy >= 2^53 — the double
     -9.223372036854776e18 IS Long.MIN exactly but reprs to ...776000 and
@@ -99,13 +96,13 @@ def int_format_double(c: Column, name: str) -> Column:
     return _whole_double(c) & (c >= lo) & (c <= hi)
 
 
-SQL_FORMATS: dict[str, Callable[[Column], Column]] = {
+SQL_FORMATS: dict[str, Callable[[Sql], Sql]] = {
     "date-time": _datetime,
     "date": _date,
     "ipv4": _rx(_IPV4_RE),
     "ipv6": _rx(_IPV6_RE),
     "uri": _rx(_URI_RE),
-    "hostname": lambda c: (functions_for(c).length(c) <= 253) & c.rlike(HOSTNAME_RE.pattern),
+    "hostname": lambda c: (S.length(c) <= 253) & c.rlike(HOSTNAME_RE.pattern),
     "email": _rx(EMAIL_RE.pattern),
     "uuid": _rx(UUID_RE.pattern),
     # `regex` (compilability of the value as a regex) is inherently
@@ -116,9 +113,16 @@ SQL_FORMATS: dict[str, Callable[[Column], Column]] = {
 }
 
 
-def format_predicate(name: str, col: Column,
-                     extra: dict[str, Callable[[Column], Column]] | None = None) -> Column:
-    fn = (extra or {}).get(name) or SQL_FORMATS.get(name)
+def format_predicate(name: str, col: Sql,
+                     extra: dict[str, Callable[[Column], Column]] | None = None
+                     ) -> Sql:
+    """``col`` satisfies format ``name``: a caller's ``extra`` builder
+    first (handed the Column of ``col``, its result bound into the
+    text), then :data:`SQL_FORMATS`; an unknown name is ``true``."""
+    custom = (extra or {}).get(name)
+    if custom is not None:
+        return S.bind(custom(S.column(col)))
+    fn = SQL_FORMATS.get(name)
     if fn is None:
-        return functions_for(col).lit(True)  # unknown format ⇒ success
+        return S.lit(True)  # unknown format ⇒ success
     return fn(col)

@@ -20,9 +20,15 @@ once, in ``F.expr``. Building the same predicate as Columns costs about
 ten round trips per operator, because PySpark's call-site tracking looks
 up the active session and sets and clears the origin on every call.
 
-Helpers that serve both the typed (Column) and the VARIANT (text)
-compilers take their function namespace from their input with
-:func:`functions_for`, so each keeps a single body.
+Both compilers, the typed one (:mod:`~sparkschema.compiler.columns`,
+:mod:`~sparkschema.compiler.table`) and the VARIANT one, build text, so
+the helpers they share take and return text. A Column with no text form
+(a Python UDF, a caller's format builder, an input expression) enters
+the text through :func:`bind`; :func:`column` turns text back into a
+Column, binding such a Column as the variable of a one-element
+``transform``. Spark's parser overflows its stack on a few hundred nested
+calls (252 ``and`` calls on the driver thread), so a caller that chains
+hundreds of operands keeps the chain short or joins it as Columns.
 
 Literals: plain Python values are always literals, never column names.
 Strings go through :func:`quote`, which gives text that reads the same
@@ -34,11 +40,13 @@ from __future__ import annotations
 
 import itertools
 import math
+import re
 from decimal import Decimal
 from typing import Any, Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Lambda variables are named ``x_<n>`` like PySpark's, from a counter that
 # starts where the JVM's (a 32-bit int) cannot reach: every lambda in a
@@ -54,12 +62,14 @@ class SqlTextError(ValueError):
 
 
 class Sql:
-    """A SQL expression as text; see the module docstring."""
+    """A SQL expression as text; see the module docstring. ``binds``
+    holds the Columns the text names by a placeholder (:func:`bind`)."""
 
-    __slots__ = ("text",)
+    __slots__ = ("text", "binds")
 
-    def __init__(self, text: str):
+    def __init__(self, text: str, binds: tuple = ()):
         self.text = text
+        self.binds = binds
 
     def __bool__(self):
         raise TypeError("a SQL expression has no truth value; use & | ~")
@@ -79,6 +89,7 @@ class Sql:
     def __ge__(self, o): return self._op(">=", o)
     def __add__(self, o): return self._op("+", o)
     def __mul__(self, o): return self._op("*", o)
+    def __truediv__(self, o): return self._op("/", o)
     def __mod__(self, o): return self._op("%", o)
 
     def __invert__(self) -> Sql:
@@ -96,8 +107,9 @@ class Sql:
     def isin(self, *values: Any) -> Sql:
         if len(values) == 1 and isinstance(values[0], (list, tuple, set)):
             values = tuple(values[0])
-        items = ", ".join(lit(v).text for v in values)
-        return Sql(f"{self.text} IN ({items})")
+        items = [lit(v) for v in values]
+        return Sql(f"{self.text} IN ({', '.join(i.text for i in items)})",
+                   _binds(self, *items))
 
     def between(self, lower: Any, upper: Any) -> Sql:
         # PySpark's own definition, so the tree matches the Column one
@@ -112,18 +124,18 @@ class Sql:
     def contains(self, part: Any) -> Sql:
         return _fn("contains", self, part)
 
-    def cast(self, dtype: str) -> Sql:
-        return Sql(f"CAST({self.text} AS {dtype})")
+    def cast(self, dtype: str | T.DataType) -> Sql:
+        return Sql(f"CAST({self.text} AS {_type(dtype)})", self.binds)
 
-    def try_cast(self, dtype: str) -> Sql:
-        return Sql(f"TRY_CAST({self.text} AS {dtype})")
+    def try_cast(self, dtype: str | T.DataType) -> Sql:
+        return Sql(f"TRY_CAST({self.text} AS {_type(dtype)})", self.binds)
 
     def alias(self, name: str) -> Sql:
         """Only valid as an argument of :func:`struct`."""
-        return Sql(f"{self.text} AS {ident(name)}")
+        return Sql(f"{self.text} AS {ident(name)}", self.binds)
 
     def __getitem__(self, field: Any) -> Sql:
-        return Sql(f"{self.text}[{lit(field).text}]")
+        return Sql(f"{self.text}[{lit(field).text}]", self.binds)
 
 
 class _When(Sql):
@@ -133,7 +145,8 @@ class _When(Sql):
 
     def __init__(self, branches: tuple[tuple[Sql, Sql], ...]):
         self.branches = branches
-        super().__init__(self._case(""))
+        super().__init__(self._case(""),
+                         _binds(*(x for arm in branches for x in arm)))
 
     def _case(self, tail: str) -> str:
         arms = " ".join(f"WHEN {c.text} THEN {v.text}"
@@ -141,10 +154,12 @@ class _When(Sql):
         return f"CASE {arms}{tail} END"
 
     def when(self, cond: Sql, value: Any) -> _When:
-        return _When(self.branches + ((cond, lit(value)),))
+        return _When(self.branches + ((lit(cond), lit(value)),))
 
     def otherwise(self, value: Any) -> Sql:
-        return Sql(self._case(f" ELSE {lit(value).text}"))
+        value = lit(value)
+        return Sql(self._case(f" ELSE {value.text}"),
+                   _binds(self, value))
 
 
 def quote(s: str) -> str:
@@ -173,9 +188,12 @@ def ident(name: str) -> str:
 def lit(value: Any) -> Sql:
     """The SQL literal that ``F.lit(value)`` builds: ints are INT, or
     BIGINT past 32 bits; floats DOUBLE; Decimals keep their digits and
-    scale (py4j hands ``str(d)`` to ``BigDecimal`` too)."""
+    scale (py4j hands ``str(d)`` to ``BigDecimal`` too). A Column is
+    bound in (:func:`bind`)."""
     if isinstance(value, Sql):
         return value
+    if isinstance(value, Column):
+        return bind(value)
     if value is None:
         return Sql("NULL")
     if isinstance(value, bool):
@@ -235,24 +253,145 @@ def any_of(items: list[Sql]) -> Sql:
     return _chain("or", items)
 
 
+def _binds(*parts: Sql) -> tuple:
+    """The bound Columns of ``parts``, each once."""
+    out: dict = {}
+    for p in parts:
+        for name, c in p.binds:
+            out.setdefault(name, c)
+    return tuple(out.items())
+
+
 def _fn(name: str, *args: Any) -> Sql:
-    return Sql(f"{name}({', '.join(lit(a).text for a in args)})")
+    args_ = [lit(a) for a in args]
+    return Sql(f"{name}({', '.join(a.text for a in args_)})",
+               _binds(*args_))
 
 
-def lambda_(f: Callable[[Sql], Sql]) -> Sql:
-    """``x_<n> -> f(x_<n>)``: a one-argument SQL lambda."""
-    x = f"x_{next(_names)}"
-    return Sql(f"{x} -> {lit(f(Sql(x))).text}")
+def _fresh() -> str:
+    return f"x_{next(_names)}"
 
 
-def _hof(name: str, arr: Sql, f: Callable[[Sql], Sql], *rest: Any) -> Sql:
-    return _fn(name, arr, lambda_(f), *rest)
+def lambda_(f: Callable[..., Sql], arity: int = 1) -> Sql:
+    """``x_<n> -> f(x_<n>)``: a SQL lambda of one argument, or of
+    ``(x_<n>, x_<m>)`` for ``arity=2``."""
+    xs = [_fresh() for _ in range(arity)]
+    body = lit(f(*(Sql(x) for x in xs)))
+    head = xs[0] if arity == 1 else f"({', '.join(xs)})"
+    return Sql(f"{head} -> {body.text}", body.binds)
+
+
+def _hof(name: str, arr: Sql, f: Callable[..., Sql], *rest: Any,
+         arity: int = 1) -> Sql:
+    return _fn(name, arr, lambda_(f, arity), *rest)
+
+
+def _type(dtype: str | T.DataType) -> str:
+    """SQL type text for a cast: as given, or rendered from a DataType."""
+    if isinstance(dtype, str):
+        return dtype
+    if isinstance(dtype, T.ArrayType):
+        return f"ARRAY<{_type(dtype.elementType)}>"
+    if isinstance(dtype, T.MapType):
+        return f"MAP<{_type(dtype.keyType)}, {_type(dtype.valueType)}>"
+    if isinstance(dtype, T.StructType):
+        return "STRUCT<" + ", ".join(f"{ident(f.name)}: {_type(f.dataType)}"
+                                     for f in dtype.fields) + ">"
+    return dtype.simpleString()
+
+
+# -- Columns in and out -------------------------------------------------------
+
+def quoted_name(name: str) -> str:
+    """``name`` back-quoted for ``F.col`` / ``df[...]``, which would read
+    a bare ``a.b`` as a struct field and reject a lone back-quote. Unlike
+    :func:`ident`, a ``$`` is fine here: no variable substitution runs."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def named_column(name: str) -> Column:
+    """The Column of the top-level column ``name``, whatever it holds."""
+    return F.col(quoted_name(name))
+
+
+def named(name: str) -> Sql:
+    """The top-level column ``name`` as SQL text: its quoted identifier,
+    or, for a name holding ``$``, its Column bound in."""
+    if "$" in name:
+        return bind(named_column(name))
+    return Sql(ident(name))
+
+
+def column_ref(c: Column | str) -> str | None:
+    """SQL text naming ``c`` when it is a plain column reference
+    (``F.col(name)``), else ``None``."""
+    c = F.col(c) if isinstance(c, str) else c
+    node = c._jc.node()
+    if node.getClass().getSimpleName() != "UnresolvedAttribute":
+        return None
+    try:
+        text = ".".join(ident(p)
+                        for p in node.nameParts().mkString("\0").split("\0"))
+    except SqlTextError:
+        return None
+    # a planId or metadata flag would not survive the round trip
+    return text if F.col(text)._jc.equals(c._jc) else None
+
+
+def bind(c: Column | str) -> Sql:
+    """``c`` as SQL text: its name when it is a plain column reference,
+    else a placeholder that :func:`column` binds to ``c``. This is how a
+    Column with no text form (a Python UDF, a caller's Column) enters
+    the text; it must not read a lambda variable of the text."""
+    ref = column_ref(c)
+    if ref is not None:
+        return Sql(ref)
+    x = _fresh()
+    return Sql(x, ((x, c),))
+
+
+# the names :func:`_fresh` makes (10 digits and up), so a column or a
+# string that happens to read ``x_1`` is not taken for one
+_VAR = re.compile(r"\bx_\d{10,}\b")
+_PARAMS = re.compile(r"(\(?x_\d{10,}(?:, x_\d{10,})*\)?) ->")
+
+
+def column(s: Sql) -> Column:
+    """The Column of ``s``, crossing to the JVM in one ``F.expr``. Bound
+    Columns become the variable of a one-element ``transform``:
+    ``transform(array(c), x -> s)[0]``, with a struct of them past
+    one. Raises :class:`SqlTextError` when ``s`` reads the variable of a
+    lambda it is not inside of: its Column cannot exist."""
+    declared = {v for m in _PARAMS.findall(s.text) for v in _VAR.findall(m)}
+    free = set(_VAR.findall(s.text)) - declared - {x for x, _ in s.binds}
+    if free:
+        raise SqlTextError(f"no Column for a value that reads lambda "
+                           f"variable {min(free)}")
+    if not s.binds:
+        return F.expr(s.text)
+    if len(s.binds) == 1:
+        [(x, c)] = s.binds
+        arr, text = F.array(c), s.text
+    else:
+        x = _fresh()
+        field = {name: f"{x}.b{i}" for i, (name, _) in enumerate(s.binds)}
+        arr = F.array(F.struct(*[c.alias(f"b{i}")
+                                 for i, (_, c) in enumerate(s.binds)]))
+        text = _VAR.sub(lambda m: field.get(m.group(0), m.group(0)), s.text)
+    return F.get(F.call_function("transform", arr,
+                                 F.expr(f"{x} -> {text}")), 0)
+
+
+def over(c: Column | str, build: Callable[[Sql], Sql]) -> Column:
+    """The Column of ``build(x)``, with ``x`` the text of ``c``
+    (:func:`bind`)."""
+    return column(build(bind(c)))
 
 
 # -- the functions of pyspark.sql.functions the compilers use ---------------
 
 def when(cond: Sql, value: Any) -> _When:
-    return _When(((cond, lit(value)),))
+    return _When(((lit(cond), lit(value)),))
 
 
 def coalesce(*cols: Any) -> Sql: return _fn("coalesce", *cols)
@@ -296,11 +435,17 @@ def exists(arr: Sql, f: Callable[[Sql], Sql]) -> Sql:
     return _hof("exists", arr, f)
 def filter(arr: Sql, f: Callable[[Sql], Sql]) -> Sql:  # noqa: A001
     return _hof("filter", arr, f)
-
-
-def functions_for(c: Column | Sql):
-    """The function namespace matching ``c``: this module for SQL text,
-    :mod:`pyspark.sql.functions` for a Column."""
-    import sys
-
-    return sys.modules[__name__] if isinstance(c, Sql) else F
+def map_filter(m: Sql, f: Callable[[Sql, Sql], Sql]) -> Sql:
+    return _hof("map_filter", m, f, arity=2)
+def map_keys(m: Sql) -> Sql: return _fn("map_keys", m)
+def map_values(m: Sql) -> Sql: return _fn("map_values", m)
+def map_contains_key(m: Sql, key: Any) -> Sql:
+    return _fn("map_contains_key", m, key)
+def map_from_arrays(k: Sql, v: Sql) -> Sql: return _fn("map_from_arrays", k, v)
+def create_map(*cols: Any) -> Sql: return _fn("map", *cols)
+def array_compact(x: Sql) -> Sql: return _fn("array_compact", x)
+def array_sort(x: Sql) -> Sql: return _fn("array_sort", x)
+def array_join(x: Sql, delim: str) -> Sql: return _fn("array_join", x, delim)
+def count(x: Any) -> Sql: return _fn("count", x)
+def explode(x: Sql) -> Sql: return _fn("explode", x)
+def sum(x: Sql) -> Sql: return _fn("sum", x)  # noqa: A001

@@ -3,7 +3,10 @@ DataFrame, where each property is a column (SURVEY.md §1.4 row-as-object
 mapping — the input_hint table ``(image_id, bytes, w, h, fmt, caption,
 phash)`` is the canonical instance).
 
-Produces a :class:`CompiledTableSpec`:
+Produces a :class:`CompiledTableSpec`, whose checks are Spark SQL text
+(:mod:`sparkschema.compiler.sqltext`): each projection and aggregate below
+is assembled from that text and crosses to the JVM in a few ``F.expr``
+calls, not as one py4j round trip per Column operator.
 
 - ``violations(df)`` — one whole-stage-codegen projection building an array
   of per-keyword violation structs per row → ``array_compact`` →
@@ -12,7 +15,7 @@ Produces a :class:`CompiledTableSpec`:
 - ``verdicts(df)`` — per-partition pass/fail + metrics in ONE aggregation
   over ``spark_partition_id()`` (no shuffle of raw rows, partial aggs
   map-side);
-- ``row_valid(df)`` — a single boolean Column (throughput path);
+- ``row_valid()`` — a single boolean Column (throughput path);
 - ``table_requests`` — the engine's ``x-unique`` / ``$ref_data`` /
   ``x-drift`` / ``x-roundtrip`` extension keywords, dispatched to
   :mod:`sparkschema.operators` by the validation plan.
@@ -31,7 +34,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparkschema.compiler import sqltext as S
 from sparkschema.compiler.columns import Check, ColumnCompiler
+from sparkschema.compiler.sqltext import Sql
 from sparkschema.spec import messages as msg_catalog
 from sparkschema.spec.parser import SpecError, parse_spec
 from sparkschema.spec.refs import RefResolver, Scope
@@ -52,6 +57,12 @@ VIOLATION_SCHEMA = T.StructType([
 
 _EXTENSION_KEYWORDS = ("x-unique", "x-drift", "x-roundtrip", "$ref_data",
                        "x-null-fraction")
+
+#: Operands of :meth:`CompiledTableSpec.row_valid` that cross in one text.
+#: Spark 4.1's parser overflowed its stack at 252 nested ``and`` calls
+#: (driver thread, default stack); the rest of the budget is left for the
+#: nesting inside one check.
+_TEXT_CHAIN = 100
 
 
 def inline_refs(schema: Any, resolver: RefResolver | None, scope: Scope | None,
@@ -126,9 +137,17 @@ class CompiledTableSpec:
     # -- row-level ---------------------------------------------------------
 
     def row_valid(self) -> Column:
-        ok = F.lit(True)
-        for c in self.checks:
-            ok = ok & ~c.fail
+        """No check fails: the left-deep ``true AND NOT fail0 AND NOT
+        fail1 …``. The first :data:`_TEXT_CHAIN` operands cross as one
+        text; each further one is joined as a Column, because Spark's
+        parser overflows its stack on a few hundred nested calls."""
+        fails = [~c.fail_sql for c in self.checks]
+        text = S.lit(True)
+        for f in fails[:_TEXT_CHAIN]:
+            text = text & f
+        ok = S.column(text)
+        for f in fails[_TEXT_CHAIN:]:
+            ok = ok & S.column(f)
         return ok
 
     def violations(self, df: DataFrame, cast_keys: bool = True) -> DataFrame:
@@ -146,31 +165,34 @@ class CompiledTableSpec:
 
         ``cast_keys=False`` keeps key columns' native types (needed when a
         key is an event-time column whose watermark metadata must survive
-        for a downstream streaming aggregation)."""
-        structs = [
-            F.when(c.fail, F.struct(
-                F.lit(c.keyword).alias("keyword"),
-                F.lit(c.schema_path).alias("schema_path"),
-                F.lit(c.instance_path).alias("instance_path"),
-                c.value.alias("value"),
-                c.msg.alias("msg"),
-                (F.coalesce(c.errors, F.lit("")) if c.errors is not None
-                 else F.lit("")).alias("errors"),
-                F.lit(c.resolution_scope).alias("resolution_scope"),
-                F.lit(c.referrer).alias("referrer"),
-            ))
-            for c in self.checks
-        ]
-        if not structs:
+        for a downstream streaming aggregation).
+
+        The filter and the struct array each cross as one SQL text."""
+        key_cols = [S.named_column(k) for k in self.key_cols]
+        if not self.checks:
             return df.sparkSession.createDataFrame(
                 [], T.StructType([df.schema[k] for k in self.key_cols]
                                  ).add("v", VIOLATION_SCHEMA)
-            ).select(*self.key_cols, "v.*")
-        arr = F.array_compact(F.array(*structs))
+            ).select(*key_cols, "v.*")
+        structs = [
+            S.when(c.fail_sql, S.struct(
+                S.lit(c.keyword).alias("keyword"),
+                S.lit(c.schema_path).alias("schema_path"),
+                S.lit(c.instance_path).alias("instance_path"),
+                c.value_sql.alias("value"),
+                c.msg_sql.alias("msg"),
+                (S.coalesce(c.errors_sql, S.lit("")) if c.errors_sql is not None
+                 else S.lit("")).alias("errors"),
+                S.lit(c.resolution_scope).alias("resolution_scope"),
+                S.lit(c.referrer).alias("referrer"),
+            ))
+            for c in self.checks
+        ]
+        arr = S.array_compact(S.array(*structs))
         # key columns are cast to string by default: the violations frame
         # is a report with one uniform schema across all emitters
-        keys = [F.col(k).cast("string").alias(k) if cast_keys else F.col(k)
-                for k in self.key_cols]
+        keys = [k.cast("string").alias(name) if cast_keys else k
+                for k, name in zip(key_cols, self.key_cols)]
         # filter on the cheap boolean conjunction FIRST: writing
         # select(arr).where(size>0) makes Catalyst inline the whole
         # struct-building array into the Filter condition, evaluating every
@@ -191,36 +213,48 @@ class CompiledTableSpec:
         # exceptAll-identical.
         return (
             df.where(~self.row_valid())
-            .select(*keys, arr.alias("__viol"))
-            .select(*self.key_cols, F.explode_outer("__viol").alias("v"))
-            .select(*self.key_cols, "v.*")
+            .select(*keys, S.column(arr).alias("__viol"))
+            .select(*key_cols, F.explode_outer("__viol").alias("v"))
+            .select(*key_cols, "v.*")
         )
 
     def verdicts(self, df: DataFrame) -> DataFrame:
         """Per-partition verdict table ``(partition_id, check, pass,
-        metrics)`` in a single map-side-combined aggregation."""
-        aggs = [F.count(F.lit(1)).alias("__rows")]
+        metrics)`` in a single map-side-combined aggregation, each
+        aggregate and projection crossing as SQL text."""
+        aggs = [_named(S.count(1), "__rows")]
         for i, c in enumerate(self.checks):
-            aggs.append(F.sum(c.fail.cast("long")).alias(f"__f{i}"))
-        agg = df.groupBy(F.spark_partition_id().alias("partition_id")).agg(*aggs)
+            fail = c.fail_sql.cast("bigint")
+            # a bound Column's lambda must sit inside the sum
+            aggs.append(_named(S.sum(fail), f"__f{i}") if not fail.binds
+                        else F.sum(S.column(fail)).alias(f"__f{i}"))
+        agg = df.groupBy(F.spark_partition_id().alias("partition_id")) \
+                .agg(*aggs)
+        pairs = S.map_from_arrays(
+            S.array(*self.check_names),
+            S.array(*[Sql(f"__f{i}") for i in range(len(self.checks))]))
         exploded = agg.select(
             "partition_id", "__rows",
-            F.explode(F.map_from_arrays(
-                F.array(*[F.lit(n) for n in self.check_names]),
-                F.array(*[F.col(f"__f{i}") for i in range(len(self.checks))]),
-            )).alias("check", "fail_count"),
-        )
+            S.column(S.explode(pairs)).alias("check", "fail_count"))
+        fails, rows = Sql("fail_count"), Sql("__rows")
         return exploded.select(
             "partition_id",
             "check",
-            (F.col("fail_count") == 0).alias("pass"),
-            F.create_map(
-                F.lit("rows"), F.col("__rows").cast("double"),
-                F.lit("fail_count"), F.col("fail_count").cast("double"),
-                F.lit("fail_fraction"),
-                (F.col("fail_count") / F.col("__rows")).cast("double"),
-            ).alias("metrics"),
+            _named(fails == 0, "pass"),
+            _named(S.create_map(
+                "rows", rows.cast("double"),
+                "fail_count", fails.cast("double"),
+                "fail_fraction", (fails / rows).cast("double"),
+            ), "metrics"),
         )
+
+
+def _named(s: Sql, name: str) -> Column:
+    """The Column of ``s`` named ``name``: one ``F.expr`` of
+    ``s AS name`` when nothing is bound in."""
+    if not s.binds:
+        return F.expr(s.alias(name).text)
+    return S.column(s).alias(name)
 
 
 def compile_table_spec(
@@ -264,14 +298,14 @@ def compile_table_spec(
             # value fails err.false.schema) and True (no checks) — the
             # old skip silently dropped {'properties': {'a': false}}
             # (review find r4)
-            checks += cc.compile_checks(sub, F.col(name), fields[name],
+            checks += cc.compile_checks(sub, S.named(name), fields[name],
                                         f"#/properties/{name}", f"/{name}")
             continue
         if not isinstance(sub, dict):
             continue
         requests += _extension_requests(name, sub)
         plain = {k: v for k, v in sub.items() if k not in _EXTENSION_KEYWORDS}
-        checks += cc.compile_checks(plain, F.col(name), fields[name],
+        checks += cc.compile_checks(plain, S.named(name), fields[name],
                                     f"#/properties/{name}", f"/{name}")
 
     req = schema.get("required")
@@ -283,10 +317,10 @@ def compile_table_spec(
                 keyword="required",
                 schema_path="#/required",
                 instance_path=f"/{name}",
-                fail=F.col(name).isNull(),
-                value=F.lit("null"),
-                msg=F.lit(msg_catalog.render("obj.required.prop", name,
-                                             catalog=catalog)),
+                fail_sql=S.named(name).isNull(),
+                value_sql=S.lit("null"),
+                msg_sql=S.lit(msg_catalog.render("obj.required.prop", name,
+                                                 catalog=catalog)),
             ))
 
     # dependencies: array form = presence dependency (col A present ⇒
@@ -304,15 +338,16 @@ def compile_table_spec(
                 for b in dep:
                     # a dependency target that is not a column is
                     # STATICALLY absent: A present ⇒ violation
-                    missing = F.col(b).isNull() if b in fields else F.lit(True)
+                    missing = S.named(b).isNull() if b in fields \
+                        else S.lit(True)
                     checks.append(Check(
                         keyword="dependencies",
                         schema_path="#/dependencies",
                         instance_path=f"/{a}",
-                        fail=F.col(a).isNotNull() & missing,
-                        value=F.col(a).cast("string"),
-                        msg=F.lit(msg_catalog.render("obj.missing.prop.dep",
-                                                     b, catalog=catalog)),
+                        fail_sql=S.named(a).isNotNull() & missing,
+                        value_sql=S.named(a).cast("string"),
+                        msg_sql=S.lit(msg_catalog.render(
+                            "obj.missing.prop.dep", b, catalog=catalog)),
                     ))
             elif isinstance(dep, (dict, bool)):
                 # attribution note: this emits ONE "dependencies" check
@@ -324,10 +359,11 @@ def compile_table_spec(
                     keyword="dependencies",
                     schema_path=f"#/dependencies/{a}",
                     instance_path=f"/{a}",
-                    fail=F.col(a).isNotNull() & ~F.coalesce(ok, F.lit(False)),
-                    value=F.col(a).cast("string"),
-                    msg=F.lit(msg_catalog.render("comp.no.schema",
-                                                 catalog=catalog)),
+                    fail_sql=S.named(a).isNotNull()
+                    & ~S.coalesce(ok, S.lit(False)),
+                    value_sql=S.named(a).cast("string"),
+                    msg_sql=S.lit(msg_catalog.render("comp.no.schema",
+                                                     catalog=catalog)),
                 ))
 
     # root-level conditional / combinators across columns (row-as-object):
@@ -358,25 +394,25 @@ def _has_ref(schema: Any) -> bool:
 
 
 def object_schema_valid(cc: ColumnCompiler, s: Any,
-                        fields: dict[str, T.DataType]) -> Column:
+                        fields: dict[str, T.DataType]) -> Sql:
     """Row-level validity of an object schema over the table's columns
     (properties / required / allOf / anyOf / oneOf / not / if-then-else,
     row-as-object mapping). A required column absent from the DataFrame is
     statically absent from every row — the schema can never hold (kernel
     parity: required fails on a missing property)."""
     if s is True:
-        return F.lit(True)
+        return S.lit(True)
     if s is False:
-        return F.lit(False)
-    ok = F.lit(True)
+        return S.lit(False)
+    ok = S.lit(True)
     props = s.get("properties") or {}
     for name, sub in props.items():
         if name in fields and isinstance(sub, (dict, bool)):
             plain = sub if not isinstance(sub, dict) else {
                 k: v for k, v in sub.items() if k not in _EXTENSION_KEYWORDS}
-            ok = ok & cc.compile_valid(plain, F.col(name), fields[name])
+            ok = ok & cc.valid_sql(plain, S.named(name), fields[name])
     for r in s.get("required") or []:
-        ok = ok & (F.col(r).isNotNull() if r in fields else F.lit(False))
+        ok = ok & (S.named(r).isNotNull() if r in fields else S.lit(False))
     for comb, op in (("allOf", "and"), ("anyOf", "or")):
         subs = s.get(comb)
         if isinstance(subs, list) and subs:
@@ -387,19 +423,19 @@ def object_schema_valid(cc: ColumnCompiler, s: Any,
             ok = ok & acc
     oneof = s.get("oneOf")
     if isinstance(oneof, list) and oneof:
-        cnt = F.coalesce(object_schema_valid(cc, oneof[0], fields),
-                         F.lit(False)).cast("int")
+        cnt = S.coalesce(object_schema_valid(cc, oneof[0], fields),
+                         S.lit(False)).cast("int")
         for x in oneof[1:]:
-            cnt = cnt + F.coalesce(object_schema_valid(cc, x, fields),
-                                   F.lit(False)).cast("int")
+            cnt = cnt + S.coalesce(object_schema_valid(cc, x, fields),
+                                   S.lit(False)).cast("int")
         ok = ok & (cnt == 1)
     if "not" in s:
         ok = ok & ~object_schema_valid(cc, s["not"], fields)
     if "if" in s:
-        cond = F.coalesce(object_schema_valid(cc, s["if"], fields), F.lit(False))
-        then_v = object_schema_valid(cc, s["then"], fields) if "then" in s else F.lit(True)
-        else_v = object_schema_valid(cc, s["else"], fields) if "else" in s else F.lit(True)
-        ok = ok & F.when(cond, then_v).otherwise(else_v)
+        cond = S.coalesce(object_schema_valid(cc, s["if"], fields), S.lit(False))
+        then_v = object_schema_valid(cc, s["then"], fields) if "then" in s else S.lit(True)
+        else_v = object_schema_valid(cc, s["else"], fields) if "else" in s else S.lit(True)
+        ok = ok & S.when(cond, then_v).otherwise(else_v)
     return ok
 
 
@@ -410,56 +446,56 @@ def _row_combinators(cc: ColumnCompiler, schema: dict,
     subschemas are object schemas over the table's columns (the flagship
     spec's ``if fmt=jpg then w multipleOf 8`` shape, FIXTURES.md §3)."""
 
-    def obj_valid(s: Any) -> Column:
+    def obj_valid(s: Any) -> Sql:
         return object_schema_valid(cc, s, fields)
 
     out: list[Check] = []
-    value_col = F.lit("<row>")
+    value_col = S.lit("<row>")
 
     if "if" in schema:
         # Reference reporting (AnyConstraintValidators.scala:14-67): one
         # violation, keyword "else" whenever an else branch exists ("then"
         # only when it doesn't), schemaPath = the containing schema ("#").
-        cond = F.coalesce(obj_valid(schema["if"]), F.lit(False))
-        fail = F.lit(False)
+        cond = S.coalesce(obj_valid(schema["if"]), S.lit(False))
+        fail = S.lit(False)
         if "then" in schema:
-            fail = fail | F.coalesce(cond & ~obj_valid(schema["then"]), F.lit(False))
+            fail = fail | S.coalesce(cond & ~obj_valid(schema["then"]), S.lit(False))
         if "else" in schema:
-            fail = fail | F.coalesce(~cond & ~obj_valid(schema["else"]), F.lit(False))
+            fail = fail | S.coalesce(~cond & ~obj_valid(schema["else"]), S.lit(False))
         if "then" in schema or "else" in schema:
             keyword = "else" if "else" in schema else "then"
             out.append(Check(keyword, "#", "/", fail, value_col,
-                             F.lit(msg_catalog.render("err.if.then.else", catalog=catalog))))
+                             S.lit(msg_catalog.render("err.if.then.else", catalog=catalog))))
     for comb, key in (("allOf", "any.all"), ("anyOf", "any.any")):
         subs = schema.get(comb)
         if isinstance(subs, list) and subs:
             acc = obj_valid(subs[0])
             for x in subs[1:]:
                 acc = (acc & obj_valid(x)) if comb == "allOf" else (acc | obj_valid(x))
-            out.append(Check(comb, f"#/{comb}", "/", ~F.coalesce(acc, F.lit(False)),
+            out.append(Check(comb, f"#/{comb}", "/", ~S.coalesce(acc, S.lit(False)),
                              value_col,
-                             F.lit(msg_catalog.render(key, catalog=catalog))))
+                             S.lit(msg_catalog.render(key, catalog=catalog))))
     oneof = schema.get("oneOf")
     if isinstance(oneof, list) and oneof:
-        valids = [F.coalesce(obj_valid(x), F.lit(False)) for x in oneof]
+        valids = [S.coalesce(obj_valid(x), S.lit(False)) for x in oneof]
         cnt = valids[0].cast("int")
         for v in valids[1:]:
             cnt = cnt + v.cast("int")
-        matched = F.array_compact(F.array(*[
-            F.when(v, F.lit(f"/oneOf/{i}")) for i, v in enumerate(valids)]))
-        err = F.when(cnt > 1, F.to_json(F.struct(matched.alias("matched"))))
+        matched = S.array_compact(S.array(*[
+            S.when(v, S.lit(f"/oneOf/{i}")) for i, v in enumerate(valids)]))
+        err = S.when(cnt > 1, S.to_json(S.struct(matched.alias("matched"))))
         # kernel parity: >1 match is any.one.of.many, 0 matches .none
-        msg = F.when(
+        msg = S.when(
             cnt > 1,
-            F.lit(msg_catalog.render("any.one.of.many", catalog=catalog))
-        ).otherwise(F.lit(msg_catalog.render("any.one.of.none", catalog=catalog)))
-        out.append(Check("oneOf", "#/oneOf", "/", F.coalesce(cnt != 1, F.lit(True)),
-                         value_col, msg, errors=err))
+            S.lit(msg_catalog.render("any.one.of.many", catalog=catalog))
+        ).otherwise(S.lit(msg_catalog.render("any.one.of.none", catalog=catalog)))
+        out.append(Check("oneOf", "#/oneOf", "/", S.coalesce(cnt != 1, S.lit(True)),
+                         value_col, msg, errors_sql=err))
     if "not" in schema:
         out.append(Check("not", "#/not", "/",
-                         F.coalesce(obj_valid(schema["not"]), F.lit(False)),
+                         S.coalesce(obj_valid(schema["not"]), S.lit(False)),
                          value_col,
-                         F.lit(msg_catalog.render("any.not", catalog=catalog))))
+                         S.lit(msg_catalog.render("any.not", catalog=catalog))))
     return out
 
 

@@ -513,7 +513,7 @@ def _propname_ok(k: Sql, schema: Any) -> Sql:
     unknown = set(schema) - supported
     if unknown:
         raise VariantUnsupported(f"propertyNames keywords {sorted(unknown)}")
-    from sparkschema.compiler.columns import grapheme_length_col
+    from sparkschema.compiler.columns import grapheme_length_sql
 
     checks = [S.lit(True)]
     t = schema.get("type")
@@ -522,10 +522,10 @@ def _propname_ok(k: Sql, schema: Any) -> Sql:
         checks.append(S.lit("string" in names))
     mn = schema.get("minLength")
     if isinstance(mn, int) and not isinstance(mn, bool):
-        checks.append(grapheme_length_col(k) >= mn)
+        checks.append(grapheme_length_sql(k) >= mn)
     mx = schema.get("maxLength")
     if isinstance(mx, int) and not isinstance(mx, bool):
-        checks.append(grapheme_length_col(k) <= mx)
+        checks.append(grapheme_length_sql(k) <= mx)
     pat = schema.get("pattern")
     if isinstance(pat, str):
         jp = _java_pattern(pat)
@@ -881,8 +881,8 @@ def _node_valid(n: _Node, schema: dict, rounds: int) -> Sql:
         isstr = n.present & n.t_is("STRING")
 
         def glen() -> Sql:
-            from sparkschema.compiler.columns import grapheme_length_col
-            return grapheme_length_col(s)
+            from sparkschema.compiler.columns import grapheme_length_sql
+            return grapheme_length_sql(s)
 
         mn = schema.get("minLength")
         if isinstance(mn, int) and not isinstance(mn, bool):
@@ -1070,33 +1070,11 @@ def _text(build: Callable[[], Sql]) -> Sql:
         raise VariantUnsupported(str(err)) from None
 
 
-def _column_ref(c: Column | str) -> str | None:
-    """SQL text naming ``c`` when it is a plain column reference
-    (``F.col(name)``), else ``None``."""
-    c = F.col(c) if isinstance(c, str) else c
-    node = c._jc.node()
-    if node.getClass().getSimpleName() != "UnresolvedAttribute":
-        return None
-    try:
-        text = ".".join(S.ident(p)
-                        for p in node.nameParts().mkString("\0").split("\0"))
-    except SqlTextError:
-        return None
-    # a planId or metadata flag would not survive the round trip
-    return text if F.col(text)._jc.equals(c._jc) else None
-
-
 def _over(c: Column | str, build: Callable[[Sql], Sql]) -> Column:
-    """The Column of ``build(x)``, with ``x`` the SQL text of ``c``: its
-    name when ``c`` is a plain column reference (the whole expression then
-    crosses in one ``F.expr``), else a lambda variable bound to ``c`` by a
-    one-element ``transform``."""
-    ref = _column_ref(c)
-    if ref is not None:
-        return F.expr(_text(lambda: build(Sql(ref))).text)
-    lam = _text(lambda: S.lambda_(build))
-    return F.get(F.call_function("transform", F.array(c), F.expr(lam.text)),
-                 0)
+    """:func:`sqltext.over`, with a value that has no SQL literal raised
+    as :class:`VariantUnsupported`: the whole expression crosses in one
+    ``F.expr`` when ``c`` is a plain column reference."""
+    return _text(lambda: S.over(c, build))
 
 
 def variant_valid(v: Column | str, schema: Any) -> Column:

@@ -18,6 +18,8 @@ from typing import Literal
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparkschema.compiler.sqltext import named_column, quoted_name
+
 
 def orphans(fact: DataFrame, fact_col: str, dim: DataFrame, dim_col: str,
             strategy: Literal["broadcast", "shuffle", "auto"] = "auto") -> DataFrame:
@@ -25,13 +27,13 @@ def orphans(fact: DataFrame, fact_col: str, dim: DataFrame, dim_col: str,
 
     NULL fact values are not orphans (absence is ``required``'s business).
     """
-    d = dim.select(F.col(dim_col).alias("__dim_key")).dropDuplicates(["__dim_key"])
+    d = dim.select(named_column(dim_col).alias("__dim_key")).dropDuplicates(["__dim_key"])
     if strategy == "broadcast":
         d = F.broadcast(d)
     elif strategy == "shuffle":
         d = d.hint("shuffle_hash")
-    cond = fact[fact_col] == d["__dim_key"]
-    return (fact.where(F.col(fact_col).isNotNull())
+    cond = fact[quoted_name(fact_col)] == d["__dim_key"]
+    return (fact.where(named_column(fact_col).isNotNull())
                 .join(d, cond, "left_anti"))
 
 
@@ -44,12 +46,12 @@ def orphan_violations(fact: DataFrame, fact_col: str, dim: DataFrame,
     o = orphans_df if orphans_df is not None \
         else orphans(fact, fact_col, dim, dim_col, strategy)
     return o.select(
-        *key_cols,
+        *[named_column(k) for k in key_cols],
         F.lit("$ref_data").alias("keyword"),
         F.lit(f"#/properties/{fact_col}/$ref_data").alias("schema_path"),
         F.lit(f"/{fact_col}").alias("instance_path"),
-        F.col(fact_col).cast("string").alias("value"),
-        F.concat(F.lit("Value "), F.col(fact_col).cast("string"),
+        named_column(fact_col).cast("string").alias("value"),
+        F.concat(F.lit("Value "), named_column(fact_col).cast("string"),
                  F.lit(f" not present in reference table {ref}.")).alias("msg"),
         F.lit("").alias("errors"),
         F.lit("").alias("resolution_scope"),

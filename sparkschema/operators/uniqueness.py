@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparkschema.compiler.sqltext import named_column
+
 
 def duplicate_keys(df: DataFrame, keys: list[str] | str,
                    salt_lanes: int = 1) -> DataFrame:
@@ -30,14 +32,15 @@ def duplicate_keys(df: DataFrame, keys: list[str] | str,
     for count aggregates via map-side combine.
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
+    cols = [named_column(k) for k in keys]
     if salt_lanes > 1:
         phase1 = (
-            df.groupBy(*keys, (F.spark_partition_id() % salt_lanes).alias("__salt"))
+            df.groupBy(*cols, (F.spark_partition_id() % salt_lanes).alias("__salt"))
             .agg(F.count(F.lit(1)).alias("__c"))
         )
-        counted = phase1.groupBy(*keys).agg(F.sum("__c").alias("dup_count"))
+        counted = phase1.groupBy(*cols).agg(F.sum("__c").alias("dup_count"))
     else:
-        counted = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("dup_count"))
+        counted = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("dup_count"))
     return counted.where(F.col("dup_count") > 1)
 
 
@@ -52,9 +55,10 @@ def duplicate_violations(df: DataFrame, keys: list[str] | str,
     keys = [keys] if isinstance(keys, str) else list(keys)
     if dups is None:
         dups = duplicate_keys(df, keys, salt_lanes)
-    value = F.concat_ws(",", *[F.col(k).cast("string") for k in keys])
+    cols = [named_column(k) for k in keys]
+    value = F.concat_ws(",", *[c.cast("string") for c in cols])
     return dups.select(
-        *keys,
+        *cols,
         F.lit(keyword).alias("keyword"),
         F.lit("#/x-unique/" + "/".join(keys)).alias("schema_path"),
         F.lit("/" + keys[0]).alias("instance_path"),

@@ -18,6 +18,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparkschema.compiler.sqltext import named_column
 from sparkschema.compiler.table import CompiledTableSpec, compile_table_spec
 from sparkschema.operators import referential, uniqueness
 from sparkschema.operators.drift import drift_check
@@ -102,7 +103,7 @@ def run_validation(
                                        "dup_rows": row["dup_rows"]})
                 dv = uniqueness.duplicate_violations(df, c, salt_lanes,
                                                      dups=dups).select(
-                    F.col(c).cast("string").alias(key_cols[0]),
+                    named_column(c).cast("string").alias(key_cols[0]),
                     "keyword", "schema_path", "instance_path", "value", "msg",
                     "errors", "resolution_scope", "referrer")
                 violations = violations.unionByName(dv, allowMissingColumns=True)
@@ -122,7 +123,7 @@ def run_validation(
             keep_cols = list(dict.fromkeys(key_cols + [req.column]))
             o = cache_scope.persist(referential.orphans(
                 df, req.column, dim, dim_col or req.column,
-                strategy="broadcast").select(*keep_cols))
+                strategy="broadcast").select(*[named_column(k) for k in keep_cols]))
             row = referential.orphan_verdict(df, req.column, dim, dim_col or req.column,
                                              strategy="broadcast",
                                              orphans_df=o).collect()[0]
@@ -133,7 +134,8 @@ def run_validation(
                                                ref_name=dim_name,
                                                strategy="broadcast",
                                                orphans_df=o)
-            ov = ov.select(*[F.col(k).cast("string").alias(k) for k in key_cols],
+            ov = ov.select(*[named_column(k).cast("string").alias(k)
+                             for k in key_cols],
                            "keyword", "schema_path", "instance_path", "value", "msg",
                     "errors", "resolution_scope", "referrer")
             violations = violations.unionByName(ov)
@@ -153,7 +155,7 @@ def run_validation(
             d_src, r_src, d_col = df, ref, req.column
             if dd.get("kind") == "phash_weight":
                 d_col = f"__bw_{req.column}"
-                bw = F.bit_count(F.col(req.column)).alias(d_col)
+                bw = F.bit_count(named_column(req.column)).alias(d_col)
                 d_src = df.select(bw)
                 r_src = ref.select(bw) if ref is not None else None
                 dd.setdefault("lo", 0.0)
@@ -215,7 +217,7 @@ def run_validation(
         elif req.kind == "null_fraction":
             thresh = float(req.config)
             row = df.agg(
-                (F.sum(F.col(req.column).isNull().cast("long")) /
+                (F.sum(named_column(req.column).isNull().cast("long")) /
                  F.count(F.lit(1))).alias("frac")).collect()[0]
             # empty table => frac NULL: vacuous pass (0 rows, 0 nulls) —
             # the old  NULL <= thresh  comparison raised (review find r4)

@@ -1,7 +1,10 @@
 """Dynamic-JSON path: Arrow-batched validation of a JSON string column,
 including recursive $refs (impossible on the pure-Catalyst path)."""
 
+from decimal import Decimal
+
 from sparkschema.compiler.jsoncol import json_valid_column, validate_json_column
+from sparkschema.spec.jsonvalue import parse_json
 from sparkschema.spec.registry import SpecRegistry
 
 
@@ -102,3 +105,29 @@ def test_non_standard_constants_are_parse_errors(spark):
     out = validate_json_column(df, "doc", NUMERIC_SPEC, key_cols=["id"])
     got = sorted((r.id, r.keyword, r.msg) for r in out.collect())
     assert got == [(i, "parse", "Could not parse JSON.") for i in (1, 2, 3)]
+
+
+def test_jsoncol_ref_with_fractional_keywords(spark):
+    reg = SpecRegistry("draft7")
+    reg.add_schema("http://example.com/frac.json",
+                   parse_json('{"minimum": 0.5, "multipleOf": 0.25}'))
+    schema = {"$ref": "http://example.com/frac.json"}
+    df = spark.createDataFrame(
+        [("a", "0.1"), ("b", "0.75"), ("c", "0.6"), ("d", "2")],
+        "id string, js string")
+    got = {r.id: r.ok for r in
+           df.select("id", json_valid_column("js", schema, registry=reg)
+                     .alias("ok")).collect()}
+    # 0.1 fails minimum 0.5; 0.6 fails multipleOf 0.25; 0.75 and 2 pass
+    assert got == {"a": False, "b": True, "c": False, "d": True}
+
+
+def test_dump_json_exact_roundtrips_decimals():
+    from sparkschema.spec.jsonvalue import dump_json_exact
+
+    doc = parse_json('{"minimum": 0.5, "multipleOf": 0.25, "x": [1.5, 5e33], '
+                     '"s": "t", "n": null, "b": true, "i": 7}')
+    back = parse_json(dump_json_exact(doc))
+    assert back == doc
+    assert isinstance(back["minimum"], Decimal)
+    assert back["minimum"] == Decimal("0.5")

@@ -77,6 +77,27 @@ def test_columnar_catalog_override(spark):
     assert rows[0].msg == "FEHLT: w"
 
 
+def test_columnar_custom_format(spark):
+    """A caller's Column-building format runs on a typed column; on an
+    array element, whose value is a lambda variable of the compiled text,
+    it is refused at compile time."""
+    import pytest
+
+    from sparkschema.spec.parser import SpecError
+
+    even = {"even": lambda c: F.length(c) % 2 == 0}
+    df = spark.createDataFrame([(1, "ab", ["ab"]), (2, "abc", ["abc"])],
+                               "id long, s string, a array<string>")
+    cts = compile_table_spec({"properties": {"s": {"format": "even"}}}, df,
+                             key_cols=["id"], formats=even)
+    assert [(r.id, r.keyword) for r in cts.violations(df).collect()] \
+        == [("2", "format")]
+    assert df.where(cts.row_valid()).count() == 1
+    with pytest.raises(SpecError, match="array element or map value"):
+        compile_table_spec({"properties": {"a": {"items": {"format": "even"}}}},
+                           df, key_cols=["id"], formats=even)
+
+
 def test_url_handler_registration(tmp_path):
     """addUrlHandler analog (reference SchemaValidator.scala:60-67)."""
     p = tmp_path / "s.json"

@@ -291,3 +291,54 @@ def test_x_drift_phash_weight_kind(spark, images):
     again = run_validation(spec2, images, key_cols=["image_id"])
     d2 = [v for v in again.table_verdicts if v["check"] == "drift:phash"]
     assert len(d2) == 1 and d2[0]["pass"]
+
+
+ODD_NAMES = ["a.b", "we`ird", "my col", "x$y", "ü", "x${y}"]
+
+
+@pytest.mark.parametrize("name", ODD_NAMES)
+def test_odd_column_names_validate_like_kernel(spark, name):
+    """A column name with a dot, a back-quote, a space, a ``$`` or a
+    non-ASCII letter works as a checked property, the report key, an
+    ``x-unique`` column and a ``$ref_data`` column, and the row verdicts
+    match the kernel's."""
+    from collections import Counter
+
+    from sparkschema.spec.interpreter import Validator
+
+    values = [1, 2, 2, -1, 7, None]
+    df = spark.createDataFrame([(v, i) for i, v in enumerate(values)],
+                               f"{_ddl(name)} int, i int")
+    dim = spark.createDataFrame([(1,), (2,), (-1,)], f"{_ddl(name)} int")
+    row_spec = {"type": "object", "required": [name],
+                "properties": {name: {"type": "integer", "minimum": 0}}}
+    spec = {**row_spec, "properties": {name: {
+        **row_spec["properties"][name],
+        "x-unique": True, "$ref_data": f"dim.{name}"}}}
+    res = run_validation(spec, df, key_cols=[name], dims={"dim": dim})
+
+    kernel = Validator()
+    expected = Counter(
+        (None if v is None else str(v), e.keyword)
+        for v in values
+        for e in kernel.validate(row_spec, {} if v is None else {name: v}))
+    rows = res.violations.collect()
+    got = Counter((r[name], r["keyword"]) for r in rows
+                  if r["keyword"] not in ("x-unique", "$ref_data"))
+    assert got == expected
+    assert Counter((r[name], r["keyword"]) for r in rows
+                   if r["keyword"] in ("x-unique", "$ref_data")) \
+        == Counter({("2", "x-unique"): 1, ("7", "$ref_data"): 1})
+    assert df.where(~res.compiled.row_valid()).count() == sum(
+        1 for v in values
+        if kernel.validate(row_spec, {} if v is None else {name: v}))
+    verdicts = {v["check"]: v for v in res.table_verdicts}
+    assert verdicts[f"unique:{name}"]["dup_keys"] == 1
+    assert verdicts[f"ref:{name}->{name}"]["orphan_rows"] == 1
+    failing = {r["check"] for r in res.partition_verdicts.collect()
+               if not r["pass"]}
+    assert failing == {f"minimum:/{name}", f"required:/{name}"}
+
+
+def _ddl(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
