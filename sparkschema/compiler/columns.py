@@ -174,17 +174,16 @@ def _udf_call(udf, x: Sql) -> Sql:
 
 
 def _as_text(path: str, build: Callable[[], Sql]) -> Sql:
-    """``build()``, with a Column that cannot be bound into the text (a
-    Python UDF or a caller's format on an array element or map value,
-    a lambda variable there) refused as a :class:`SpecError` at ``path``."""
+    """``build()``, with a Python UDF on an array element or map value (a
+    lambda variable of the text, which Spark does not let a Python UDF
+    read) refused as a :class:`SpecError` at ``path``."""
     try:
         return build()
     except SqlTextError as err:
         from sparkschema.spec.parser import SpecError
-        raise SpecError(path, f"{err}: a Python UDF or a caller's format "
-                              f"cannot run on an array element or map "
-                              f"value of a typed column (use the kernel "
-                              f"path for this spec)") from None
+        raise SpecError(path, f"{err}: a Python UDF cannot run on an array "
+                              f"element or map value of a typed column "
+                              f"(use the kernel path for this spec)") from None
 
 
 def _double_cmp(col: Sql, v: Any, op: str) -> Sql:
@@ -362,11 +361,6 @@ def grapheme_length_sql(col: Sql) -> Sql:
     return S.when(ascii_no_crlf, S.length(col)).otherwise(S.length(clusters))
 
 
-def grapheme_length_col(col: Column) -> Column:
-    """:func:`grapheme_length_sql` over a Column."""
-    return S.over(col, grapheme_length_sql)
-
-
 def json_eq_col(col: Sql, v: Any, dt: T.DataType) -> Sql:
     """Boolean SQL: value at ``col`` deep-equals JSON value ``v``.
 
@@ -385,30 +379,28 @@ def json_eq_col(col: Sql, v: Any, dt: T.DataType) -> Sql:
         names = {f.name for f in dt.fields}
         if any(k not in names for k in v):
             return S.lit(False)  # key the dtype can't carry ⇒ never equal
-        cond = col.isNotNull()
-        for f in dt.fields:
-            cond = cond & json_eq_col(col[f.name], v.get(f.name), f.dataType)
-        return cond
+        return S.all_of([col.isNotNull()] + [
+            json_eq_col(col.field(f.name), v.get(f.name), f.dataType)
+            for f in dt.fields])
     if isinstance(dt, T.ArrayType):
         if not isinstance(v, (list, tuple)):
             return S.lit(False)
-        cond = col.isNotNull() & (S.size(col) == len(v))
-        for i, x in enumerate(v):
-            cond = cond & json_eq_col(S.get(col, i), x, dt.elementType)
-        return cond
+        return S.all_of([col.isNotNull(), S.size(col) == len(v)] + [
+            json_eq_col(S.get(col, i), x, dt.elementType)
+            for i, x in enumerate(v)])
     if isinstance(dt, T.MapType):
         if not isinstance(v, dict):
             return S.lit(False)
-        cond = col.isNotNull() & (S.size(col) == len(v))
+        conds = [col.isNotNull(), S.size(col) == len(v)]
         for k, x in v.items():
             el = S.try_element_at(col, S.lit(k))
             if x is None:
                 # JSON null value: key must exist but map NULL ≡ absent in the
                 # columnar model, so require the key and a NULL value.
-                cond = cond & S.map_contains_key(col, S.lit(k)) & el.isNull()
+                conds += [S.map_contains_key(col, S.lit(k)), el.isNull()]
             else:
-                cond = cond & json_eq_col(el, x, dt.valueType)
-        return cond
+                conds.append(json_eq_col(el, x, dt.valueType))
+        return S.all_of(conds)
     # scalars
     domain = json_domain(dt)
     if domain == "number":
@@ -456,8 +448,7 @@ class ColumnCompiler:
     (:func:`sqltext.bind`).
 
     ``formats`` maps a format name to a Column builder, handed the Column
-    of the value; it cannot run on an array element or map value, where
-    that value is a lambda variable of the text."""
+    of the value (:func:`sqltext.bind_over`)."""
 
     def __init__(self, dialect: str = "draft7",
                  formats: dict[str, Callable[[Column], Column]] | None = None,
@@ -682,8 +673,7 @@ class ColumnCompiler:
                 from sparkschema.compiler.formats_sql import int_format_double
                 pred = int_format_double(col, fmt)
             else:
-                pred = _as_text(f"{spath}/format", lambda: format_predicate(
-                    fmt, col, self.formats))
+                pred = format_predicate(fmt, col, self.formats)
             out.append(self._chk("format", f"{spath}/format", ipath,
                                  present & ~pred,
                                  col, "str.format", vs, S.lit(fmt)))
@@ -862,8 +852,7 @@ class ColumnCompiler:
                                  present & ~matches, col, *msg))
         fmt = schema.get("format")
         if isinstance(fmt, str) and fmt not in ("int32", "int64"):
-            pred = _as_text(f"{spath}/format", lambda: format_predicate(
-                fmt, col, self.formats))
+            pred = format_predicate(fmt, col, self.formats)
             out.append(self._chk("format", f"{spath}/format", ipath,
                                  present & ~pred, col, "str.format",
                                  col, S.lit(fmt)))
@@ -929,14 +918,14 @@ class ColumnCompiler:
             if isinstance(props, dict):
                 for k, sub in props.items():
                     if k in fields:
-                        out += self.compile_checks(sub, col[k], fields[k],
+                        out += self.compile_checks(sub, col.field(k), fields[k],
                                                    f"{spath}/properties/{k}",
                                                    f"{ipath}/{k}")
             if isinstance(req, list):
                 for k in req:
                     # a struct field that's NULL models the absent property;
                     # a field missing from the dtype is statically absent
-                    fail = col[k].isNull() if k in fields else S.lit(True)
+                    fail = col.field(k).isNull() if k in fields else S.lit(True)
                     out.append(self._chk("required", f"{spath}/required",
                                          f"{ipath}/{k}", present & fail,
                                          S.lit("null"), "obj.required.prop",
@@ -949,10 +938,8 @@ class ColumnCompiler:
             names = list(fields)
 
             def present_count() -> Sql:
-                c = S.lit(0)
-                for k in names:
-                    c = c + col[k].isNotNull().cast("int")
-                return c
+                return S.sum_of([S.lit(0)] + [
+                    col.field(k).isNotNull().cast("int") for k in names])
 
             mnp = schema.get("minProperties")
             if isinstance(mnp, int) and not isinstance(mnp, bool):
@@ -985,7 +972,7 @@ class ColumnCompiler:
                             pn, S.lit(k), T.StringType(),
                             f"{spath}/propertyNames", f"{ipath}/{k}"):
                         out.append(dataclasses.replace(
-                            chk, fail_sql=present & col[k].isNotNull()
+                            chk, fail_sql=present & col.field(k).isNotNull()
                             & chk.fail_sql))
 
             patprops = schema.get("patternProperties")
@@ -998,7 +985,7 @@ class ColumnCompiler:
                     rxs.append(rx)
                     for k in names:
                         if rx.search(k):
-                            el = col[k]
+                            el = col.field(k)
                             out += self.compile_checks(
                                 sub, el, fields[k],
                                 f"{spath}/patternProperties/{pat}",
@@ -1015,12 +1002,12 @@ class ColumnCompiler:
                         out.append(self._chk(
                             "additionalProperties",
                             f"{spath}/additionalProperties", ipath,
-                            present & col[k].isNotNull(), S.lit(k),
+                            present & col.field(k).isNotNull(), S.lit(k),
                             "obj.additional.props", S.lit(k)))
                 elif isinstance(ap, dict):
                     for k in extras:
                         out += self.compile_checks(
-                            ap, col[k], fields[k],
+                            ap, col.field(k), fields[k],
                             f"{spath}/additionalProperties", f"{ipath}/{k}")
 
             deps = schema.get("dependencies")
@@ -1032,12 +1019,12 @@ class ColumnCompiler:
                         dep = [dep]
                     if isinstance(dep, list):
                         for b in dep:
-                            missing = col[b].isNull() if b in fields \
+                            missing = col.field(b).isNull() if b in fields \
                                 else S.lit(True)
                             out.append(self._chk(
                                 "dependencies", f"{spath}/dependencies",
                                 f"{ipath}/{a}",
-                                present & col[a].isNotNull() & missing,
+                                present & col.field(a).isNotNull() & missing,
                                 S.lit(a), "obj.missing.prop.dep", S.lit(b)))
                     elif isinstance(dep, (dict, bool)):
                         # schema form recurses so violations carry the
@@ -1049,7 +1036,7 @@ class ColumnCompiler:
                                 f"{spath}/dependencies/{a}", ipath):
                             out.append(dataclasses.replace(
                                 chk,
-                                fail_sql=present & col[a].isNotNull()
+                                fail_sql=present & col.field(a).isNotNull()
                                 & S.coalesce(chk.fail_sql, S.lit(False))))
             return out
 
@@ -1226,9 +1213,7 @@ class ColumnCompiler:
         oneof = schema.get("oneOf")
         if isinstance(oneof, list) and oneof:
             valids = [sub_valid(s) for s in oneof]
-            cnt = valids[0].cast("int")
-            for v in valids[1:]:
-                cnt = cnt + v.cast("int")
+            cnt = S.sum_of([v.cast("int") for v in valids])
             # matched-branch paths, reported like the kernel / the
             # reference's any.one.of.many (AnyConstraintValidators:170-186)
             matched = S.array_compact(S.array(*[

@@ -8,7 +8,7 @@ compilers alike. Everything stays inside whole-stage codegen — regex via
 ``rlike``, timestamps via ``try_to_timestamp`` — no Python in the hot
 path. Unknown format names compile to ``true`` (StringValidators.scala:120).
 A caller's format is a Column builder; :func:`format_predicate` binds its
-Column into the text."""
+Column into the text (:func:`~sparkschema.compiler.sqltext.bind_over`)."""
 
 from __future__ import annotations
 
@@ -121,7 +121,7 @@ def format_predicate(name: str, col: Sql,
     text), then :data:`SQL_FORMATS`; an unknown name is ``true``."""
     custom = (extra or {}).get(name)
     if custom is not None:
-        return S.bind(custom(S.column(col)))
+        return S.bind_over(col, custom)
     fn = SQL_FORMATS.get(name)
     if fn is None:
         return S.lit(True)  # unknown format ⇒ success

@@ -26,9 +26,14 @@ the helpers they share take and return text. A Column with no text form
 (a Python UDF, a caller's format builder, an input expression) enters
 the text through :func:`bind`; :func:`column` turns text back into a
 Column, binding such a Column as the variable of a one-element
-``transform``. Spark's parser overflows its stack on a few hundred nested
-calls (252 ``and`` calls on the driver thread), so a caller that chains
-hundreds of operands keeps the chain short or joins it as Columns.
+``transform``. A Column built over a value that reads a lambda variable
+of the text (:func:`bind_over`, for a caller's format on an array
+element) cannot be bound from outside that lambda, so the higher-order
+call around it is built with :mod:`pyspark.sql.functions`, whose lambda
+variables are Columns, and bound in instead. Spark's parser overflows its
+stack on a few hundred nested calls (252 ``and`` calls on the driver
+thread), so a chain of hundreds of operands is balanced
+(:func:`all_of`, :func:`any_of`, :func:`sum_of`) or joined as Columns.
 
 Literals: plain Python values are always literals, never column names.
 Strings go through :func:`quote`, which gives text that reads the same
@@ -137,6 +142,27 @@ class Sql:
     def __getitem__(self, field: Any) -> Sql:
         return Sql(f"{self.text}[{lit(field).text}]", self.binds)
 
+    def field(self, name: str) -> Sql:
+        """Field ``name`` of a struct, ``x['name']`` as ``col[name]``
+        builds it. Spark takes only a string literal there, not the
+        ``CAST`` that :func:`quote` makes of other strings: other
+        characters stand in the literal as they are, and a ``${`` is split
+        over two adjacent literals, which the parser joins. A name holding
+        ``'`` or ``\\``, which no literal reads the same under both
+        settings of ``escapedStringLiterals``, is read as ``x.`name```
+        (a ``$`` is safe there unless it starts a ``${``)."""
+        try:
+            name.encode("utf-8")
+        except UnicodeEncodeError:
+            raise SqlTextError(f"field {name!r} has no UTF-8 form") from None
+        if "'" not in name and "\\" not in name:
+            split = name.replace("${", "$' '{")
+            return Sql(f"{self.text}['{split}']", self.binds)
+        if "${" in name:
+            raise SqlTextError(f"field {name!r} holds '${{' and a quote "
+                               f"or backslash")
+        return Sql(f"{self.text}.`{name.replace('`', '``')}`", self.binds)
+
 
 class _When(Sql):
     """``CASE WHEN …`` being built; usable as-is (no ``ELSE``)."""
@@ -219,10 +245,10 @@ def lit(value: Any) -> Sql:
     raise SqlTextError(f"no SQL literal for {type(value).__name__}")
 
 
-# Longer AND/OR chains are balanced trees (log-depth nesting): Spark's
-# analyzer gives up on a left-deep chain of a few hundred operands, which
-# is what the Column API builds for a long enum or property list; the
-# verdict is the same
+# Longer AND/OR/+ chains are balanced trees (log-depth nesting): Spark's
+# parser and analyzer give up on a left-deep chain of a few hundred
+# operands, which is what the Column API builds for a long enum or
+# property list; the verdict is the same
 _CHAIN_MAX = 32
 
 
@@ -253,6 +279,11 @@ def any_of(items: list[Sql]) -> Sql:
     return _chain("or", items)
 
 
+def sum_of(items: list[Sql]) -> Sql:
+    """``items[0] + items[1] + …``, shaped like :func:`all_of`."""
+    return _chain("+", items)
+
+
 def _binds(*parts: Sql) -> tuple:
     """The bound Columns of ``parts``, each once."""
     out: dict = {}
@@ -272,18 +303,27 @@ def _fresh() -> str:
     return f"x_{next(_names)}"
 
 
-def lambda_(f: Callable[..., Sql], arity: int = 1) -> Sql:
-    """``x_<n> -> f(x_<n>)``: a SQL lambda of one argument, or of
-    ``(x_<n>, x_<m>)`` for ``arity=2``."""
+def _hof(name: str, arr: Sql, f: Callable[..., Sql], arity: int = 1) -> Sql:
+    """``name(arr, x_<n> -> f(x_<n>))``, with a lambda of ``(x_<n>, x_<m>)``
+    for ``arity=2``. When ``f`` binds a Column that reads the lambda's
+    variables (:func:`bind_over`), the call is built with the function of
+    :mod:`pyspark.sql.functions` instead, whose lambda hands that Column
+    the variables, and bound in."""
     xs = [_fresh() for _ in range(arity)]
     body = lit(f(*(Sql(x) for x in xs)))
-    head = xs[0] if arity == 1 else f"({', '.join(xs)})"
-    return Sql(f"{head} -> {body.text}", body.binds)
+    if not any(isinstance(c, _Deferred) and c.needs & set(xs)
+               for _, c in body.binds):
+        head = xs[0] if arity == 1 else f"({', '.join(xs)})"
+        return _fn(name, arr, Sql(f"{head} -> {body.text}", body.binds))
 
+    def make(env: dict) -> Column:
+        def inner(*lv: Column) -> Column:
+            return column(body, {**env, **dict(zip(xs, lv))})
+        fn = (lambda a: inner(a)) if arity == 1 else \
+            (lambda a, b: inner(a, b))
+        return getattr(F, name)(column(arr, env), fn)
 
-def _hof(name: str, arr: Sql, f: Callable[..., Sql], *rest: Any,
-         arity: int = 1) -> Sql:
-    return _fn(name, arr, lambda_(f, arity), *rest)
+    return _defer((_needs(arr) | _needs(body)) - set(xs), make)
 
 
 def _type(dtype: str | T.DataType) -> str:
@@ -351,33 +391,87 @@ def bind(c: Column | str) -> Sql:
 
 
 # the names :func:`_fresh` makes (10 digits and up), so a column or a
-# string that happens to read ``x_1`` is not taken for one
-_VAR = re.compile(r"\bx_\d{10,}\b")
+# string that happens to read ``x_1`` is not taken for one; string
+# literals (never holding ``'``, see :func:`quote`) and quoted identifiers
+# match as a whole and are skipped
+_VAR = re.compile(r"'[^']*'|`(?:[^`]|``)*`|\b(x_\d{10,})\b")
 _PARAMS = re.compile(r"(\(?x_\d{10,}(?:, x_\d{10,})*\)?) ->")
 
 
-def column(s: Sql) -> Column:
+def _vars(text: str) -> list[str]:
+    """The lambda variables and placeholders ``text`` reads, in order."""
+    return [m.group(1) for m in _VAR.finditer(text) if m.group(1)]
+
+
+class _Deferred:
+    """A bound Column that reads lambda variables of the text (``needs``):
+    ``make(env)`` builds it once ``env`` maps each of them to the Column
+    of a lambda variable of :mod:`pyspark.sql.functions`."""
+
+    __slots__ = ("needs", "make")
+
+    def __init__(self, needs: frozenset, make: Callable[[dict], Column]):
+        self.needs = needs
+        self.make = make
+
+
+def _free(s: Sql) -> set:
+    """The lambda variables ``s`` reads outside of any lambda of its own."""
+    declared = {v for m in _PARAMS.findall(s.text) for v in _vars(m)}
+    return set(_vars(s.text)) - declared - {x for x, _ in s.binds}
+
+
+def _needs(s: Sql) -> frozenset:
+    """The lambda variables ``s`` and its deferred Columns read."""
+    out = set(_free(s))
+    for _, c in s.binds:
+        if isinstance(c, _Deferred):
+            out |= c.needs
+    return frozenset(out)
+
+
+def _defer(needs: frozenset, make: Callable[[dict], Column]) -> Sql:
+    if not needs:
+        return bind(make({}))
+    x = _fresh()
+    return Sql(x, ((x, _Deferred(needs, make)),))
+
+
+def bind_over(x: Sql, build: Callable[[Column], Column]) -> Sql:
+    """``build(c)`` bound into the text, with ``c`` the Column of ``x``.
+    When ``x`` reads the variable of a lambda around it (an array element,
+    a map value), the Column is built when that lambda is
+    (:func:`_hof`)."""
+    return _defer(_needs(x), lambda env: build(column(x, env)))
+
+
+def column(s: Sql, env: dict | None = None) -> Column:
     """The Column of ``s``, crossing to the JVM in one ``F.expr``. Bound
     Columns become the variable of a one-element ``transform``:
     ``transform(array(c), x -> s)[0]``, with a struct of them past
-    one. Raises :class:`SqlTextError` when ``s`` reads the variable of a
-    lambda it is not inside of: its Column cannot exist."""
-    declared = {v for m in _PARAMS.findall(s.text) for v in _VAR.findall(m)}
-    free = set(_VAR.findall(s.text)) - declared - {x for x, _ in s.binds}
+    one. ``env`` maps lambda variables ``s`` reads to Columns, which are
+    bound the same way. Raises :class:`SqlTextError` when ``s`` reads
+    the variable of a lambda it is not inside of: its Column cannot
+    exist."""
+    env = env or {}
+    free = _needs(s) - env.keys()
     if free:
         raise SqlTextError(f"no Column for a value that reads lambda "
                            f"variable {min(free)}")
-    if not s.binds:
+    binds = [(x, c.make(env) if isinstance(c, _Deferred) else c)
+             for x, c in s.binds]
+    binds += [(x, env[x]) for x in sorted(_free(s))]
+    if not binds:
         return F.expr(s.text)
-    if len(s.binds) == 1:
-        [(x, c)] = s.binds
+    if len(binds) == 1:
+        [(x, c)] = binds
         arr, text = F.array(c), s.text
     else:
         x = _fresh()
-        field = {name: f"{x}.b{i}" for i, (name, _) in enumerate(s.binds)}
+        field = {name: f"{x}.b{i}" for i, (name, _) in enumerate(binds)}
         arr = F.array(F.struct(*[c.alias(f"b{i}")
-                                 for i, (_, c) in enumerate(s.binds)]))
-        text = _VAR.sub(lambda m: field.get(m.group(0), m.group(0)), s.text)
+                                 for i, (_, c) in enumerate(binds)]))
+        text = _VAR.sub(lambda m: field.get(m.group(1), m.group(0)), s.text)
     return F.get(F.call_function("transform", arr,
                                  F.expr(f"{x} -> {text}")), 0)
 

@@ -404,39 +404,32 @@ def object_schema_valid(cc: ColumnCompiler, s: Any,
         return S.lit(True)
     if s is False:
         return S.lit(False)
-    ok = S.lit(True)
+    ok = [S.lit(True)]
     props = s.get("properties") or {}
     for name, sub in props.items():
         if name in fields and isinstance(sub, (dict, bool)):
             plain = sub if not isinstance(sub, dict) else {
                 k: v for k, v in sub.items() if k not in _EXTENSION_KEYWORDS}
-            ok = ok & cc.valid_sql(plain, S.named(name), fields[name])
+            ok.append(cc.valid_sql(plain, S.named(name), fields[name]))
     for r in s.get("required") or []:
-        ok = ok & (S.named(r).isNotNull() if r in fields else S.lit(False))
-    for comb, op in (("allOf", "and"), ("anyOf", "or")):
+        ok.append(S.named(r).isNotNull() if r in fields else S.lit(False))
+    for comb, join in (("allOf", S.all_of), ("anyOf", S.any_of)):
         subs = s.get(comb)
         if isinstance(subs, list) and subs:
-            acc = object_schema_valid(cc, subs[0], fields)
-            for x in subs[1:]:
-                nxt = object_schema_valid(cc, x, fields)
-                acc = (acc & nxt) if op == "and" else (acc | nxt)
-            ok = ok & acc
+            ok.append(join([object_schema_valid(cc, x, fields) for x in subs]))
     oneof = s.get("oneOf")
     if isinstance(oneof, list) and oneof:
-        cnt = S.coalesce(object_schema_valid(cc, oneof[0], fields),
-                         S.lit(False)).cast("int")
-        for x in oneof[1:]:
-            cnt = cnt + S.coalesce(object_schema_valid(cc, x, fields),
-                                   S.lit(False)).cast("int")
-        ok = ok & (cnt == 1)
+        ok.append(S.sum_of([
+            S.coalesce(object_schema_valid(cc, x, fields),
+                       S.lit(False)).cast("int") for x in oneof]) == 1)
     if "not" in s:
-        ok = ok & ~object_schema_valid(cc, s["not"], fields)
+        ok.append(~object_schema_valid(cc, s["not"], fields))
     if "if" in s:
         cond = S.coalesce(object_schema_valid(cc, s["if"], fields), S.lit(False))
         then_v = object_schema_valid(cc, s["then"], fields) if "then" in s else S.lit(True)
         else_v = object_schema_valid(cc, s["else"], fields) if "else" in s else S.lit(True)
-        ok = ok & S.when(cond, then_v).otherwise(else_v)
-    return ok
+        ok.append(S.when(cond, then_v).otherwise(else_v))
+    return S.all_of(ok)
 
 
 def _row_combinators(cc: ColumnCompiler, schema: dict,
@@ -469,18 +462,15 @@ def _row_combinators(cc: ColumnCompiler, schema: dict,
     for comb, key in (("allOf", "any.all"), ("anyOf", "any.any")):
         subs = schema.get(comb)
         if isinstance(subs, list) and subs:
-            acc = obj_valid(subs[0])
-            for x in subs[1:]:
-                acc = (acc & obj_valid(x)) if comb == "allOf" else (acc | obj_valid(x))
+            join = S.all_of if comb == "allOf" else S.any_of
+            acc = join([obj_valid(x) for x in subs])
             out.append(Check(comb, f"#/{comb}", "/", ~S.coalesce(acc, S.lit(False)),
                              value_col,
                              S.lit(msg_catalog.render(key, catalog=catalog))))
     oneof = schema.get("oneOf")
     if isinstance(oneof, list) and oneof:
         valids = [S.coalesce(obj_valid(x), S.lit(False)) for x in oneof]
-        cnt = valids[0].cast("int")
-        for v in valids[1:]:
-            cnt = cnt + v.cast("int")
+        cnt = S.sum_of([v.cast("int") for v in valids])
         matched = S.array_compact(S.array(*[
             S.when(v, S.lit(f"/oneOf/{i}")) for i, v in enumerate(valids)]))
         err = S.when(cnt > 1, S.to_json(S.struct(matched.alias("matched"))))

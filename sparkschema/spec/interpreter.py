@@ -33,7 +33,7 @@ Known, documented deviations (SURVEY.md §7 watch list):
   delta between this Python's tables and the JVM's ICU data, embedded
   in spec/_unicode_delta.py with a live-JVM drift test. The
   columnar and VARIANT paths use the same fold in SQL
-  (compiler.columns.grapheme_length_col).
+  (compiler.columns.grapheme_length_sql).
 - ``pattern`` evaluates with Python ``re`` (unanchored ``search``) after a
   compile-time ECMA-262 dialect translation
   (:mod:`sparkschema.spec.ecma_pattern`: ASCII ``\\d``/``\\w``, ECMA ``\\s``

@@ -8,7 +8,8 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import functions as F
 
-from sparkschema.compiler.columns import ColumnCompiler, grapheme_length_col
+from sparkschema.compiler import sqltext as S
+from sparkschema.compiler.columns import ColumnCompiler, grapheme_length_sql
 from sparkschema.spec.interpreter import Validator
 from sparkschema.spec.jsonvalue import grapheme_length, parse_json
 
@@ -376,7 +377,8 @@ def test_grapheme_length_col_matches_kernel(spark):
     df = spark.createDataFrame([(i, s) for i, s in enumerate(GRAPHEME_SAMPLES)],
                                "i int, s string")
     got = {r.i: r.n for r in
-           df.select("i", grapheme_length_col(F.col("s")).alias("n")).collect()}
+           df.select("i", S.over(F.col("s"), grapheme_length_sql)
+                     .alias("n")).collect()}
     for i, s in enumerate(GRAPHEME_SAMPLES):
         assert got[i] == grapheme_length(s), (
             f"{s!r}: sql={got[i]} kernel={grapheme_length(s)}")
@@ -464,3 +466,29 @@ def test_wide_literals_compile_and_validate(spark):
                                      sdf.schema["s"].dataType).alias("ok")) \
             .collect()[0].ok
     assert ok is True
+
+
+def test_long_chains_in_one_check_compile(spark):
+    """A ``const`` over a 300-element array or a 300-field struct, a
+    300-field ``minProperties`` count and a 299-branch ``anyOf`` each
+    chain hundreds of operands in one check; they run and match the
+    kernel (a left-deep chain that long overflows Spark's parser)."""
+    n = 300
+    cc = ColumnCompiler()
+    kernel = Validator()
+    arr = list(range(n))
+    fields = ", ".join(f"f{i}: int" for i in range(n))
+    df = spark.createDataFrame(
+        [(1, arr, tuple(arr)), (2, arr[:-1] + [0], tuple([None] * n))],
+        f"i int, a array<int>, s struct<{fields}>")
+    obj = {f"f{i}": i for i in range(n)}
+    specs = [("a", {"const": arr}), ("s", {"const": obj}),
+             ("s", {"minProperties": n}),
+             ("a", {"anyOf": [{"minItems": k, "maxItems": k}
+                              for k in range(1, n)]})]
+    docs = {1: {"a": arr, "s": obj}, 2: {"a": arr[:-1] + [0], "s": {}}}
+    cols = [cc.compile_valid(spec, F.col(c), df.schema[c].dataType)
+            .alias(f"v{j}") for j, (c, spec) in enumerate(specs)]
+    for r in df.select("i", *cols).collect():
+        assert [r[f"v{j}"] for j in range(len(specs))] == [
+            not kernel.validate(spec, docs[r.i][c]) for c, spec in specs], r.i

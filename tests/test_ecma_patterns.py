@@ -191,6 +191,10 @@ def test_patternproperties_java_invalid_loud_compile_error(spark):
     with pytest.raises(SpecError, match="Java form"):
         cc.compile_valid({"patternProperties": {_PY_ONLY_PATTERN: {}}},
                          F.col("x"), dt)
+    # the kernel-regex UDF of a ``pattern`` cannot read an array element
+    with pytest.raises(SpecError, match="array element or map value"):
+        cc.compile_valid({"items": {"pattern": _PY_ONLY_PATTERN}},
+                         F.col("a"), T.ArrayType(T.StringType()))
 
 
 def test_only_ecma_pattern_translates_or_jvm_compiles():

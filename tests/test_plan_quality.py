@@ -474,6 +474,40 @@ def test_run_validation_round_trips_pinned(spark, tmp_path):
     assert 0 < n <= 1_500, n
 
 
+# SHA-256 of the normalized optimized plans of the violation report, the
+# verdicts and the invalid-row filter of BENCH_TABLE_SPEC over a parquet
+# scan, recorded while the typed checks were still built as Columns: the
+# SQL-text compile must give Catalyst the same plans.
+BENCH_TABLE_PLAN_SHA256 = {
+    "violations":
+        "ba04be00301a6aeaa12f926c23b62d65cad000031dd9d051017b2f2eb1555bcc",
+    "verdicts":
+        "a570f5cec990df7cf92c96c097cde8462666dd3cbcac71200876fe6bfdae38cd",
+    "invalid_rows":
+        "e4e00a2b10021e935a1785e6499ae7ce506a9bdf05f720466784b132453a46fd",
+}
+
+
+def test_table_compile_plans_pinned(spark, tmp_path):
+    import hashlib
+
+    path = str(tmp_path / "typed_plan")
+    spark.createDataFrame(
+        [("img-000000000001", 8, 8, "jpg", "a cat", 1),
+         ("img-000000000002", 3, 8, "tiff", "", 2)],
+        "image_id string, w int, h int, fmt string, caption string, "
+        "phash long").write.parquet(path)
+    df = spark.read.parquet(path)
+    cts = compile_table_spec(BENCH_TABLE_SPEC, df, key_cols=["image_id"])
+    plans = {"violations": cts.violations(df),
+             "verdicts": cts.verdicts(df),
+             "invalid_rows": df.where(~cts.row_valid())}
+    for name, q in plans.items():
+        plan = _normalized_optimized_plan(q)
+        assert hashlib.sha256(plan.encode()).hexdigest() \
+            == BENCH_TABLE_PLAN_SHA256[name], (name, plan[:2000])
+
+
 def test_variant_compile_plan_pinned(spark):
     """The normalized optimized plan of the benchmark's JSON spec is the
     one recorded before the compile was made cheaper: fewer Columns on

@@ -78,24 +78,48 @@ def test_columnar_catalog_override(spark):
 
 
 def test_columnar_custom_format(spark):
-    """A caller's Column-building format runs on a typed column; on an
-    array element, whose value is a lambda variable of the compiled text,
-    it is refused at compile time."""
-    import pytest
-
-    from sparkschema.spec.parser import SpecError
-
+    """A caller's Column-building format runs on a typed column, on an
+    array element, a map value, the element of a nested array and a
+    field of a struct element: wherever a built-in format runs."""
     even = {"even": lambda c: F.length(c) % 2 == 0}
-    df = spark.createDataFrame([(1, "ab", ["ab"]), (2, "abc", ["abc"])],
-                               "id long, s string, a array<string>")
-    cts = compile_table_spec({"properties": {"s": {"format": "even"}}}, df,
-                             key_cols=["id"], formats=even)
+    df = spark.createDataFrame(
+        [(1, "ab", ["ab", "cd"], {"k": "ab"}, [["ab"]], [("ab",)]),
+         (2, "abc", ["ab", "abc"], {"k": "abc"}, [["ab", "abc"]],
+          [("abc",)])],
+        "id long, s string, a array<string>, m map<string, string>, "
+        "aa array<array<string>>, sa array<struct<t: string>>")
+    fmt = {"format": "even"}
+    specs = [
+        ({"s": fmt}, "format", 2),
+        ({"a": {"items": fmt}}, "items", 2),
+        ({"a": {"items": [fmt], "additionalItems": fmt}}, "additionalItems",
+         2),
+        ({"a": {"contains": {"not": fmt}}}, "contains", 1),
+        ({"m": {"additionalProperties": fmt}}, "format", 2),
+        ({"m": {"patternProperties": {"^k": fmt}}}, "format", 2),
+        ({"aa": {"items": {"items": fmt}}}, "items", 2),
+        ({"sa": {"items": {"properties": {"t": fmt}}}}, "items", 2),
+    ]
+    for props, keyword, bad in specs:
+        cts = compile_table_spec({"properties": props}, df,
+                                 key_cols=["id"], formats=even)
+        assert [(r.id, r.keyword) for r in cts.violations(df).collect()] \
+            == [(str(bad), keyword)], props
+        assert [r.id for r in df.where(cts.row_valid()).collect()] \
+            == [3 - bad], props
+
+
+def test_columnar_literal_reading_like_a_lambda_variable(spark):
+    """A column name or a string constant that reads like a lambda
+    variable of the compiled text is not taken for one."""
+    name = "x_2147483650"
+    df = spark.createDataFrame([(1, name), (2, "y")],
+                               f"id long, {name} string")
+    spec = {"properties": {name: {"const": name, "format": "even"}}}
+    cts = compile_table_spec(spec, df, key_cols=["id"],
+                             formats={"even": lambda c: F.length(c) > 0})
     assert [(r.id, r.keyword) for r in cts.violations(df).collect()] \
-        == [("2", "format")]
-    assert df.where(cts.row_valid()).count() == 1
-    with pytest.raises(SpecError, match="array element or map value"):
-        compile_table_spec({"properties": {"a": {"items": {"format": "even"}}}},
-                           df, key_cols=["id"], formats=even)
+        == [("2", "const")]
 
 
 def test_url_handler_registration(tmp_path):

@@ -186,7 +186,8 @@ def test_grapheme_live_java_differential(spark):
 
     from pyspark.sql import functions as F
 
-    from sparkschema.compiler.columns import grapheme_length_col
+    from sparkschema.compiler import sqltext as S
+    from sparkschema.compiler.columns import grapheme_length_sql
     from sparkschema.spec.jsonvalue import grapheme_length
 
     alpha = [0x61, 0x31, 0x20, 0x09, 0x0D, 0x0A, 0x7F, 0x200D, 0x200C,
@@ -209,7 +210,7 @@ def test_grapheme_live_java_differential(spark):
 
     df = spark.createDataFrame(list(enumerate(cases)), "i int, s string")
     sql = {r.i: r.n for r in
-           df.select("i", grapheme_length_col(F.col("s")).alias("n"))
+           df.select("i", S.over(F.col("s"), grapheme_length_sql).alias("n"))
              .collect()}
     problems = []
     for i, (s, jn) in enumerate(zip(cases, out)):

@@ -187,7 +187,8 @@ def test_grapheme_differential_on_unicode_delta_ranges(spark):
     if not shutil.which("javac") or not shutil.which("java"):
         pytest.skip("no JDK in PATH")
 
-    from sparkschema.compiler.columns import grapheme_length_col
+    from sparkschema.compiler import sqltext as S
+    from sparkschema.compiler.columns import grapheme_length_sql
     from sparkschema.spec import _unicode_delta as UD
     from sparkschema.spec.jsonvalue import grapheme_length
 
@@ -242,7 +243,7 @@ def test_grapheme_differential_on_unicode_delta_ranges(spark):
 
     df = spark.createDataFrame(list(enumerate(cases)), "i int, s string")
     sql = {r.i: r.n for r in
-           df.select("i", grapheme_length_col(F.col("s")).alias("n"))
+           df.select("i", S.over(F.col("s"), grapheme_length_sql).alias("n"))
              .collect()}
     problems = []
     for i, (s, jn) in enumerate(zip(cases, out)):

@@ -342,3 +342,53 @@ def test_odd_column_names_validate_like_kernel(spark, name):
 
 def _ddl(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
+
+
+@pytest.mark.parametrize("name", ODD_NAMES + ["it's", "a\\b", "a\\$b"])
+def test_odd_struct_field_names_validate_like_kernel(spark, name):
+    """A struct field with a dot, a back-quote, a quote, a backslash, a
+    ``$`` or a non-ASCII letter in its name is read by ``properties``,
+    ``required``, ``dependencies``, ``maxProperties``, ``const`` and by
+    ``items`` on an array of structs, and the violations match the
+    kernel's."""
+    from collections import Counter
+
+    from sparkschema.compiler.table import compile_table_spec
+    from sparkschema.spec.interpreter import Validator
+
+    f = _ddl(name)
+    rows = [(0, 1, None, [1]), (1, -1, 1, [11]), (2, None, 1, []),
+            (3, 5, 5, [None]), (4, 2, 2, None)]
+    df = spark.createDataFrame(
+        [(i, (v, o), None if a is None else [(x,) for x in a])
+         for i, v, o, a in rows],
+        f"i int, s struct<{f}: int, other: int>, arr array<struct<{f}: int>>")
+    spec = {"type": "object", "properties": {
+        "s": {"type": "object", "required": [name],
+              "properties": {name: {"type": "integer", "minimum": 0}},
+              "dependencies": {name: ["other"]},
+              "maxProperties": 1,
+              "not": {"const": {name: 5, "other": 5}}},
+        "arr": {"type": "array",
+                "items": {"type": "object", "required": [name],
+                          "properties": {name: {"maximum": 10}}}}}}
+    cts = compile_table_spec(spec, df, key_cols=["i"])
+
+    def instance(v, o, a):
+        s = {k: x for k, x in ((name, v), ("other", o)) if x is not None}
+        doc = {"s": s}
+        if a is not None:
+            doc["arr"] = [{} if x is None else {name: x} for x in a]
+        return doc
+
+    # the typed path reports a failing array element as one ``items``
+    # violation of the array, the kernel the element's own keyword
+    kernel = Validator()
+    expected = Counter(
+        (str(i), "items" if e.instance_path.startswith("/arr/")
+         else e.keyword)
+        for i, v, o, a in rows
+        for e in kernel.validate(spec, instance(v, o, a)))
+    got = Counter((r.i, r.keyword) for r in cts.violations(df).collect())
+    assert got == expected
+    assert df.where(~cts.row_valid()).count() == len({i for i, _ in expected})
