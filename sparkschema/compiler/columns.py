@@ -9,7 +9,7 @@ trip until it crosses to the JVM in ``F.expr``, and parses into the tree
 the Column API would build. No Python runs on executors for any keyword in
 this module, save the two Arrow tiers below (a pattern with no portable
 Java form, a pathological ``multipleOf``), whose UDF Columns are bound into
-the text (:func:`sqltext.bind`).
+the text (:func:`sqltext.bind_python`).
 
 Typed-column semantics (the columnar re-expression of SURVEY.md §2.2):
 
@@ -169,8 +169,8 @@ def _as_decimal_mod_fail_udf(mo_dec: Decimal):
 
 def _udf_call(udf, x: Sql) -> Sql:
     """``udf(x)``: the UDF's Column over the Column of ``x``, bound into
-    the text (:func:`sqltext.bind`)."""
-    return S.bind(udf(S.column(x)))
+    the text (:func:`sqltext.bind_python`)."""
+    return S.bind_python(udf(S.column(x)))
 
 
 def _as_text(path: str, build: Callable[[], Sql]) -> Sql:

@@ -25,6 +25,14 @@ entries) and 4 over the py4j zip and the ``spark-core`` jar, about
 so a worker that loads either — even for a task with no rows — calls
 :func:`~sparkschema._worker.ready`, after which it re-reads an archive
 only when it changed.
+
+Each UDF runs once per row, in one ArrowEvalPython node, so a task holds
+one Python worker per UDF. :func:`validate_json_column` keeps every
+filter off the UDF's array: it drops the empty reports after an
+``explode_outer``, on the generated column, which Catalyst cannot push
+below the Generate. :func:`json_valid_column`'s UDF is nondeterministic,
+so a caller's filter on the verdict is not pushed below the projection
+that computes it, with a copy of the call.
 """
 
 from __future__ import annotations
@@ -117,6 +125,10 @@ def _make_udfs(schema: Any, registry, dialect: str | None):
 
         return pd.Series([one(x) for x in s])
 
+    # see json_valid_column: the optimizer must not copy the call into
+    # a filter it pushes below the projection that computes it
+    is_valid_udf = is_valid_udf.asNondeterministic()
+
     @F.pandas_udf(VIOLATION_ARRAY_TYPE)
     @on_load
     def violations_udf(s):
@@ -142,7 +154,25 @@ def _make_udfs(schema: Any, registry, dialect: str | None):
 
 def json_valid_column(json_col: Column | str, schema: Any,
                       registry=None, dialect: str | None = None) -> Column:
-    """Boolean Column: does the JSON text in ``json_col`` satisfy ``schema``?"""
+    """Boolean Column: does the JSON text in ``json_col`` satisfy ``schema``?
+
+    The kernel UDF is marked nondeterministic, so that it runs once per
+    row whatever filter the caller puts on its result: a deterministic
+    call is copied into a filter on the result that Catalyst pushes below
+    the projection computing it, and the plan then holds two
+    ArrowEvalPython nodes, each validating the rows and each holding its
+    own Python worker per task. What the mark costs callers (Spark's
+    analyzer rules for nondeterministic expressions):
+
+    - in a join condition it fails analysis
+      (``INVALID_NON_DETERMINISTIC_EXPRESSIONS``), and inside an
+      aggregate function (``sum``, ``count_if`` …) too
+      (``AGGREGATE_FUNCTION_WITH_NONDETERMINISTIC_EXPRESSION``): select
+      it as a column first and join or aggregate on that column.
+      ``select``, ``where`` and a ``groupBy`` key take it as before;
+    - a filter on other columns written after the ``select`` that
+      computes it is no longer pushed below the kernel or into the
+      scan: the kernel sees every row of the input. Filter first."""
     is_valid_udf, _ = _make_udfs(schema, registry, dialect)
     col = F.col(json_col) if isinstance(json_col, str) else json_col
     return is_valid_udf(col)
@@ -156,9 +186,15 @@ def validate_json_column(df: DataFrame, json_col: str, schema: Any,
     typed-table path."""
     _, violations_udf = _make_udfs(schema, registry, dialect)
     keys = key_cols or [df.columns[0]]
+    # explode_outer, then drop its NULL row for a document with no
+    # violation. A filter on the UDF's array (``size(__viol) > 0``), or
+    # the one a plain explode has Catalyst infer, is pushed below the
+    # projection with a copy of the UDF: two ArrowEvalPython nodes, and
+    # every document validated twice. A filter on the generated column
+    # stays above the Generate.
     return (
         df.select(*keys, violations_udf(F.col(json_col)).alias("__viol"))
-        .where(F.size("__viol") > 0)
-        .select(*keys, F.explode("__viol").alias("v"))
+        .select(*keys, F.explode_outer("__viol").alias("v"))
+        .where(F.col("v").isNotNull())
         .select(*keys, "v.*")
     )

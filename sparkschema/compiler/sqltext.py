@@ -24,8 +24,9 @@ Both compilers, the typed one (:mod:`~sparkschema.compiler.columns`,
 :mod:`~sparkschema.compiler.table`) and the VARIANT one, build text, so
 the helpers they share take and return text. A Column with no text form
 (a Python UDF, a caller's format builder, an input expression) enters
-the text through :func:`bind`; :func:`column` turns text back into a
-Column, binding such a Column as the variable of a one-element
+the text through :func:`bind` (a Python UDF through :func:`bind_python`,
+which marks it for :func:`calls_python`); :func:`column` turns text back
+into a Column, binding such a Column as the variable of a one-element
 ``transform``. A Column built over a value that reads a lambda variable
 of the text (:func:`bind_over`, for a caller's format on an array
 element) cannot be bound from outside that lambda, so the higher-order
@@ -415,6 +416,16 @@ class _Deferred:
         self.make = make
 
 
+class _Python(_Deferred):
+    """A bound Python UDF's Column (:func:`bind_python`); it reads no
+    lambda variable."""
+
+    __slots__ = ()
+
+    def __init__(self, c: Column):
+        super().__init__(frozenset(), lambda env: c)
+
+
 def _free(s: Sql) -> set:
     """The lambda variables ``s`` reads outside of any lambda of its own."""
     declared = {v for m in _PARAMS.findall(s.text) for v in _vars(m)}
@@ -435,6 +446,19 @@ def _defer(needs: frozenset, make: Callable[[dict], Column]) -> Sql:
         return bind(make({}))
     x = _fresh()
     return Sql(x, ((x, _Deferred(needs, make)),))
+
+
+def bind_python(c: Column) -> Sql:
+    """``c``, the Column of a Python UDF call, bound into the text like
+    :func:`bind`, and marked so that :func:`calls_python` finds it in
+    every text built over this one."""
+    x = _fresh()
+    return Sql(x, ((x, _Python(c)),))
+
+
+def calls_python(s: Sql) -> bool:
+    """Does ``s`` call a Python UDF (:func:`bind_python`)?"""
+    return any(isinstance(c, _Python) for _, c in s.binds)
 
 
 def bind_over(x: Sql, build: Callable[[Column], Column]) -> Sql:

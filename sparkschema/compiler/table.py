@@ -167,7 +167,10 @@ class CompiledTableSpec:
         key is an event-time column whose watermark metadata must survive
         for a downstream streaming aggregation).
 
-        The filter and the struct array each cross as one SQL text."""
+        The filter and the struct array each cross as one SQL text. A
+        spec with a check that runs a Python UDF (a ``pattern`` with no
+        Java form, a pathological ``multipleOf``) builds the array for
+        every row instead, so that the UDF runs once per row."""
         key_cols = [S.named_column(k) for k in self.key_cols]
         if not self.checks:
             return df.sparkSession.createDataFrame(
@@ -211,12 +214,23 @@ class CompiledTableSpec:
         # 6M-row sf1.0 lineitem violations build: 2.31 s → 1.16 s noop,
         # Generate+downstream back inside WholeStageCodegen, results
         # exceptAll-identical.
-        return (
-            df.where(~self.row_valid())
+        #
+        # A check that runs a Python UDF is the exception: gated on
+        # row_valid(), the UDF runs twice per row, under the filter and
+        # in the projection (two ArrowEvalPython nodes, each with its
+        # own Python workers). Such a spec builds the array for every
+        # row and drops the NULL row explode_outer gives a row with no
+        # violation; a filter on the generated column stays above the
+        # Generate.
+        python = S.calls_python(arr)
+        out = (
+            (df if python else df.where(~self.row_valid()))
             .select(*keys, S.column(arr).alias("__viol"))
             .select(*key_cols, F.explode_outer("__viol").alias("v"))
-            .select(*key_cols, "v.*")
         )
+        if python:
+            out = out.where(F.col("v").isNotNull())
+        return out.select(*key_cols, "v.*")
 
     def verdicts(self, df: DataFrame) -> DataFrame:
         """Per-partition verdict table ``(partition_id, check, pass,

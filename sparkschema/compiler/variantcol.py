@@ -1194,11 +1194,17 @@ def json_valid_auto(json_col: Column | str, schema: Any,
     kernel body short-circuits; rows both parsers reject stay invalid
     (err.parse.json) on either path.
 
-    The hybrid still attaches one ArrowEvalPython node to the plan (the
-    UDF is hoisted out of the CASE branch and sees a NULL per normal
-    row). Callers that know their documents are Spark-parsable — or
-    accept the documented duplicate-key divergence — pass
-    ``strict_spark_parse=True`` for a pure-Catalyst plan.
+    The hybrid attaches one ArrowEvalPython node to the plan, whatever
+    filter the caller puts on the verdict: the UDF is hoisted out of the
+    CASE branch and sees a NULL per normal row, and it is marked
+    nondeterministic, so Catalyst does not copy it into a pushed-down
+    filter. That mark has costs in join conditions, aggregate functions
+    and filter pushdown, listed under
+    :func:`~sparkschema.compiler.jsoncol.json_valid_column`; they hold
+    for this Column whenever it carries the kernel. Callers that know
+    their documents are Spark-parsable — or accept the documented
+    duplicate-key divergence — pass ``strict_spark_parse=True`` for a
+    pure-Catalyst plan, which has none of them.
 
     The path taken is logged at DEBUG on this module's logger (under
     ``sparkschema``), with the :class:`VariantUnsupported` reason when

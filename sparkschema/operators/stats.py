@@ -17,14 +17,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-            T.FloatType, T.DoubleType, T.DecimalType)
-
-
-def _is_numeric(dt: T.DataType) -> bool:
-    return isinstance(dt, _NUMERIC)
-
-
 def column_stats(df: DataFrame, columns: list[str] | None = None,
                  per_partition: bool = False,
                  hll_relative_sd: float = 0.02) -> DataFrame:
@@ -146,12 +138,3 @@ def numeric_quantiles(df: DataFrame, column: str, probs: list[float],
         F.struct(F.lit(p).alias("prob"), F.col(f"__q{i}").alias("quantile"))
         for i, p in enumerate(probs)])
     return agg.select(F.explode(arr).alias("s")).select("s.prob", "s.quantile")
-
-
-def null_fractions(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """One-row wide null-count/fraction summary (driver-friendly)."""
-    cols = columns or df.columns
-    aggs = [F.count(F.lit(1)).alias("rows")]
-    for c in cols:
-        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"null_{c}"))
-    return df.agg(*aggs)

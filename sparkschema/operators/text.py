@@ -50,16 +50,6 @@ def word_set(col: Column) -> Column:
     return F.array_distinct(F.split(normalized_text(col), " "))
 
 
-def lang_scores(col: Column) -> list[Column]:
-    """Per-language stopword hit counts (aliased ``score_<lang>``)."""
-    ws = word_set(col)
-    out = []
-    for lang, words in LANG_PROFILES.items():
-        profile = F.array(*[F.lit(w) for w in words])
-        out.append(F.size(F.array_intersect(ws, profile)).alias(f"score_{lang}"))
-    return out
-
-
 def lang_id(col: Column) -> Column:
     """Best-guess language code, 'und' when nothing matches.
 

@@ -92,8 +92,3 @@ def write_violations(violations: DataFrame, path: str,
     """Persist the full violations table (partitioned by keyword so
     downstream per-check reads prune files)."""
     violations.write.mode(mode).partitionBy("keyword").format(fmt).save(path)
-
-
-def write_verdicts(verdicts: DataFrame, path: str,
-                   fmt: str = "parquet", mode: str = "overwrite") -> None:
-    verdicts.write.mode(mode).format(fmt).save(path)

@@ -1,10 +1,11 @@
 """Storage interface.
 
 The design target is an Iceberg catalog table (BASELINE.json input_hint);
-this sandbox has no Iceberg jar, so the loader is format-pluggable behind
-one function. Iceberg adds snapshot-id lineage (recorded by the checkpoint
+without an Iceberg runtime the tables are parquet: a bucketed layout
+(:func:`ensure_bucketed_table`) stands in for Iceberg's ``bucket(key)``
+partitioning. Iceberg adds snapshot-id lineage (recorded by the checkpoint
 manifest, see sparkschema.streaming.checkpoint) and metadata-level
-partition pruning; the parquet fallback preserves the same logical plan.
+partition pruning.
 """
 
 from __future__ import annotations
@@ -12,24 +13,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-
-TPCH_TABLES = ("region", "nation", "customer", "supplier", "part",
-               "orders", "lineitem", "events", "documents", "embeddings")
-
-
-def load_table(spark: SparkSession, path_or_ident: str,
-               fmt: str | None = None) -> DataFrame:
-    """Load a table by parquet path or catalog identifier."""
-    if fmt == "iceberg":
-        # explicit iceberg NEVER falls back: reading the table directory
-        # as bare parquet would include files from overwritten/deleted
-        # snapshots and uncommitted writes — silently wrong data, not an
-        # error (review find r4)
-        return spark.read.format("iceberg").load(path_or_ident)
-    if fmt is None and "/" not in path_or_ident:
-        # bare identifier: catalog (iceberg) semantics, loud on failure
-        return spark.read.format("iceberg").load(path_or_ident)
-    return spark.read.parquet(path_or_ident)
 
 
 def _catalog_location_path(loc: str) -> str | None:
@@ -127,13 +110,3 @@ def table_snapshot_id(spark: SparkSession, ident: str) -> str | None:
         return str(row[0][0]) if row else None
     except Exception:
         return None
-
-
-def load_testdata(spark: SparkSession, sf_dir: str,
-                  names: tuple[str, ...] = TPCH_TABLES) -> dict[str, DataFrame]:
-    out = {}
-    for n in names:
-        p = os.path.join(sf_dir, f"{n}.parquet")
-        if os.path.exists(p):
-            out[n] = spark.read.parquet(p)
-    return out

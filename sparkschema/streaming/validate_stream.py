@@ -17,17 +17,6 @@ from pyspark.sql.streaming import StreamingQuery
 from sparkschema.compiler.table import CompiledTableSpec, compile_table_spec
 
 
-def streaming_violations(stream_df: DataFrame, spec: Any,
-                         key_cols: list[str], **compile_kwargs) -> DataFrame:
-    """Continuous violation stream from a streaming input (append mode).
-
-    The violation projection is stateless → works in append mode with no
-    watermark; aggregate verdicts belong in :func:`foreach_batch_validate`.
-    """
-    cts = compile_table_spec(spec, stream_df, key_cols=key_cols, **compile_kwargs)
-    return cts.violations(stream_df)
-
-
 def windowed_violation_counts(stream_df: DataFrame, spec: Any,
                               key_cols: list[str], ts_col: str,
                               window: str = "1 hour",

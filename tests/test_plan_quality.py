@@ -2,6 +2,7 @@
 (SURVEY.md §4). These test the *plan*, not the result — a regression that
 adds a shuffle or loses pushdown fails here even if answers stay right."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparkschema.compiler.table import compile_table_spec
@@ -22,6 +23,30 @@ SPEC = {
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _python_evals(df) -> list[list[str]]:
+    """The Python UDFs of ``df``'s executed plan, by name, one list per
+    ``ArrowEvalPython`` node: ``[["f"]]`` is one node that runs ``f``
+    once per row. A UDF that Catalyst copied into a pushed-down filter
+    shows as a second node."""
+    out = []
+
+    def walk(node):
+        name = node.nodeName()
+        if name == "ArrowEvalPython":
+            udfs = node.udfs()
+            out.append([udfs.apply(i).name() for i in range(udfs.size())])
+        if name.startswith("AdaptiveSparkPlan"):
+            walk(node.executedPlan())
+        if name.endswith("QueryStage"):     # a stage of an executed query
+            walk(node.plan())
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
 
 
 def test_violations_plan_has_no_exchange(spark, tmp_path):
@@ -104,7 +129,7 @@ def test_bucketed_roundtrip_join_has_no_exchange(spark, tmp_path):
     v = roundtrip_verdict(a, b)
     plan = _plan(v)
     assert "SortMergeJoin" in plan
-    assert plan.count("ArrowEvalPython") == 1
+    assert _python_evals(v) == [["_psnr_udf"]]
     # the only exchange allowed is the final single-row aggregation step
     join_part = plan.split("SortMergeJoin")[-1]
     assert "Exchange" not in join_part, join_part
@@ -246,7 +271,7 @@ def test_normalize_single_arrow_stage_no_exchange(spark):
     out = df.select(scrub_control_chars(
         nfc_normalize_col(F.col("text"))).alias("s"))
     plan = _plan(out)
-    assert plan.count("ArrowEvalPython") == 1   # one batched UDF stage
+    assert _python_evals(out) == [["_nfc"]]     # one batched UDF stage
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan        # never row-at-a-time
 
@@ -544,3 +569,152 @@ def test_violation_report_schema_pinned(spark):
                                key_cols=["image_id"])
     assert not empty.checks
     assert fields(empty.violations(imgs)) == report
+
+
+# -- each Python UDF runs once per row --------------------------------------
+# A filter on a UDF's result, pushed below the projection that computes
+# it, takes a copy of the call: the plan then holds two ArrowEvalPython
+# nodes, each validating the rows with a Python worker of its own per task.
+
+# a recursive $ref: VariantUnsupported, so json_valid_auto takes the kernel
+_RECURSIVE_SPEC = {
+    "definitions": {"node": {"type": "object", "properties": {
+        "child": {"$ref": "#/definitions/node"}}}},
+    "$ref": "#/definitions/node",
+}
+_JSON_DOCS = [(1, '{"id": "doc-00000001", "source": "crawl", "size": [1, 1, 3],'
+                  ' "objects": [{"label": "cat", "bbox": [0, 0, 1, 1]}]}'),
+              (2, '{"id": "x", "id": "y"}'), (3, "not json"), (4, None),
+              (5, '{"child": {"child": 3}}')]
+
+
+def _json_docs(spark):
+    return spark.createDataFrame(_JSON_DOCS, "doc_id long, doc string")
+
+
+def _bench_schema():
+    import copy
+
+    from sparkschema.spec.parser import parse_spec
+
+    return parse_spec(copy.deepcopy(BENCH_JSON_SCHEMA), "draft7").schema
+
+
+def test_json_report_runs_kernel_once(spark):
+    from sparkschema.compiler.jsoncol import validate_json_column
+
+    report = validate_json_column(_json_docs(spark), "doc", _bench_schema(),
+                                  key_cols=["doc_id"], dialect="draft7")
+    assert _python_evals(report) == [["violations_udf"]]
+    # a valid document has no row; every other one has at least one
+    assert {r.doc_id for r in report.collect()} == {2, 3, 5}
+
+
+def test_json_verdict_filter_runs_kernel_once(spark):
+    """The benchmark's verdict query runs the kernel in one node, under
+    the caller's filter on the verdict: the hybrid's duplicate-key
+    kernel, and the kernel of a spec that takes it whole
+    (``json_valid_column``)."""
+    from sparkschema.compiler.variantcol import (VariantUnsupported,
+                                                 json_valid_auto,
+                                                 variant_valid_sql)
+
+    with pytest.raises(VariantUnsupported):
+        variant_valid_sql(_RECURSIVE_SPEC)
+    df = _json_docs(spark)
+    for spec, invalid in ((_bench_schema(), [2, 3, 4, 5]),
+                          (_RECURSIVE_SPEC, [3, 4, 5])):
+        ok = json_valid_auto("doc", spec, dialect="draft7")
+        q = df.select("doc_id", ok.alias("ok")) \
+            .where(~F.coalesce(F.col("ok"), F.lit(False)))
+        assert _python_evals(q) == [["is_valid_udf"]]
+        assert sorted(r.doc_id for r in q.collect()) == invalid
+
+
+def test_json_valid_auto_column_contract(spark):
+    """Where the verdict Column may go, now that its kernel UDF is
+    nondeterministic (the costs listed under ``json_valid_column``):
+    ``select``, ``where`` and a ``groupBy`` key take it as before, with
+    one ArrowEvalPython node each, and so does an aggregate or a join
+    over the selected column. An aggregate function or a join condition
+    over the Column itself fails analysis; the pure-Catalyst
+    ``strict_spark_parse=True`` Column carries no kernel and takes both."""
+    from collections import Counter
+
+    from pyspark.errors import AnalysisException
+
+    from sparkschema.compiler.variantcol import json_valid_auto
+
+    df = _json_docs(spark)
+    keys = spark.createDataFrame([(i,) for i in range(1, 6)], "k long")
+    for spec, expect in (
+            (_bench_schema(), {1: True, 2: False, 3: False, 4: None, 5: False}),
+            (_RECURSIVE_SPEC, {1: True, 2: True, 3: False, 4: None, 5: False})):
+        ok = json_valid_auto("doc", spec, dialect="draft7")
+        valid = sorted(k for k, v in expect.items() if v)
+        sel = df.select("doc_id", ok.alias("ok"))
+        assert {r.doc_id: r.ok for r in sel.collect()} == expect
+        where = df.where(ok)
+        assert sorted(r.doc_id for r in where.collect()) == valid
+        grouped = df.groupBy(ok.alias("ok")).agg(F.count("*").alias("n"))
+        assert {r.ok: r.n for r in grouped.collect()} \
+            == Counter(expect.values())
+        counted = sel.groupBy().agg(F.count_if("ok").alias("n"))
+        assert counted.collect()[0].n == len(valid)
+        joined = sel.join(keys, (sel.doc_id == keys.k) & sel.ok)
+        assert sorted(r.k for r in joined.collect()) == valid
+        for q in (sel, where, grouped, counted, joined):
+            assert _python_evals(q) == [["is_valid_udf"]]
+        with pytest.raises(AnalysisException,
+                           match="NONDETERMINISTIC_EXPRESSION"):
+            df.groupBy().agg(F.count_if(ok)).collect()
+        with pytest.raises(AnalysisException,
+                           match="INVALID_NON_DETERMINISTIC_EXPRESSIONS"):
+            df.join(keys, (df.doc_id == keys.k) & ok).collect()
+    strict = json_valid_auto("doc", _bench_schema(), dialect="draft7",
+                             strict_spark_parse=True)
+    assert df.groupBy().agg(F.count_if(strict).alias("n")).collect()[0].n == 1
+    joined = df.join(keys, (df.doc_id == keys.k) & strict)
+    assert [r.k for r in joined.collect()] == [1]
+    assert _python_evals(joined) == []
+
+
+def test_table_violations_run_udf_checks_once(spark):
+    """A typed spec whose checks run Python UDFs (a ``pattern`` with no
+    Java form, a ``multipleOf`` finer than 18 decimal places) evaluates
+    each of them once per row; the report rows are unchanged."""
+    from decimal import Decimal
+
+    df = spark.createDataFrame(
+        [("x", 1e-19), ("y", 3e-19), (None, 1.5e-19), ("yx", None)],
+        "s string, d double")
+    spec = {"type": "object", "properties": {
+        "s": {"type": "string", "pattern": "(?<nmü>x)"},
+        "d": {"type": "number", "multipleOf": Decimal("1E-19")}}}
+    cts = compile_table_spec(spec, df, key_cols=["s"])
+    report = cts.violations(df)
+    assert _python_evals(report) == [["fn", "fn"]]
+    assert {(r.s, r.keyword) for r in report.collect()} \
+        == {("y", "pattern"), (None, "multipleOf")}
+    pattern_only = compile_table_spec(
+        {"properties": {"s": {"pattern": "(?<nmü>x)"}}}, df, key_cols=["s"])
+    assert _python_evals(pattern_only.violations(df)) == [["fn"]]
+
+
+def test_json_report_schema_pinned(spark):
+    """The JSON violation report's columns, types and nullability, as
+    recorded before the report was built with ``explode_outer``: the key
+    keeps its own type and nullability, every report field is a nullable
+    string."""
+    from sparkschema.compiler.jsoncol import validate_json_column
+
+    df = spark.range(3).select(F.col("id").alias("doc_id"),
+                               F.lit('{"a": 1}').alias("doc"))
+    report = validate_json_column(df, "doc", {"type": "object"},
+                                  key_cols=["doc_id"])
+    assert [(f.name, f.dataType.simpleString(), f.nullable)
+            for f in report.schema.fields] == \
+        [("doc_id", "bigint", False)] + [
+            (name, "string", True)
+            for name in ("keyword", "schema_path", "instance_path", "value",
+                         "msg", "errors", "resolution_scope", "referrer")]
